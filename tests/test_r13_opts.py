@@ -15,6 +15,8 @@ cutting jobs/passes; these tests pin the new regime switches:
 
 from __future__ import annotations
 
+import math
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -70,6 +72,29 @@ def test_quantile_small_regime_matches_digest(spark):
     # 'n_rows' alias must survive (ADVICE r12: prefix filtering dropped it)
     assert ex_s == ex_d
     assert ex_s["n_rows"] == 500
+
+
+def test_quantile_collect_regime_keeps_nan_like_percentile(spark):
+    # a float NaN is a value (Spark ranks it above every double), not a
+    # NULL: the collect regime must rank it, not fall back to the digest
+    df = spark.range(180).select(
+        F.when(F.col("id") % 7 == 0, F.lit(float("nan")))
+        .when(F.col("id") % 11 == 0, None)
+        .otherwise((F.col("id") * 37 % 101).cast("double"))
+        .alias("v")
+    )
+    ps = [0.0, 0.1, 0.25, 0.5, 0.75, 0.8, 0.85, 0.9, 1.0]
+    dbg = {}
+    got = exact_column_quantiles(df, ["v"], ps, debug_out=dbg)["v"]
+    assert dbg["regime"] == "collect"
+    want = df.agg(*[F.percentile("v", p).alias(f"p{j}") for j, p in enumerate(ps)]).first()
+    for j, p in enumerate(ps):
+        w = want[f"p{j}"]
+        if math.isnan(w):
+            assert math.isnan(got[j]), p
+        else:
+            assert got[j] == pytest.approx(w, rel=1e-12, abs=0), p
+    assert math.isnan(got[-1]) and not math.isnan(got[0])
 
 
 def test_quantile_extras_alias_not_dropped(spark):

@@ -109,9 +109,7 @@ def exact_percentiles(
         except Exception:
             est = cap + 1
         if est <= cap:
-            res = _quantiles_from_collect(df, [col], list(ps), None, None, None)
-            if res is not None:  # None: real NaN -> digest semantics below
-                return res[col]
+            return _quantiles_from_collect(df, [col], list(ps), None, None, None)[col]
 
     c = F.col(col)
     if n is None:
@@ -205,7 +203,7 @@ def _quantiles_from_collect(
     extra_head_aggs: Sequence | None,
     extras_out: dict | None,
     points_out: dict | None,
-) -> dict | None:
+) -> dict:
     """Small-regime exact quantiles: ONE bounded column-pruned collect of
     the cast-to-double values (+ per-column NULL flags so a float NaN is
     not conflated with SQL NULL by the Arrow transfer), sorted driver-side.
@@ -213,15 +211,16 @@ def _quantiles_from_collect(
     are the SAME Python-float arithmetic the band walk performs on the
     same doubles, so results are bit-identical to the digest path.
 
+    A float NaN is a value, not a NULL: it stays in the sort, where numpy
+    places it last — Spark's own ordering, which ranks NaN above every
+    double — so the order statistics, and a NaN wherever an interpolation
+    touches one, match ``F.percentile`` on the same column.
+
     ``extra_head_aggs`` still run as a Spark aggregation (their values —
     stddevs especially — must stay bit-identical to the historical head
     pass, which driver-side numpy could not guarantee); when the input is
     not already cached the extras job and the collect overlap (guide
-    §2.6). Returns None when any column carries a real NaN — the collect
-    cannot reproduce the digest path's NaN rank semantics, so the caller
-    falls back (never observed in the oracled corpora; the flags make it
-    loud instead of wrong)."""
-    import numpy as np
+    §2.6)."""
 
     from urban_traffic_data_lake_project_spark.functions.concurrency import (
         overlap_jobs,
@@ -247,18 +246,12 @@ def _quantiles_from_collect(
         pdf = run_collect()
         head_row = run_extras()
 
-    per_col: list = []
-    for i in range(len(cols)):
-        mask = ~pdf[f"__qz_{i}"].to_numpy(dtype=bool)
-        vals = pdf[f"__qx_{i}"].to_numpy(dtype="float64")[mask]
-        if np.isnan(vals).any():
-            return None  # real NaN: defer to the digest path's semantics
-        per_col.append(vals)
     if extras_out is not None and head_row is not None:
         _extras_from_row(head_row, 0, extras_out)
     out: dict[str, list] = {}
     for i, c in enumerate(cols):
-        vals = per_col[i]
+        mask = ~pdf[f"__qz_{i}"].to_numpy(dtype=bool)
+        vals = pdf[f"__qx_{i}"].to_numpy(dtype="float64")[mask]
         n = vals.size
         if n == 0:
             out[c] = [None for _ in ps]
@@ -348,14 +341,12 @@ def exact_column_quantiles(
         except Exception:  # un-estimable plan: assume big
             est = collect_cap + 1
         if est <= collect_cap:
-            res = _quantiles_from_collect(
+            if debug_out is not None:
+                debug_out["regime"] = "collect"
+                debug_out["est_bytes"] = est
+            return _quantiles_from_collect(
                 df, cols, ps, extra_head_aggs, extras_out, points_out
             )
-            if res is not None:
-                if debug_out is not None:
-                    debug_out["regime"] = "collect"
-                    debug_out["est_bytes"] = est
-                return res
 
     if debug_out is not None:
         debug_out["regime"] = "digest"

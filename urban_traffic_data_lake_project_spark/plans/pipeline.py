@@ -2,7 +2,7 @@
 (main.py:36-114) re-expressed as lazy DataFrame stages over parquet layers.
 
 Bronze (raw CSV, string-tolerant schema) -> Silver (typed, cleaned,
-partitioned parquet) -> Gold (scenario simulation, bootstrap CIs, factor
+compact parquet) -> Gold (scenario simulation, bootstrap CIs, factor
 scores + loadings).
 
 Differences from the reference, by design (SURVEY.md §7):
@@ -10,8 +10,12 @@ Differences from the reference, by design (SURVEY.md §7):
   directly; "dual-write" is just two .write calls if ever needed.
 - Every stage is a pure DataFrame -> DataFrame function; only sinks
   trigger jobs; Catalyst plans each stage end-to-end.
-- Silver writes are partitioned by the day key so downstream day-key
-  merges and date-range queries get partition pruning at scale.
+- Silver is one compact parquet table per source, as in the reference
+  (clean_traffic.py:133-146): no reader prunes on a day partition (the
+  merge reads every row), and partitioning by day writes one small file
+  per day. The write is ``rebalance``-hinted, so AQE sizes its files from
+  the observed output: one file at fixture sizes, files near the advisory
+  partition size at scale, never a single task.
 - The measure column for the scenario simulation is explicit
   (vehicle_count), not the reference's first-numeric-column fallback
   (M4 quirk, monte_carlo.py:192-195).
@@ -24,10 +28,11 @@ drop -> IQR clip -> median fill.
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator
+from contextlib import contextmanager
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from urban_traffic_data_lake_project_spark.operators import bootstrap as B
 from urban_traffic_data_lake_project_spark.operators import cleaning as C
@@ -58,6 +63,7 @@ class LayerPaths:
         return os.path.join(self.base, "gold")
 
 
+@contextmanager
 def clean_table(
     df: DataFrame,
     key: str,
@@ -65,18 +71,24 @@ def clean_table(
     categoricals: list[str],
     numerics: list[str],
     mixed_type_cols: list[str] = (),
-) -> DataFrame:
-    """The reference cleaning kernel in reference order."""
-    out = C.dedup_by_key(df, keys=[key], tiebreak=[ts_col, *numerics])
-    # persist: the fitted-statistics passes below each trigger an action
-    out = C.parse_timestamps(out, ts_col).persist()
-    out = C.mode_fill(out, categoricals)
-    if mixed_type_cols:
-        out = C.coerce_numeric(out, list(mixed_type_cols))
-    out = C.null_fraction_drop(out, numerics, threshold=0.5)
-    out = C.iqr_clip(out, numerics)
-    out = C.median_fill(out, numerics)
-    return out
+) -> Iterator[DataFrame]:
+    """The reference cleaning kernel in reference order, as a context.
+
+    The parsed frame is persisted because the fitted-statistics passes each
+    trigger an action over it; the cleaned plan still reads that cache, so
+    consume it inside the block. The cache is released on exit."""
+    parsed = C.parse_timestamps(
+        C.dedup_by_key(df, keys=[key], tiebreak=[ts_col, *numerics]), ts_col
+    ).persist()
+    try:
+        out = C.mode_fill(parsed, categoricals)
+        if mixed_type_cols:
+            out = C.coerce_numeric(out, list(mixed_type_cols))
+        out = C.null_fraction_drop(out, numerics, threshold=0.5)
+        out = C.iqr_clip(out, numerics)
+        yield C.median_fill(out, numerics)
+    finally:
+        parsed.unpersist()
 
 
 def run_bronze(spark: SparkSession, paths: LayerPaths, n_rows: int = 5000, seed: int = 42) -> None:
@@ -92,33 +104,27 @@ def run_bronze(spark: SparkSession, paths: LayerPaths, n_rows: int = 5000, seed:
 
 
 def run_silver(spark: SparkSession, paths: LayerPaths) -> None:
-    """Clean both sources and write typed, day-partitioned silver parquet."""
+    """Clean both sources and write typed, compact silver parquet."""
     traffic = spark.read.option("header", True).option("inferSchema", True).csv(
         os.path.join(paths.bronze, "traffic_raw")
     )
     weather = spark.read.option("header", True).option("inferSchema", True).csv(
         os.path.join(paths.bronze, "weather_raw")
     )
-    traffic_clean = clean_table(
+    with clean_table(
         traffic, "traffic_id", "date_time", TRAFFIC_CATEGORICALS, TRAFFIC_NUMERICS
-    )
-    weather_clean = clean_table(
+    ) as traffic_clean, clean_table(
         weather, "weather_id", "date_time", WEATHER_CATEGORICALS, WEATHER_NUMERICS,
         mixed_type_cols=["visibility_m"],
-    )
-    for name, df in (("traffic_clean", traffic_clean), ("weather_clean", weather_clean)):
-        (
-            df.withColumn("day", F.to_date("date_time"))
-            .write.mode("overwrite")
-            .partitionBy("day")
-            .parquet(os.path.join(paths.silver, name))
-        )
+    ) as weather_clean:
+        for name, df in (("traffic_clean", traffic_clean), ("weather_clean", weather_clean)):
+            df.hint("rebalance").write.mode("overwrite").parquet(os.path.join(paths.silver, name))
 
 
 def run_merge(spark: SparkSession, paths: LayerPaths) -> None:
     """The reference merge stage: left join on (city, day) with suffixes."""
-    traffic = spark.read.parquet(os.path.join(paths.silver, "traffic_clean")).drop("day")
-    weather = spark.read.parquet(os.path.join(paths.silver, "weather_clean")).drop("day")
+    traffic = spark.read.parquet(os.path.join(paths.silver, "traffic_clean"))
+    weather = spark.read.parquet(os.path.join(paths.silver, "weather_clean"))
     merged = M.day_key_merge(
         traffic, weather, left_ts="date_time", right_ts="date_time",
         extra_keys=["city"], how="left", lsuffix="_traffic", rsuffix="_weather",
