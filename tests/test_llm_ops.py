@@ -503,17 +503,16 @@ def test_kmeans_centroids_tighten_buckets(spark, sf_dir):
     import numpy as np
 
     emb = load_table(spark, sf_dir, "embeddings")
+    V = np.array(
+        [r["embedding"] for r in emb.select("embedding").collect()], dtype=np.float64
+    )
+    norms = np.sqrt((V * V).sum(axis=1))
 
     def mean_assigned_sim(entries):
-        v = emb.select(S._as_double(F.col("embedding")).alias("__v")).withColumn(
-            "__n", S._norm(F.col("__v"))
-        )
-        sims = [
-            S._dot_literal(F.col("__v"), e["vec"]) / (F.col("__n") * float(e["cnorm"]))
-            for e in entries
-        ]
-        best = F.greatest(*sims) if len(sims) > 1 else sims[0]
-        return v.agg(F.avg(best)).first()[0]
+        C = np.array([e["vec"] for e in entries], dtype=np.float64)
+        cnorms = np.array([e["cnorm"] for e in entries], dtype=np.float64)
+        sims = (V @ C.T) / (norms[:, None] * cnorms[None, :])
+        return float(sims.max(axis=1).mean())
 
     seed = [
         {"cid": i, "vec": [float(x) for x in r["vec"]], "cnorm": float(r["cnorm"])}

@@ -25,9 +25,9 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-# every registry query whose plan carries dim-unrolled dots, chunked
-# folds, ADC LUT structs, or the Arrow scorer — the shapes that have
-# historically tripped the 64 KB method limit
+# every registry query whose plan carries dim-unrolled dots, ADC LUT
+# lookups, or the Arrow assignment / encode / scorer stages — the
+# shapes that have historically tripped the 64 KB method limit
 FAMILY = [
     "sim_cosine_topk",
     "sim_hard_negatives",

@@ -375,9 +375,8 @@ def main() -> None:
     # 5b. the k-means-TRAINED IVF path at 1M vectors: 2 spherical rounds
     # (each one grouped vector-mean over the chunk-assigned corpus) then
     # the same zero-corpus-shuffle assignment + probe join. Exercises the
-    # codegen-chunked with_nearest_centroids at k=32 x dim=32 (1056
-    # unrolled terms — the regime that silently fell back to interpreted
-    # execution before the round-6 stage-fold fix).
+    # Arrow with_nearest_centroids at k=32 x dim=32 inside every Lloyd
+    # round.
     def ivf_trained():
         from urban_traffic_data_lake_project_spark.operators.similarity import (
             cosine_topk_ivf,
@@ -392,9 +391,8 @@ def main() -> None:
     run_case("ivf_topk_trained", n5, ivf_trained)
 
     # 5c. PQ encode + ADC top-k at 1M x 64-dim vectors (registry shape:
-    # m=8 subspaces, k=16 codes). Encode is m*k*sub = 1024 unrolled terms
-    # — over janino's limit in one stage, chunked to 2 subspaces/stage by
-    # pq_encode; ADC scores ride the same chunked-fold shape.
+    # m=8 subspaces, k=16 codes). Encode is one Arrow stage of m*k*sub =
+    # 1024 squared-gap sweeps per batch; ADC scores are m LUT lookups.
     n5c = int(1_000_000 * s)
 
     def pq_adc():

@@ -36,9 +36,7 @@ def _dot_sql(a: str, b: str, dim: int) -> str:
     string parsed by a single ``F.expr`` call. The Column-operator form
     cost ~3 py4j gateway round trips per term, which made PLAN BUILD (not
     execution) dominate ``sim_cosine_topk`` at dim=64 (x4 invocations per
-    score expression): +160% on the sf0.1 bench between r5 and r6 — the
-    same failure mode `_dot_literal_sql` already fixed for the
-    literal-vector unrolls."""
+    score expression): +160% on the sf0.1 bench between r5 and r6."""
     return "0.0D + " + " + ".join(
         f"(element_at({a}, {i}) * element_at({b}, {i}))" for i in range(1, dim + 1)
     )
@@ -729,9 +727,9 @@ def cosine_topk_ivf_coarse_rerank(
     else:
         entries = centroid_entries(corpus, id_col, vec_col, n_centroids)
 
-    # stage 1: identical probe shape to cosine_topk_ivf (assignment
-    # explodes through a Generate — the pushdown barrier; probes are a
-    # broadcast equi-join)
+    # stage 1: identical probe shape to cosine_topk_ivf (the Arrow
+    # assignment stage is the pushdown barrier; probes are a broadcast
+    # equi-join)
     c = spread_to_parallelism(corpus).select(
         F.col(id_col).alias("neighbor_id"), _as_double(F.col(vec_col)).alias("__cv")
     ).withColumn("__cn", _norm(F.col("__cv")))
@@ -1068,11 +1066,11 @@ def kmeans_centroids(
 ) -> list:
     """Spherical k-means IVF training — the production upgrade over the
     deterministic first-k seed: ``iters`` Lloyd rounds of (assign every
-    vector to its max-cosine centroid via the per-row literal expression —
-    zero corpus shuffle) then (recompute per-cluster element-wise means
-    as ONE wide grouped aggregate: dim avg() columns over the assigned
-    frame — map-side partials, one shuffle of k rows x dim columns, no
-    posexplode row blow-up). Each round collects only k*dim doubles to
+    vector to its max-cosine centroid in the ``with_nearest_centroids``
+    Arrow stage — zero corpus shuffle) then (recompute per-cluster
+    element-wise means as ONE wide grouped aggregate: dim avg() columns
+    over the assigned frame — map-side partials, one shuffle of k rows x
+    dim columns, no posexplode row blow-up). Each round collects only k*dim doubles to
     the driver.
 
     TRAINING SAMPLE (r7 verdict item 4): when the corpus exceeds
@@ -1197,82 +1195,6 @@ def kmeans_centroids(
     return entries
 
 
-def _dot_literal(v: Column, vals) -> Column:
-    """Dot product against a PYTHON-side literal vector, UNROLLED into
-    flat left-associated arithmetic (x0 + x1 + ...). Unlike
-    ``aggregate(zip_with(...))`` — an INTERPRETED higher-order function —
-    this stays inside whole-stage codegen: measured 5.8x faster on the
-    1M-vector centroid-assignment stress case. The left-assoc order is
-    bit-identical to the fold (0.0 + x == x), so oracle parity holds.
-
-    Callers MUST keep the total unrolled terms per projection stage under
-    ``_MAX_STAGE_TERMS`` (see ``with_nearest_centroids``): janino hard-fails
-    methods over 64 KB of bytecode and Spark silently falls back to
-    interpreted execution for the whole stage."""
-    expr = F.element_at(v, 1) * float(vals[0])
-    for i in range(1, len(vals)):
-        expr = expr + F.element_at(v, i + 1) * float(vals[i])
-    return expr
-
-
-# Budget of unrolled multiply-add terms per projection STAGE. One stage's
-# expressions compile into one whole-stage-codegen method, and per-operator
-# consume splitting never engages for project chains on Spark 4.1, so the
-# generated processNext() carries every term. Measured with
-# ``spark.sql.codegen.fallback=false`` + debug.codegenString on the IVF
-# assignment shape (r7): 1024 terms -> 1.09 MB source, compile FAILURE
-# even with the stage isolated by _codegen_cut barriers (r6's "1024
-# compiles clean" claim rested on an fd-capture test that never saw the
-# JVM's stderr — the JVM inherits the ORIGINAL fd 2 at launch, so an
-# in-process dup2 captures nothing); 384 terms -> 52 KB bytecode (80% of
-# janino's 64 KB method limit, and the denser pq_encode named_struct
-# shape still failed); 256 terms -> 34 KB everywhere, ~50% headroom.
-_MAX_STAGE_TERMS = 256
-
-# Which with_nearest_centroids / pq_encode implementation to use by
-# default: "arrow" (vectorized mapInPandas, bit-identical accumulation
-# order, nothing to JIT -> immune to the 64 KB cliff and ~2x faster at
-# 1M vectors than the compiled chunk folds, whose interpreted fold
-# islands each re-copy the carried vector per row) or "expr" (the
-# chunked literal-unroll Catalyst path, kept for pure-SQL plan contexts
-# and as the cross-check in tests).
-_NEAREST_IMPL = "arrow"
-
-
-def _codegen_cut(c: Column, kind: str) -> Column:
-    """Identity wrapper that ENDS the whole-stage-codegen region at the
-    projection it appears in. Spark fuses every consecutive
-    codegen-supporting node into ONE generated ``processNext()`` method,
-    and per-operator consume splitting never engages for project chains
-    on Spark 4.1 — so a budget-compliant 1024-term unrolled projection
-    still blows janino's 64 KB limit the moment it FUSES with a
-    downstream explode + broadcast join + scoring projection (r6: 17
-    silent ``Failed to compile`` -> interpreted fallbacks across the
-    IVF/PQ family; reproduced with ``spark.sql.codegen.fallback=false``).
-    Routing the column through a higher-order function (``array_sort`` /
-    ``transform``, both CodegenFallback) makes this ProjectExec
-    interpreted, cutting the region; referencing the input TWICE keeps
-    CollapseProject from inlining the producing expression into the
-    island (an inlined unroll would run interpreted per row). The guard
-    branches both evaluate to the input, and the islands are identities
-    (sorting a 1-element array; an identity lambda), so values — and
-    oracle hashes — are bit-unchanged.
-
-    kind: 'scalar' (double), 'struct' (the (neg_sim, cid) comparable),
-    'array' (order-preserving)."""
-    if kind == "scalar":
-        return F.when(c < 0, c).otherwise(
-            F.element_at(F.array_sort(F.array(c)), 1)
-        )
-    if kind == "struct":
-        return F.when(c.getField("cid") < -1, c).otherwise(
-            F.element_at(F.array_sort(F.array(c)), 1)
-        )
-    return F.when(F.size(c) < 0, F.slice(c, 1, 1)).otherwise(
-        F.transform(c, lambda x: x)
-    )
-
-
 def _f(x) -> str:
     """A DOUBLE literal as SQL text. repr() is the shortest round-trip
     representation and Spark's parser reads it back to the identical
@@ -1282,27 +1204,6 @@ def _f(x) -> str:
     return f"({float(x)!r}D)"
 
 
-def _dot_literal_sql(col: str, vals) -> str:
-    """SQL text of ``_dot_literal`` — same left-assoc term order. Built
-    as ONE string parsed by a single F.expr call: constructing the same
-    tree through py4j Column operators costs ~3 gateway round trips per
-    term, which made PLAN BUILD (not execution) dominate the ANN queries
-    (~9 s per build at k x dim = 1024; measured in BENCH_r06 prep)."""
-    return " + ".join(
-        f"(element_at({col}, {i + 1}) * {_f(v)})" for i, v in enumerate(vals)
-    )
-
-
-def _centroid_struct_sql(vec_name: str, norm_name: str, e: dict) -> str:
-    """SQL text of the (neg_sim, cid) comparable struct for one centroid
-    — smaller is nearer; ties break to the smaller cid."""
-    dot = _dot_literal_sql(vec_name, e["vec"])
-    return (
-        f"named_struct('neg_sim', -(({dot}) / ({norm_name} * {_f(e['cnorm'])})), "
-        f"'cid', {int(e['cid'])})"
-    )
-
-
 def with_nearest_centroids(
     df: DataFrame,
     vec_col: str,
@@ -1310,7 +1211,6 @@ def with_nearest_centroids(
     entries: list,
     top: int,
     out_col: str,
-    impl: str | None = None,
 ) -> DataFrame:
     """Adds ``out_col`` = array of the ``top`` nearest centroid ids (by
     cosine, ties to the smaller cid) for every row — a pure per-row
@@ -1318,36 +1218,14 @@ def with_nearest_centroids(
     zero shuffles, so at 100 TB the corpus is scanned once and never
     repartitioned for assignment.
 
-    Two implementations, value-identical (asserted by a pytest that
-    collects both and compares bit-exact):
-
-    - ``arrow`` (default): one vectorized ``mapInPandas`` stage. Each
-      Arrow batch computes all k dots as ``acc = acc + V[:, i] * c_i``
-      column sweeps — float64 elementwise, SAME left-assoc order and
-      seed as the SQL unroll, so every double is bit-identical and the
-      DuckDB oracle replay still hash-matches. Nothing is code-generated,
-      so there is no janino 64 KB cliff at any k x dim (the failure mode
-      that silently degraded the expr path in r5/r6), and at 1M vectors
-      it beats the compiled chunk folds ~2x (no per-stage interpreted
-      row copies). The Python stage is also a pushdown barrier, which is
-      what the downstream join needs anyway (see cosine_topk_ivf).
-    - ``expr``: the chunked literal-unroll Catalyst projection chain
-      (``_nearest_centroids_expr``) — kept for pure-SQL plan contexts
-      and as the cross-check.
+    One vectorized ``mapInPandas`` stage. Each Arrow batch computes all
+    k dots as ``acc = acc + V[:, i] * c_i`` column sweeps — float64
+    elementwise, seeded by the first term, left-assoc adds — one fixed
+    order, so the DuckDB oracle replay hash-matches. Nothing is
+    code-generated, so there is no janino 64 KB cliff at any k x dim.
+    The Python stage is also a pushdown barrier, which is what the
+    downstream join needs anyway (see cosine_topk_ivf).
     """
-    if (impl or _NEAREST_IMPL) == "arrow":
-        return _nearest_centroids_arrow(df, vec_col, norm_col, entries, top, out_col)
-    return _nearest_centroids_expr(df, vec_col, norm_col, entries, top, out_col)
-
-
-def _nearest_centroids_arrow(
-    df: DataFrame,
-    vec_col: str,
-    norm_col: str,
-    entries: list,
-    top: int,
-    out_col: str,
-) -> DataFrame:
     import numpy as np
 
     from pyspark.sql.types import (
@@ -1360,8 +1238,7 @@ def _nearest_centroids_arrow(
 
     # centroid ids inherit the corpus id type (they are seeded from
     # corpus rows): ints keep the historical int32 path bit-for-bit;
-    # string ids sort/tie-break lexicographically — the same order the
-    # expr twin's least((neg_sim, cid)) struct comparison applies.
+    # string ids sort/tie-break lexicographically
     int_cids = all(isinstance(e["cid"], (int, np.integer)) for e in entries)
     elem_type = IntegerType() if int_cids else StringType()
     if int_cids:
@@ -1389,9 +1266,7 @@ def _nearest_centroids_arrow(
             neg = np.empty((n, k), dtype=np.float64)
             for j in range(k):
                 cv = cvecs[j]
-                # same fold as _dot_literal: seeded by the FIRST term
-                # (not 0.0), left-assoc adds — elementwise float64, so
-                # each row's double equals the SQL unroll bit-for-bit
+                # seeded by the FIRST term (not 0.0), left-assoc adds
                 acc = V[:, 0] * cv[0]
                 for i in range(1, dim):
                     acc = acc + V[:, i] * cv[i]
@@ -1399,7 +1274,6 @@ def _nearest_centroids_arrow(
             if top == 1:
                 # argmin returns the FIRST minimum; columns are in
                 # ascending-cid order, so ties break to the smaller cid
-                # exactly like the SQL least((neg_sim, cid)) struct
                 picks = cids[np.argmin(neg, axis=1)][:, None]
             else:
                 order = np.argsort(neg, axis=1, kind="stable")[:, :top]
@@ -1407,124 +1281,6 @@ def _nearest_centroids_arrow(
             yield pdf.assign(**{out_col: list(picks)})
 
     return df.mapInPandas(assign, schema)
-
-
-def _nearest_centroids_expr(
-    df: DataFrame,
-    vec_col: str,
-    norm_col: str,
-    entries: list,
-    top: int,
-    out_col: str,
-) -> DataFrame:
-    """Adds ``out_col`` = array of the ``top`` nearest centroid ids (by
-    cosine, ties to the smaller cid) for every row — still a pure per-row
-    computation over the driver-side ``entries`` list (zero joins, zero
-    shuffles), but CHUNKED across projection stages so whole-stage codegen
-    actually compiles at any k x dim:
-
-    - Each chunk evaluates at most ``_MAX_STAGE_TERMS`` unrolled dot terms
-      (a flat ``least`` / ``array_sort`` over <= chunk structs).
-    - Chunks fold into a running best through an ``array_sort`` /
-      sliced-sorted-concat step. Two deliberate properties of the fold:
-      (1) it references the accumulator column MORE than once, so
-      Catalyst's CollapseProject keeps the stage boundary instead of
-      inlining everything back into one giant expression; (2) it routes
-      through a higher-order function (``array_sort``), whose
-      CodegenFallback status makes CollapseCodegenStages cut the
-      whole-stage-codegen region at each fold — so no single generated
-      method ever accumulates all k*dim terms. The r5 single-stage plan
-      hit janino's 64 KB method limit at ~1024 terms ("Code grows beyond
-      64 KB") and silently degraded; per-operator consume splitting
-      (spark.sql.codegen.splitConsumeFuncByOperator) measurably never
-      engages for project chains on Spark 4.1, so stage cutting is the
-      only reliable way to bound method size.
-    - Never fold with nested ``F.least(least(...), ...)``: nested Least
-      codegen MISCOMPILES (measured wrong argmins on a 20k-row probe);
-      the sort-based fold is both correct and stage-cuttable.
-
-    Semantics are bit-identical to the old single-expression form: same
-    left-assoc dots, same (neg_sim, cid) ordering, and a streaming top-n
-    never drops a global top-n element.
-    """
-    dim = len(entries[0]["vec"])
-    chunk = max(1, _MAX_STAGE_TERMS // dim)
-    carry = list(df.columns)
-    acc, cand = "__nc_acc", "__nc_cand"
-    # ENTRY cut: without it the first chunk's unrolled terms fuse with
-    # whatever codegen projections feed this operator (e.g. ivfpq's
-    # dim-unrolled norm: 128 + 1024 terms in one generated method).
-    cur = df.select(
-        *[
-            _codegen_cut(F.col(c), "scalar").alias(c) if c == norm_col else F.col(c)
-            for c in carry
-        ]
-    )
-    first = True
-    for base in range(0, len(entries), chunk):
-        part = entries[base : base + chunk]
-        # chunk expressions are built as ONE SQL string per chunk (a
-        # single parse) — the py4j-Column form cost ~3 gateway round
-        # trips per unrolled term and made plan BUILD dominate the ANN
-        # queries (~9 s/build at 1024 terms); semantics are identical
-        ss = [_centroid_struct_sql(vec_col, norm_col, e) for e in part]
-        if top == 1:
-            cexpr = F.expr(ss[0] if len(ss) == 1 else f"least({', '.join(ss)})")
-        else:
-            cexpr = F.expr(
-                f"slice(array_sort(array({', '.join(ss)})), 1, {int(top)})"
-            )
-        if first:
-            cur = cur.select(*carry, cexpr.alias(acc))
-            first = False
-        else:
-            cur = cur.select(*carry, acc, cexpr.alias(cand))
-            # BOTH acc and cand must be referenced MORE than once in the
-            # fold: a single-referenced alias gets inlined by
-            # CollapseProject straight into the array_sort island — whose
-            # CodegenFallback eval then runs the inlined chunk's ENTIRE
-            # unrolled dot INTERPRETED per row (measured 21 s vs ~2 s for
-            # the 1M x dim64 x k32 assignment). The dead branches are
-            # unreachable AND must not be statically decidable: an
-            # isnull() guard on these non-nullable structs is
-            # constant-folded to false by SimplifyConditionals, which
-            # deletes the extra references and re-merges everything into
-            # one interpreted island. cid is a non-negative literal per
-            # centroid, but behind least()/GetStructField the optimizer
-            # cannot prove it, so the guard survives.
-            if top == 1:
-                fold = F.when(
-                    (F.col(acc).getField("cid") < -1)
-                    | (F.col(cand).getField("cid") < -1),
-                    F.col(acc),
-                ).otherwise(
-                    F.element_at(
-                        F.array_sort(F.array(F.col(acc), F.col(cand))), 1
-                    )
-                )
-            else:
-                merged = F.slice(
-                    F.array_sort(F.concat(F.col(acc), F.col(cand))), 1, top
-                )
-                fold = F.when(
-                    (F.size(F.col(acc)) < 0) | (F.size(F.col(cand)) < 0),
-                    F.slice(F.col(acc), 1, top),
-                ).otherwise(merged)
-            cur = cur.select(*carry, fold.alias(acc))
-    if len(entries) <= chunk:
-        # Single chunk -> the loop ended on a pure-codegen projection
-        # (no fold island); EXIT cut so the 1024-term stage doesn't fuse
-        # with the caller's explode + join + scoring. Multi-chunk paths
-        # already end on a fold island, which is itself the cut.
-        cur = cur.select(
-            *carry, _codegen_cut(F.col(acc), "struct" if top == 1 else "array").alias(acc)
-        )
-    out = (
-        F.array(F.col(acc).getField("cid"))
-        if top == 1
-        else F.col(acc).getField("cid")
-    )
-    return cur.select(*carry, out.alias(out_col))
 
 
 def _probes_table_from_rows(spark, q_rows: list, probed_schema) -> DataFrame:
@@ -1570,8 +1326,8 @@ def cosine_topk_ivf(
     ``n_centroids`` smallest-id corpus vectors, optionally refined by
     ``train_iters`` spherical k-means rounds (``kmeans_centroids``), which
     tightens buckets and recall at the same probe budget. Centroid
-    assignment is a per-row expression against the literal centroid array
-    (zero shuffle of the corpus); each query probes only its ``nprobe``
+    assignment is a per-row Arrow stage against the driver-side centroid
+    list (zero shuffle of the corpus); each query probes only its ``nprobe``
     nearest centroid buckets via a broadcast join. At 100 TB the corpus is
     scanned once and never re-partitioned for assignment."""
     q = queries.select(
@@ -1611,14 +1367,11 @@ def cosine_topk_ivf(
     c = spread_to_parallelism(corpus).select(
         F.col(id_col).alias("neighbor_id"), _as_double(F.col(vec_col)).alias("__cv")
     ).withColumn("__cn", _norm(F.col("__cv")))
-    # centroid_id is derived by EXPLODING the 1-element assignment array,
-    # not element_at: the Generate is a predicate-pushdown barrier. The
-    # join below makes InferFiltersFromConstraints add
-    # isnotnull(centroid_id) to this side, and pushing that filter through
-    # the chunked fold projections substitutes the full producing
-    # expression 3x per stage — measured an 11.6 MB Filter node and
-    # executor OOM at 1M vectors with the element_at form. Above a
-    # Generate the filter stays a cheap reference to the generator output.
+    # centroid_id is derived by exploding the 1-element assignment array.
+    # The join below makes InferFiltersFromConstraints add
+    # isnotnull(centroid_id) to this side; the Arrow assignment stage is a
+    # predicate-pushdown barrier, so that filter stays a cheap reference
+    # above it and never substitutes into the assignment itself.
     assigned = with_nearest_centroids(c, "__cv", "__cn", entries, 1, "__cids").select(
         "neighbor_id",
         "__cv",
@@ -1711,56 +1464,19 @@ def pq_codebooks(
     return [[v[j * sub : (j + 1) * sub] for v in vecs] for j in range(m)]
 
 
-def _sub_dist(vec: Column, offset: int, centroid: list) -> Column:
-    """Squared L2 distance between ``vec[offset:offset+len(centroid)]``
-    and a literal centroid, as a LEFT-ASSOCIATIVE chained sum — the same
-    evaluation order the oracle's sequential list_sum uses, so both
-    engines produce bit-identical doubles."""
-    total = None
-    for i, c in enumerate(centroid):
-        term = (vec[offset + i] - F.lit(float(c))) ** 2
-        total = term if total is None else total + term
-    return total
-
-
-def _sub_dist_sql(col: str, offset: int, centroid: list) -> str:
-    """SQL text of ``_sub_dist`` — same 0-based indexing, same POWER
-    form as Column.__pow__, same left-assoc chained sum; one parse
-    instead of per-term py4j calls."""
-    return " + ".join(
-        f"power(({col}[{offset + i}] - {_f(c)}), 2)"
-        for i, c in enumerate(centroid)
-    )
-
-
 def pq_encode(
     df: DataFrame,
     id_col: str,
     vec_col: str,
     codebooks: list,
     codes_col: str = "codes",
-    impl: str | None = None,
 ) -> DataFrame:
     """Attach a PQ code array (one int per subspace) to every row — the
     per-subspace nearest-centroid argmin, NO join, NO shuffle: the whole
-    encode rides the corpus scan. Implementations (value-identical,
-    pytest-asserted): ``arrow`` (default) — one vectorized mapInPandas
-    stage with the same left-assoc squared-distance fold as the SQL text,
-    immune to the janino 64 KB method limit at any m x k x sub; ``expr``
-    — the chunked literal-unroll projection chain (``_pq_encode_expr``),
-    kept for pure-SQL contexts and as the cross-check."""
-    if (impl or _NEAREST_IMPL) == "arrow":
-        return _pq_encode_arrow(df, id_col, vec_col, codebooks, codes_col)
-    return _pq_encode_expr(df, id_col, vec_col, codebooks, codes_col)
-
-
-def _pq_encode_arrow(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    codebooks: list,
-    codes_col: str = "codes",
-) -> DataFrame:
+    encode rides the corpus scan. One vectorized mapInPandas stage with a
+    left-assoc squared-distance fold per (subspace, centroid); nothing is
+    code-generated, so there is no janino 64 KB limit at any m x k x sub.
+    Ties go to the smaller code."""
     import numpy as np
 
     from pyspark.sql.types import ArrayType, IntegerType, StructField, StructType
@@ -1783,93 +1499,19 @@ def _pq_encode_arrow(
                 base = j * sub
                 dmat = np.empty((n, len(cbs[j])), dtype=np.float64)
                 for c, cent in enumerate(cbs[j]):
-                    # same fold as _sub_dist: seeded by the first term,
-                    # left-assoc adds, (x - c)^2 per element — float64
-                    # elementwise, bit-identical to the SQL power sum
+                    # seeded by the first term, left-assoc adds, (x - c)^2
+                    # per element, float64 elementwise
                     t = V[:, base] - cent[0]
                     acc = t * t
                     for i in range(1, sub):
                         t = V[:, base + i] - cent[i]
                         acc = acc + t * t
                     dmat[:, c] = acc
-                # first minimum = smaller code on ties, like the SQL
-                # array_min((dist, code)) struct
+                # first minimum = smaller code on ties
                 codes[:, j] = np.argmin(dmat, axis=1)
             yield pdf.assign(**{codes_col: list(codes)})
 
     return df.mapInPandas(encode, schema)
-
-
-def _pq_encode_expr(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    codebooks: list,
-    codes_col: str = "codes",
-) -> DataFrame:
-    """Attach a PQ code array (one int per subspace) to every row. The
-    nearest-centroid argmin per subspace is an unrolled per-row literal
-    expression (array_min over (dist, c) structs — ties to the smaller
-    code): NO join, NO shuffle, the whole encode rides in the corpus
-    scan's projection exactly like ``with_nearest_centroids`` does for IVF.
-
-    Codegen-safe chunking: subspaces are grouped so each projection stage
-    stays under ``_MAX_STAGE_TERMS`` unrolled terms (one subspace costs
-    k*sub terms), and the growing code array is folded across stages with
-    a multi-reference ``when`` so CollapseProject keeps the boundaries —
-    the r5 single-stage form (all m*k*sub terms in one method) blew
-    janino's 64 KB limit and silently ran interpreted."""
-    m = len(codebooks)
-    sub = len(codebooks[0][0])
-    terms_per_sub = max(1, len(codebooks[0]) * sub)
-    group = max(1, _MAX_STAGE_TERMS // terms_per_sub)
-    carry = list(df.columns)
-    out = df.withColumn("__v", _as_double(F.col(vec_col)))
-    acc = "__pq_acc"
-
-    def code_expr_sql(j: int) -> str:
-        # one SQL string per subspace (single parse, not k*sub py4j
-        # round trips — see _dot_literal_sql); same left-assoc power sum
-        # as _sub_dist, same struct-min tiebreak to the smaller code
-        cands = ", ".join(
-            "named_struct('d', "
-            + _sub_dist_sql("__v", j * sub, codebooks[j][c])
-            + f", 'c', {c})"
-            for c in range(len(codebooks[j]))
-        )
-        return f"array_min(array({cands})).c"
-
-    cand = "__pq_cand"
-    cur = out
-    first = True
-    for base in range(0, m, group):
-        chunk_arr = F.expr(
-            "array("
-            + ", ".join(code_expr_sql(j) for j in range(base, min(base + group, m)))
-            + ")"
-        )
-        if first:
-            cur = cur.select(*carry, "__v", chunk_arr.alias(acc))
-            first = False
-        else:
-            # the chunk's argmins land in their OWN aliased projection and
-            # the fold references BOTH acc and cand twice: a
-            # single-referenced alias would be inlined by CollapseProject
-            # into the transform island, whose CodegenFallback eval runs
-            # the inlined subtree interpreted per row (see
-            # with_nearest_centroids). Dead branches are unreachable.
-            cur = cur.select(*carry, "__v", acc, chunk_arr.alias(cand))
-            fold = F.when(
-                (F.size(F.col(acc)) < 0) | (F.size(F.col(cand)) < 0),
-                F.slice(F.col(acc), 1, 1),
-            ).otherwise(F.transform(F.concat(F.col(acc), F.col(cand)), lambda x: x))
-            cur = cur.select(*carry, "__v", fold.alias(acc))
-    if m <= group:
-        # single-chunk: EXIT cut so the m*k*sub-term encode stage never
-        # fuses with the caller's probe join / ADC scoring (see
-        # _codegen_cut); multi-chunk already ends on a fold island
-        cur = cur.select(*carry, "__v", _codegen_cut(F.col(acc), "array").alias(acc))
-    return cur.select(*carry, F.col(acc).alias(codes_col))
 
 
 def ivfpq_topk(
@@ -1897,8 +1539,8 @@ def ivfpq_topk(
     encoding is the recall refinement a production system layers on top.
 
     Plan shape: zero corpus shuffles before the rank window — coarse
-    assignment and PQ encode are per-row projections (codegen-chunked,
-    Generate barrier on the bucket key), probes broadcast, the ADC
+    assignment and PQ encode are per-row Arrow stages (a pushdown
+    barrier under the bucket key), probes broadcast, the ADC
     distance is m map-free literal-array lookups, and the partition-local
     prune bounds the window exchange to partitions*q*k rows. Self-match
     is kept (distance 0) exactly like ``pq_adc_topk``; its bucket always
@@ -1927,9 +1569,8 @@ def ivfpq_topk(
     c = spread_to_parallelism(corpus).select(
         F.col(id_col).alias("corpus_id"), _as_double(F.col(vec_col)).alias("__v")
     ).withColumn("__n", _norm("__v", dim))
-    # explode, not element_at: Generate blocks the join's inferred
-    # isnotnull(centroid_id) from substituting the fold expression
-    # (see cosine_topk_ivf)
+    # the Arrow assignment stage keeps the join's inferred
+    # isnotnull(centroid_id) above it (see cosine_topk_ivf)
     assigned = with_nearest_centroids(c, "__v", "__n", entries, 1, "__cids").select(
         "corpus_id", "__v", F.explode("__cids").alias("centroid_id")
     )
@@ -2203,64 +1844,43 @@ def pq_reconstruction_mse(
 ) -> DataFrame:
     """Per-vector quantization distortion: mean over dimensions of the
     squared gap between the vector and its codebook reconstruction.
-    Pure projections over the encoded frame (no shuffle) — chunked across
-    stages like ``pq_encode`` so each stage's unrolled terms stay under
-    the janino 64 KB method limit; the running sum folds with a
-    multi-reference ``when`` guard (acc < 0 never holds for a sum of
-    squared distances) that keeps CollapseProject from re-inlining."""
+    One vectorized mapInPandas stage over the encoded frame (no shuffle)
+    emits the raw squared-gap sum: per subspace, gather each row's
+    assigned centroid and fold (x - c)^2 left-assoc from the first term,
+    then add the subspace sums left to right. ``code_str`` and the
+    division + 6-dp rounding stay in Spark (HALF_UP ``round``)."""
+    import numpy as np
+
+    from pyspark.sql.types import DoubleType, StructField, StructType
+
     m, sub = len(codebooks), len(codebooks[0][0])
     d = m * sub
-    terms_per_sub = max(1, len(codebooks[0]) * sub)
-    group = max(1, _MAX_STAGE_TERMS // terms_per_sub)
-    carry = list(df.columns)
+    cbs = [np.asarray(cb, dtype=np.float64) for cb in codebooks]
     acc = "__mse_acc"
+    schema = StructType(
+        [df.schema[id_col], df.schema[codes_col], StructField(acc, DoubleType(), False)]
+    )
 
-    def chunk_sum_sql(base: int, start: str | None) -> str:
-        """Chain this chunk's terms LEFT-ASSOCIATIVELY onto ``start`` so
-        the float result is bit-identical to the unchunked
-        ((t0+t1)+t2)+... fold the oracle replays. One SQL string per
-        chunk — the py4j-Column form cost ~3 round trips per term."""
-        parts = [] if start is None else [start]
-        for j in range(base, min(base + group, m)):
-            # distance to the ASSIGNED centroid, selected by the code value
-            per_c = ", ".join(
-                f"({_sub_dist_sql('__v', j * sub, codebooks[j][c])})"
-                for c in range(len(codebooks[j]))
-            )
-            parts.append(
-                f"element_at(array({per_c}), {codes_col}[{j}] + 1)"
-            )
-        return " + ".join(parts)
+    def distortion(batches):
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            V = np.stack(pdf[vec_col].to_numpy()).astype(np.float64, copy=False)
+            codes = np.stack(pdf[codes_col].to_numpy())
+            total = None
+            for j in range(m):
+                base = j * sub
+                cent = cbs[j][codes[:, j]]  # (n, sub) assigned centroids
+                t = V[:, base] - cent[:, 0]
+                s = t * t
+                for i in range(1, sub):
+                    t = V[:, base + i] - cent[:, i]
+                    s = s + t * t
+                total = s if total is None else total + s
+            yield pdf[[id_col, codes_col]].assign(**{acc: total})
 
-    cur = df.withColumn("__v", _as_double(F.col(vec_col)))
-    first = True
-    for base in range(0, m, group):
-        if first:
-            cur = cur.select(*carry, "__v", F.expr(chunk_sum_sql(base, None)).alias(acc))
-            first = False
-        else:
-            # acc < 0 never holds for a sum of squared distances; the
-            # single-element array_sort is an identity codegen island that
-            # cuts the WSCG region without touching the float value.
-            # NOTE: unlike the array folds, this chunk's terms chain
-            # left-associatively ONTO acc for bit parity, so they sit
-            # inside the island and evaluate interpreted when the
-            # multi-chunk path triggers — acceptable because at the
-            # default budget every registry/stress shape is single-chunk
-            # here (m * k * sub <= _MAX_STAGE_TERMS), and reassociating
-            # the sum to split it would change float results.
-            fold = F.when(F.col(acc) < 0, F.lit(None).cast("double")).otherwise(
-                F.element_at(
-                    F.array_sort(F.array(F.expr(chunk_sum_sql(base, acc)))), 1
-                )
-            )
-            cur = cur.select(*carry, "__v", fold.alias(acc))
-    # EXIT cut: the final select's concat_ws(transform(...)) island would
-    # otherwise absorb the single-referenced acc (CollapseProject inlines
-    # single-use aliases), running the whole unrolled distance sum
-    # interpreted per row inside the island.
-    cur = cur.select(*carry, "__v", _codegen_cut(F.col(acc), "scalar").alias(acc))
-    return cur.select(
+    summed = df.select(id_col, vec_col, codes_col).mapInPandas(distortion, schema)
+    return summed.select(
         F.col(id_col),
         F.concat_ws(",", F.transform(F.col(codes_col), lambda x: x.cast("string"))).alias(
             "code_str"
@@ -2291,9 +1911,9 @@ def pq_adc_topk(
     ``ivfpq_topk`` idiom), attached by a deliberate broadcast
     nested-loop join (|queries| rows — every corpus vector pairs with
     every query by definition of exact ADC). The previous delivery —
-    per-query literal structs unrolled into chunked projections — put
-    m*k literal doubles per query into the generated code (janino 64 KB
-    hazard, codegen-cut fold stages, ~1 MB of plan text at 10 queries);
+    per-query literal structs in the projections — put m*k literal
+    doubles per query into the generated code (janino 64 KB hazard,
+    ~1 MB of plan text at 10 queries);
     the broadcast-column form has none of that and is plan-size O(1) in
     the query count."""
     m = len(codebooks)
