@@ -9,7 +9,6 @@ from pyspark.sql import functions as F
 
 from urban_traffic_data_lake_project_spark.operators import text as T
 from urban_traffic_data_lake_project_spark.operators.decontam import (
-    decontaminate,
     eval_ngram_set,
     ngram_overlap_flags,
 )
@@ -37,6 +36,13 @@ def test_curation_query_matches_oracle(oracle, name):
 # ---------------------------------------------------------------------------
 # decontamination
 # ---------------------------------------------------------------------------
+def _kept_ids(train, ev, n):
+    flags = ngram_overlap_flags(
+        train, eval_ngram_set(ev, "doc_id", "text", n), "doc_id", "text", n
+    )
+    return sorted(r["doc_id"] for r in flags.filter(F.col("keep")).collect())
+
+
 def test_decontaminate_drops_docs_sharing_eval_ngrams(spark):
     train = spark.createDataFrame(
         [
@@ -49,8 +55,7 @@ def test_decontaminate_drops_docs_sharing_eval_ngrams(spark):
         [(100, "alpha beta gamma something else entirely")],
         "doc_id long, text string",
     )
-    kept = decontaminate(train, ev, "doc_id", "text", n=3).collect()
-    assert [r["doc_id"] for r in kept] == [2]
+    assert _kept_ids(train, ev, 3) == [2]
 
     flags = {
         r["doc_id"]: (r["n_eval_hits"], r["keep"])
@@ -72,8 +77,8 @@ def test_decontaminate_ngram_size_controls_strictness(spark):
         [(9, "the quick brown bear sleeps all winter long")],
         "doc_id long, text string",
     )
-    assert decontaminate(train, ev, "doc_id", "text", n=3).count() == 0
-    assert decontaminate(train, ev, "doc_id", "text", n=5).count() == 1
+    assert _kept_ids(train, ev, 3) == []
+    assert _kept_ids(train, ev, 5) == [1]
 
 
 # ---------------------------------------------------------------------------
@@ -353,7 +358,7 @@ def test_decontaminate_empty_eval_set_keeps_everything(spark):
         [(1, "some training text here today")], "doc_id long, text string"
     )
     empty_eval = spark.createDataFrame([], "doc_id long, text string")
-    assert decontaminate(train, empty_eval, "doc_id", "text", n=3).count() == 1
+    assert _kept_ids(train, empty_eval, 3) == [1]
 
 
 def test_pack_sequences_oversized_row_gets_own_bins(spark):
@@ -425,10 +430,7 @@ def test_cm_sketch_never_underestimates(spark):
 
 
 def test_cm_merge_equals_single_pass(spark):
-    from urban_traffic_data_lake_project_spark.operators.sketches import (
-        cm_merge,
-        cm_sketch_table,
-    )
+    from urban_traffic_data_lake_project_spark.operators.sketches import cm_sketch_table
 
     df = spark.range(500).select((F.col("id") % 37).cast("string").alias("v"))
     whole = {
@@ -438,7 +440,8 @@ def test_cm_merge_equals_single_pass(spark):
     p1 = cm_sketch_table(df.filter(F.col("id") < 200), "v", 4, 64)
     p2 = cm_sketch_table(df.filter(F.col("id") >= 200), "v", 4, 64)
     merged = {
-        (r["row"], r["bucket"]): r["n"] for r in cm_merge(p1.union(p2)).collect()
+        (r["row"], r["bucket"]): r["n"]
+        for r in p1.union(p2).groupBy("row", "bucket").agg(F.sum("n").alias("n")).collect()
     }
     assert merged == whole  # cells ADD under union-merge
 

@@ -61,23 +61,6 @@ def test_exact_percentiles_nonnull_rank_base(spark):
     assert got == pytest.approx(want)
 
 
-def test_grand_aggregate_bundle_with_null_prices(spark):
-    # regression: the bundle must feed the NON-NULL price count into the
-    # percentile refinement, not the table row count.
-    import numpy as np
-
-    from urban_traffic_data_lake_project_spark.operators.stats import grand_aggregate_bundle
-
-    vals = [float(v) * 3.5 for v in range(1, 41)]
-    rows = [(1.0, v, "A") for v in vals] + [(2.0, None, "B")] * 25
-    df = spark.createDataFrame(rows, "q double, price double, flag string")
-    out = grand_aggregate_bundle(df, "q", "price", "flag")
-    want25 = float(np.quantile(np.array(vals), 0.25, method="linear"))
-    want75 = float(np.quantile(np.array(vals), 0.75, method="linear"))
-    assert out["q25_price"] == pytest.approx(want25)
-    assert out["q75_price"] == pytest.approx(want75)
-
-
 def test_shingles_and_sketches_on_degenerate_docs(spark):
     df = spark.createDataFrame(
         [(1, ""), (2, "   "), (3, "!!! ???"), (4, "one"), (5, "two words only")],

@@ -100,49 +100,6 @@ def test_incremental_merge_equals_full_recompute(spark, sf_dir):
     assert merged == full
 
 
-def test_zorder_write_clusters_files(spark, sf_dir, tmp_path):
-    """The point of the z-order rewrite is DATA SKIPPING: after
-    clustering by Morton(l_partkey, l_suppkey), the rows matching a
-    narrow range predicate on EITHER dimension must live in a small
-    subset of the output files (so parquet footer min/max stats prune
-    the rest). Compare against a hash-scattered layout of the same data,
-    where the same predicate's rows touch essentially every file."""
-    from urban_traffic_data_lake_project_spark.operators.layout import zorder_write
-
-    li = load_table(spark, sf_dir, "lineitem").select("l_partkey", "l_suppkey")
-    n_files = 16
-    zpath = str(tmp_path / "zordered")
-    bounds = zorder_write(li, zpath, "l_partkey", "l_suppkey", target_files=n_files)
-    lo, hi = bounds["l_partkey"]
-    width = max(1, int((hi - lo) / 20))  # a ~5% range on dimension A
-
-    spath = str(tmp_path / "scattered")
-    li.repartition(n_files).write.mode("overwrite").parquet(spath)
-
-    def files_touched(path: str) -> tuple[int, int]:
-        df = spark.read.parquet(path)
-        total = df.select(F.input_file_name()).distinct().count()
-        touched = (
-            df.filter(F.col("l_partkey").between(lo, lo + width))
-            .select(F.input_file_name())
-            .distinct()
-            .count()
-        )
-        return touched, total
-
-    z_touched, z_total = files_touched(zpath)
-    s_touched, s_total = files_touched(spath)
-    assert z_total >= n_files // 2  # the rewrite really split the data
-    # scattered layout: the range lives everywhere
-    assert s_touched >= int(0.9 * s_total)
-    # z-ordered layout: the same range lives in a minority of files.
-    # A one-dimensional slab fragments across z-curve blocks (that is
-    # the 2-D trade), so expect a solid majority skipped — not a single
-    # contiguous band (measured 6/16 files for a 5% slab).
-    assert z_touched <= z_total // 2, (z_touched, z_total)
-    assert z_touched < s_touched
-
-
 def test_zorder_codes_cover_all_rows(spark, sf_dir):
     """Bucket counts from the oracle-gated query must sum to the table
     row count (no row lost or double-counted by the scaling clamp)."""

@@ -1,20 +1,16 @@
 """Hilbert-curve layout operator (operators/layout.py r9): parity with a
 plain-Python reference of the standard xy2d algorithm, curve properties
-(bijective, consecutive codes are grid neighbors), and the data-skipping
-payoff of a Hilbert-clustered write vs a hash-scattered layout."""
+(bijective, consecutive codes are grid neighbors), and the range
+locality that makes it a better clustering key than Morton."""
 
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from urban_traffic_data_lake_project_spark.operators.layout import (
-    column_bounds,
-    hilbert_write,
     with_hilbert_code,
     with_morton_code,
 )
-from urban_traffic_data_lake_project_spark.sources import load_table
 
 
 def xy2d_ref(bits: int, x: int, y: int) -> int:
@@ -105,38 +101,6 @@ def test_hilbert_beats_morton_on_range_locality(spark):
     # measured 510 vs 907 over these 64 regions — assert a solid margin,
     # not the exact figures
     assert h_total < 0.75 * m_total, (h_total, m_total)
-
-
-def test_hilbert_write_clusters_files(spark, sf_dir, tmp_path):
-    # same data-skipping contract as test_zorder_write_clusters_files,
-    # for the Hilbert writer
-    li = load_table(spark, sf_dir, "lineitem").select("l_partkey", "l_suppkey")
-    n_files = 16
-    hpath = str(tmp_path / "hilberted")
-    bounds = hilbert_write(li, hpath, "l_partkey", "l_suppkey", target_files=n_files)
-    lo, hi = bounds["l_partkey"]
-    width = max(1, int((hi - lo) / 20))
-
-    spath = str(tmp_path / "scattered")
-    li.repartition(n_files).write.mode("overwrite").parquet(spath)
-
-    def files_touched(path: str) -> tuple[int, int]:
-        df = spark.read.parquet(path)
-        total = df.select(F.input_file_name()).distinct().count()
-        touched = (
-            df.filter(F.col("l_partkey").between(lo, lo + width))
-            .select(F.input_file_name())
-            .distinct()
-            .count()
-        )
-        return touched, total
-
-    h_touched, h_total = files_touched(hpath)
-    s_touched, s_total = files_touched(spath)
-    assert h_total >= n_files // 2
-    assert s_touched >= int(0.9 * s_total)
-    assert h_touched <= h_total // 2, (h_touched, h_total)
-    assert h_touched < s_touched
 
 
 def test_constant_column_degrades_gracefully(spark):

@@ -6,7 +6,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from urban_traffic_data_lake_project_spark.operators import multimodal as MM
-from urban_traffic_data_lake_project_spark.operators import similarity as S
 from urban_traffic_data_lake_project_spark.queries import scalars as qs
 from urban_traffic_data_lake_project_spark.sources import load_table
 
@@ -45,64 +44,12 @@ def test_decode_fills_metadata_deterministically(media):
     assert [r.asDict() for r in rows] == [r.asDict() for r in rows2]
 
 
-def test_feature_extraction_batch_shape_and_determinism(media):
-    feats = MM.extract_features(media)
-    assert _names_types(feats.schema) == _names_types(MM.FEATURE_SCHEMA)
-    rows = feats.orderBy("media_id").limit(3).collect()
-    assert all(len(r["feature"]) == 32 for r in rows)
-    again = MM.extract_features(media).orderBy("media_id").limit(3).collect()
-    assert [list(r["feature"]) for r in rows] == [list(r["feature"]) for r in again]
-    assert all(-1.0 <= v <= 1.0 for r in rows for v in r["feature"])
-
-
-def test_features_compose_with_similarity_search(spark, media):
-    feats = MM.extract_features(media).withColumnRenamed("media_id", "vec_id").withColumnRenamed("feature", "embedding")
-    q = feats.filter(F.col("vec_id") < 3)
-    out = S.cosine_topk(feats, q, k=3)
-    assert out.count() == 9
-
-
-def test_resize_scales_metadata_preserving_aspect(spark, media):
-    decoded = MM.decode_metadata(media)
-    resized = MM.resize(decoded, max_side=20)
-    rows = resized.join(
-        decoded.select(
-            F.col("media_id"), F.col("width").alias("w0"), F.col("height").alias("h0")
-        ),
-        "media_id",
-    ).collect()
-    for r in rows:
-        assert max(r["width"], r["height"]) <= 20
-        if max(r["w0"], r["h0"]) > 20:  # scaled down, aspect preserved +-rounding
-            a0 = r["w0"] / r["h0"]
-            assert abs(r["width"] / r["height"] - a0) / a0 < 0.15
-        else:  # small media untouched
-            assert (r["width"], r["height"]) == (r["w0"], r["h0"])
-
-
-def test_frame_sampling(spark, media):
-    decoded = MM.decode_metadata(media)
-    frames = MM.frame_sample(decoded, every_ms=1000)
-    joined = frames.groupBy("media_id").agg(F.count(F.lit(1)).alias("n")).join(
-        decoded.select("media_id", "duration_ms"), "media_id"
-    )
-    bad = joined.filter(
-        F.col("n") != (F.floor((F.col("duration_ms") - 1) / 1000) + 1)
-    ).count()
-    assert bad == 0
-
-
 def test_random_moments_distribution(spark, sf_dir):
     row = qs.REGISTRY["scalar_random_moments"].fn(spark, sf_dir).first()
     assert abs(row["mean_u"] - 0.5) <= 0.02
     assert abs(row["std_u"] - 0.29) <= 0.02  # 1/sqrt(12) ~ 0.289
     assert abs(row["mean_z"]) <= 0.1 and abs(row["std_z"] - 1.0) <= 0.1
     assert row["n_choices"] == 4
-
-
-def test_balance_partitions(media):
-    balanced = MM.balance_partitions(media, target_partition_bytes=64 * 1024)
-    assert balanced.rdd.getNumPartitions() >= 2
 
 
 def _real_png(w: int, h: int) -> bytes:
@@ -269,31 +216,6 @@ def test_ahash_and_hamming_near_dup_pairs(spark):
     # 16x16 block-mean downsample path
     big = np.kron(base, np.ones((2, 2), dtype=np.uint8))
     assert MM.ahash64(big) == h_base
-
-
-def test_resize_real_png_pixels(spark):
-    """resize() actually resamples decodable PNG payloads: the output
-    payload is a valid PNG of the new dimensions whose pixels are the
-    deterministic nearest-neighbor sample of the original."""
-    import numpy as np
-
-    from urban_traffic_data_lake_project_spark.operators import multimodal as MM
-
-    rng = np.random.default_rng(5)
-    pix = rng.integers(0, 256, (16, 12)).astype(np.uint8)
-    df = spark.createDataFrame(
-        [(1, bytearray(MM.png_encode_gray(pix)))], "media_id long, payload binary"
-    )
-    media = MM.ingest_binary(df, "media_id", "payload", "image", "png")
-    media = MM.decode_metadata(media)
-    out = MM.resize(media, max_side=8).collect()[0]
-    assert (out["width"], out["height"]) == (6, 8)  # 16x12 -> 8-long-side
-    dec = MM.png_decode_gray(bytes(out["payload"]))
-    assert dec is not None and dec[:2] == (6, 8)
-    rows = (np.arange(8) * 16) // 8
-    cols = (np.arange(6) * 12) // 6
-    assert (dec[2] == pix[rows][:, cols]).all()
-    assert out["byte_len"] == len(bytes(out["payload"]))
 
 
 # ---------------------------------------------------------------------------

@@ -146,9 +146,7 @@ def test_quantile_band_cap_noop_at_default(spark):
 def _run_counting_jobs(spark, fn) -> int:
     """Count Spark jobs submitted by ``fn`` via the DAGScheduler's job-id
     counter (py4j converts the AtomicInteger to int) — thread-global, so
-    jobs launched from overlap_jobs worker threads are counted too (a job
-    *group* would miss them: local properties don't cross driver
-    threads). NOTE: with AQE on, every materialized query stage
+    jobs launched from overlap_jobs worker threads are counted too. NOTE: with AQE on, every materialized query stage
     (broadcast builds included) is its own job, so these counts are
     total submissions, not driver round-trip latencies."""
     before = spark.sparkContext._jsc.sc().dagScheduler().nextJobId()

@@ -1,4 +1,5 @@
-"""Layer/catalog utilities: ensure, list, cross-store copy, dual write."""
+"""Sources: format round trips, event-timestamp normalization, schema
+evolution, the Python data source and the parallelism spread."""
 
 from __future__ import annotations
 
@@ -10,7 +11,6 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from urban_traffic_data_lake_project_spark.sources import catalog as cat
 from urban_traffic_data_lake_project_spark.sources import load_table
 
 
@@ -19,22 +19,6 @@ def tmpbase():
     d = tempfile.mkdtemp(prefix="layers_")
     yield d
     shutil.rmtree(d, ignore_errors=True)
-
-
-def test_ensure_layers_creates_namespaces(tmpbase):
-    paths = cat.ensure_layers(tmpbase)
-    assert set(paths) == {"bronze", "silver", "gold"}
-    assert all(os.path.isdir(p) for p in paths.values())
-
-
-def test_cross_store_copy_and_listing(spark, sf_dir, tmpbase):
-    paths = cat.ensure_layers(tmpbase)
-    src = f"{sf_dir}/nation.parquet"
-    dst = os.path.join(paths["silver"], "nation")
-    cat.cross_store_copy(spark, src, dst)
-    assert spark.read.parquet(dst).count() == load_table(spark, sf_dir, "nation").count()
-    assert cat.list_layer_tables(spark, paths["silver"]) == ["nation"]
-    assert cat.list_layer_tables(spark, paths["gold"]) == []
 
 
 def test_json_and_orc_round_trip(spark, sf_dir, tmpbase):
@@ -90,112 +74,6 @@ def test_events_stream_ts_is_watermarkable(spark, sf_dir):
     stream = read_events_stream(spark, sf_dir)
     assert dict(stream.dtypes)["ts"] == "timestamp"
     stream.withWatermark("ts", "1 hour")  # raises AnalysisException on NTZ
-
-
-def test_dual_write(spark, sf_dir, tmpbase):
-    region = load_table(spark, sf_dir, "region")
-    a, b = os.path.join(tmpbase, "a"), os.path.join(tmpbase, "b")
-    cat.dual_write(region, a, b)
-    assert spark.read.parquet(a).count() == spark.read.parquet(b).count() == region.count()
-
-
-def test_write_compacted_targets_file_size(spark, sf_dir, tmp_path):
-    from urban_traffic_data_lake_project_spark.sources.writers import write_compacted
-
-    li = load_table(spark, sf_dir, "lineitem").repartition(64)  # small-files shape
-    path = str(tmp_path / "compacted")
-    n = write_compacted(li, path, target_file_bytes=512 << 10)
-    import glob
-
-    files = glob.glob(f"{path}/*.parquet")
-    assert len(files) == n and n < 64  # compacted well below input partitioning
-    back = spark.read.parquet(path)
-    assert back.count() == li.count()
-
-
-def test_write_compacted_empty_input(spark, tmp_path):
-    from urban_traffic_data_lake_project_spark.sources.writers import write_compacted
-
-    empty = spark.range(0).selectExpr("id", "CAST(id AS STRING) AS s")
-    path = str(tmp_path / "empty")
-    assert write_compacted(empty, path) == 1
-    assert spark.read.parquet(path).count() == 0
-
-
-def test_write_sorted_files_cover_disjoint_ranges(spark, sf_dir, tmp_path):
-    """Range layout contract, checked against the actual parquet metadata:
-    each output file's [min, max] for the sort key must be disjoint from
-    every other file's — that disjointness is what lets a range predicate
-    skip whole files/row groups at 100 TB."""
-    import glob
-
-    import pyarrow.parquet as pq
-
-    from urban_traffic_data_lake_project_spark.sources.writers import write_sorted
-
-    li = load_table(spark, sf_dir, "lineitem")
-    path = str(tmp_path / "sorted")
-    write_sorted(li, path, ["l_shipdate"], n_files=4)
-
-    spans = []
-    for f in sorted(glob.glob(f"{path}/*.parquet")):
-        md = pq.ParquetFile(f).metadata
-        idx = md.schema.names.index("l_shipdate")
-        mins, maxs = [], []
-        for rg in range(md.num_row_groups):
-            st = md.row_group(rg).column(idx).statistics
-            mins.append(st.min)
-            maxs.append(st.max)
-        spans.append((min(mins), max(maxs)))
-    spans.sort()
-    assert len(spans) >= 2
-    for (lo_a, hi_a), (lo_b, hi_b) in zip(spans, spans[1:]):
-        assert hi_a <= lo_b, f"file ranges overlap: {hi_a} > {lo_b}"
-    # and the data round-trips
-    assert spark.read.parquet(path).count() == li.count()
-
-
-def test_write_zordered_files_cluster_both_dimensions(spark, tmp_path):
-    """Z-order contract: every output file covers a compact rectangle in
-    BOTH dimensions (a single-key sort leaves the second dimension
-    spanning the full range), verified from actual parquet footer stats."""
-    import glob
-
-    import pyarrow.parquet as pq
-
-    from urban_traffic_data_lake_project_spark.sources.writers import (
-        write_sorted,
-        write_zordered,
-    )
-
-    df = spark.range(20000).select(
-        (F.pmod(F.col("id") * 7919, F.lit(20000)) / 20000.0).alias("x"),
-        (F.pmod(F.col("id") * 104729, F.lit(20000)) / 20000.0).alias("y"),
-    )
-
-    def spans(path, col):
-        out = []
-        for f in glob.glob(f"{path}/*.parquet"):
-            md = pq.ParquetFile(f).metadata
-            idx = md.schema.names.index(col)
-            st = [md.row_group(g).column(idx).statistics for g in range(md.num_row_groups)]
-            out.append(max(s.max for s in st) - min(s.min for s in st))
-        return out
-
-    zpath = str(tmp_path / "zorder")
-    write_zordered(df, zpath, "x", "y", n_files=16)
-    x_spans, y_spans = spans(zpath, "x"), spans(zpath, "y")
-    # 16 z-slices over 2D -> ~quarter-range rectangles; allow slack for
-    # sample-based range boundaries
-    assert sum(x_spans) / len(x_spans) < 0.55
-    assert sum(y_spans) / len(y_spans) < 0.55
-
-    spath = str(tmp_path / "xsorted")
-    write_sorted(df, spath, ["x"], n_files=16)
-    # single-key sort clusters x tightly but leaves y unclustered
-    assert sum(spans(spath, "x")) / 16 < 0.2
-    assert sum(spans(spath, "y")) / 16 > 0.9
-    assert spark.read.parquet(zpath).count() == 20000
 
 
 def test_parquet_schema_evolution_merge(spark, sf_dir, tmp_path):

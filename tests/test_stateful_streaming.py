@@ -1,5 +1,7 @@
-"""Custom stateful operator (applyInPandasWithState): state accumulates
-across micro-batches and the final emission matches the batch aggregate."""
+"""Custom stateful operators (applyInPandasWithState): running state
+accumulates across micro-batches and the final emission matches the batch
+aggregate; the bounded replay buffer evicts its oldest events across
+micro-batches."""
 
 from __future__ import annotations
 
@@ -7,8 +9,6 @@ import datetime as dt
 import shutil
 import tempfile
 import time
-
-from pyspark.sql import functions as F
 
 from urban_traffic_data_lake_project_spark.streaming import stateful as st
 
@@ -93,115 +93,3 @@ def test_bounded_recent_stats_evicts_across_batches(spark):
     assert abs(final["avg_recent_value"] - (200.0 + 100.0 + 3.0) / 3) < 1e-9
     assert final["last_ts"] == base + dt.timedelta(minutes=9)
     assert final["span_us"] == 6 * 60 * 1_000_000  # minute 9 - minute 3
-
-
-def test_tws_variant_plan_builds_and_runs_when_dependency_present(spark):
-    """transformWithStateInPandas plan CONSTRUCTION must always work; the
-    full run needs google.protobuf (absent in this container), so the
-    execution half gates on tws.is_available()."""
-    from urban_traffic_data_lake_project_spark.streaming import tws
-
-    d = tempfile.mkdtemp(prefix="tws_")
-    base = dt.datetime(2024, 1, 1, 12, 0)
-    schema = "event_id long, ts timestamp, user_id long, value double"
-    spark.createDataFrame(
-        [(i, base + dt.timedelta(minutes=i), 1, float(i)) for i in range(4)], schema
-    ).coalesce(1).write.mode("overwrite").parquet(f"{d}/src")
-
-    stream = spark.readStream.schema(
-        spark.read.parquet(f"{d}/src").schema
-    ).parquet(f"{d}/src")
-    plan = tws.recent_events_stats(stream, keep=3)
-    assert plan.isStreaming
-    assert [f.name for f in plan.schema.fields] == [
-        "user_id", "n_recent", "avg_recent_value", "last_ts", "span_us"
-    ]
-
-    if not tws.is_available():
-        # state-v2 stream START needs protobuf, but the PROCESSOR is pure
-        # Python — drive handleInputRows directly through a fake handle
-        # with the same micro-batches the GroupState test uses and assert
-        # the same final emission. That pins fallback parity (the registry
-        # serves stateful.bounded_recent_stats when tws is unavailable)
-        # instead of skipping.
-        shutil.rmtree(d, ignore_errors=True)
-        _assert_processor_matches_groupstate_semantics()
-        return
-
-    q = (
-        plan.writeStream.format("memory")
-        .queryName("tws_sink")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    out = spark.table("tws_sink").toPandas()
-    shutil.rmtree(d, ignore_errors=True)
-    assert out.iloc[-1]["n_recent"] == 3
-
-
-class _FakeListState:
-    """Minimal ListState: enough surface for RecentEventsProcessor."""
-
-    def __init__(self):
-        self._v = None
-
-    def exists(self):
-        return self._v is not None
-
-    def get(self):
-        return list(self._v)
-
-    def put(self, rows):
-        self._v = list(rows)
-
-
-class _FakeHandle:
-    def __init__(self):
-        self.states = {}
-
-    def getListState(self, name, schema):
-        return self.states.setdefault(name, _FakeListState())
-
-
-def _assert_processor_matches_groupstate_semantics():
-    """Replay the exact micro-batches of
-    test_bounded_recent_stats_evicts_across_batches through
-    RecentEventsProcessor.handleInputRows (pure Python — no protobuf) and
-    assert the final emission equals what the GroupState implementation
-    produced for the same input: buffer (11, 10, 3) -> values 200, 100, 3."""
-    import pandas as pd
-
-    from urban_traffic_data_lake_project_spark.streaming.tws import (
-        RecentEventsProcessor,
-    )
-
-    base = dt.datetime(2024, 1, 1, 12, 0)
-    batches = [
-        pd.DataFrame(
-            {
-                "event_id": [0, 1, 2, 3],
-                "ts": [base + dt.timedelta(minutes=i) for i in range(4)],
-                "value": [0.0, 1.0, 2.0, 3.0],
-            }
-        ),
-        pd.DataFrame(
-            {
-                "event_id": [10, 11],
-                "ts": [base + dt.timedelta(minutes=9)] * 2,
-                "value": [100.0, 200.0],
-            }
-        ),
-    ]
-    proc = RecentEventsProcessor(keep=3)
-    proc.init(_FakeHandle())
-    final = None
-    for pdf in batches:
-        for out in proc.handleInputRows((1,), [pdf], None):
-            final = out.iloc[0]
-
-    assert final["n_recent"] == 3
-    assert abs(final["avg_recent_value"] - (200.0 + 100.0 + 3.0) / 3) < 1e-9
-    assert final["last_ts"] == pd.Timestamp(base + dt.timedelta(minutes=9))
-    assert final["span_us"] == 6 * 60 * 1_000_000

@@ -1,5 +1,5 @@
-"""Exactly-once streaming sinks on raw parquet: idempotent per-batch
-partition overwrite and MERGE-style versioned upsert."""
+"""Exactly-once streaming sink on raw parquet: the MERGE-style versioned
+upsert, its time travel, change capture and retention."""
 
 from __future__ import annotations
 
@@ -10,35 +10,14 @@ from pyspark.sql import functions as F
 from urban_traffic_data_lake_project_spark.sources import load_table
 from urban_traffic_data_lake_project_spark.streaming.sinks import (
     current_version,
-    foreach_batch_idempotent,
     foreach_batch_upsert,
+    list_versions,
     read_versioned,
+    version_diff,
 )
 from urban_traffic_data_lake_project_spark.streaming.windows import (
     read_table_stream,
 )
-
-
-def test_idempotent_sink_end_to_end_and_on_retry(spark, sf_dir, tmp_path):
-    out = str(tmp_path / "out")
-    stream = read_table_stream(spark, sf_dir, "events")
-    sink = foreach_batch_idempotent(out)
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    written = spark.read.parquet(out)
-    batch = load_table(spark, sf_dir, "events")
-    assert written.count() == batch.count()
-    # a RETRIED epoch (same batch_id, same data) must not duplicate rows
-    sink(batch, 0)
-    assert spark.read.parquet(out).count() == batch.count()
-    # ...while a new epoch appends under its own partition
-    sink(batch.limit(5), 1)
-    assert spark.read.parquet(out).count() == batch.count() + 5
 
 
 def test_upsert_sink_keeps_latest_per_key_and_survives_retry(spark, tmp_path):
@@ -99,10 +78,6 @@ def test_checkpoint_recovery_processes_only_new_files(spark, sf_dir, tmp_path):
     """Exactly-once across RESTARTS: a second AvailableNow run sharing the
     first run's checkpoint must process only files that arrived in
     between — nothing is reprocessed, nothing is lost."""
-    import os
-
-    from urban_traffic_data_lake_project_spark.sources import load_table
-
     events = load_table(spark, sf_dir, "events")
     src = str(tmp_path / "incoming")
     first = events.filter(F.col("event_id") % 2 == 0)
@@ -117,7 +92,9 @@ def test_checkpoint_recovery_processes_only_new_files(spark, sf_dir, tmp_path):
         q = (
             spark.readStream.schema(schema)
             .parquet(src)
-            .writeStream.foreachBatch(foreach_batch_idempotent(out))
+            .writeStream.foreachBatch(
+                foreach_batch_upsert(out, keys=["event_id"], order_col="ts")
+            )
             .option("checkpointLocation", ckpt)
             .trigger(availableNow=True)
             .start()
@@ -125,20 +102,18 @@ def test_checkpoint_recovery_processes_only_new_files(spark, sf_dir, tmp_path):
         q.awaitTermination(120)
 
     run_once()
-    n_first = spark.read.parquet(out).count()
+    n_first = read_versioned(spark, out).count()
     assert n_first == first.count()
 
     # new file arrives; a fresh query resumes from the same checkpoint
     second.coalesce(1).write.mode("append").parquet(src)
     run_once()
-    total = spark.read.parquet(out)
+    total = read_versioned(spark, out)
     assert total.count() == events.count()
     # the second epoch contains ONLY the new file's rows (no reprocessing)
-    batches = sorted(
-        d for d in os.listdir(out) if d.startswith("batch_id=")
-    )
-    assert len(batches) == 2
-    b1 = spark.read.parquet(os.path.join(out, batches[1]))
+    assert list_versions(out) == [0, 1]
+    b1 = version_diff(spark, out, 0, 1, ["event_id"])
+    assert {r.change_type for r in b1.collect()} == {"insert"}
     assert b1.count() == second.count()
     assert b1.filter(F.col("event_id") % 2 == 0).count() == 0
 
@@ -261,62 +236,3 @@ def test_vacuum_keeps_newest_versions(spark):
         raise AssertionError("vacuumed version must not be readable")
     except ValueError:
         pass
-
-
-def test_streaming_ivf_ingest_idempotent_and_query_equivalent(
-    spark, sf_dir, tmp_path
-):
-    """The ANN index's streaming ingest path: build on the initial slice,
-    stream the later batch in through foreachBatch, and the queried
-    results must equal the batch build+append path exactly. A re-applied
-    epoch (same batch_id — the retry case) must not change the postings
-    row count (dynamic partition overwrite replaces its own epoch)."""
-    from urban_traffic_data_lake_project_spark.operators.similarity import (
-        append_ivf_index,
-        build_ivf_index,
-        query_ivf_index,
-    )
-    from urban_traffic_data_lake_project_spark.streaming.sinks import (
-        foreach_batch_ivf_append,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    d_stream = str(tmp_path / "idx_stream")
-    d_batch = str(tmp_path / "idx_batch")
-    initial = emb.filter(F.col("vec_id") >= 100)
-    later = emb.filter((F.col("vec_id") >= 10) & (F.col("vec_id") < 100))
-    build_ivf_index(initial, d_stream, n_centroids=8)
-    build_ivf_index(initial, d_batch, n_centroids=8)
-    append_ivf_index(later, d_batch)
-
-    path = os.path.join(sf_dir, "embeddings.parquet")
-    schema = spark.read.parquet(path).schema
-    glob = path[:-1] + f"[{path[-1]}]" if os.path.isfile(path) else path
-    stream = (
-        spark.readStream.schema(schema)
-        .parquet(glob)
-        .filter((F.col("vec_id") >= 10) & (F.col("vec_id") < 100))
-    )
-    q = (
-        stream.writeStream.foreachBatch(foreach_batch_ivf_append(d_stream))
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-
-    queries = emb.filter(F.col("vec_id") < 5)
-    got = sorted(
-        tuple(r) for r in query_ivf_index(spark, d_stream, queries, k=5).collect()
-    )
-    want = sorted(
-        tuple(r) for r in query_ivf_index(spark, d_batch, queries, k=5).collect()
-    )
-    assert got == want and len(got) > 0
-
-    # retry: re-apply epoch 0 by hand — postings must not grow
-    postings = os.path.join(d_stream, "postings")
-    before = spark.read.parquet(postings).count()
-    foreach_batch_ivf_append(d_stream)(later, 0)
-    after = spark.read.parquet(postings).count()
-    assert before == after

@@ -8,6 +8,10 @@ jobs' tasks back-fill executors freed by the earlier jobs' stragglers —
 and, at the bench's tiny scale factors, so k independent ~0.3 s driver
 round-trips cost one latency instead of k.
 
+Spark local properties (job group, description, scheduler pool) are per
+driver thread, so each thunk runs through ``inheritable_thread_target``:
+its jobs carry the caller's labels and stay cancellable by job group.
+
 Lives in ``functions`` (imported by both queries and operators) so the
 operator layer can overlap its own fit passes without a circular import
 through the query registry.
@@ -26,8 +30,14 @@ def overlap_jobs(*thunks: Callable[[], object]) -> list:
     overlap changes."""
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark import inheritable_thread_target
+    from pyspark.sql import SparkSession
+
     if len(thunks) == 1:
         return [thunks[0]()]
+    # passing the session also carries its tags and avoids PySpark's
+    # per-call "Tags will not be inherited" warning
+    inherit = inheritable_thread_target(SparkSession.active())
     with ThreadPoolExecutor(max_workers=min(4, len(thunks))) as pool:
-        futs = [pool.submit(t) for t in thunks]
+        futs = [pool.submit(inherit(t)) for t in thunks]
         return [f.result() for f in futs]

@@ -62,22 +62,6 @@ def ngram_overlap_flags(
     )
 
 
-def decontaminate(
-    train_df: DataFrame,
-    eval_df: DataFrame,
-    id_col: str,
-    text_col: str,
-    n: int = 8,
-) -> DataFrame:
-    """The applied form: the training corpus with contaminated documents
-    removed (any shared n-gram with the eval set)."""
-    flags = ngram_overlap_flags(
-        train_df, eval_ngram_set(eval_df, id_col, text_col, n), id_col, text_col, n
-    )
-    keep_ids = flags.filter(F.col("keep")).select(id_col)
-    return train_df.join(keep_ids, id_col, "left_semi")
-
-
 def embedding_overlap_flags(
     train_emb: DataFrame,
     eval_emb: DataFrame,

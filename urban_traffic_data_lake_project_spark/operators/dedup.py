@@ -146,22 +146,6 @@ def minhash_coeffs(num_hashes: int) -> list[tuple[int, int]]:
     ]
 
 
-def minhash_signatures(
-    df: DataFrame, id_col: str, text_col: str, n: int = 3, num_hashes: int = 16
-) -> DataFrame:
-    """MinHash signature per document: minimum of each affine hash over the
-    document's shingles. ONE md5 per shingle + ``num_hashes`` multiply-mod
-    agg expressions in a single aggregation pass."""
-    sh = shingle_table(df, id_col, text_col, n).withColumn(
-        "__h", stable_hash64(F.col("shingle")) % F.lit(MINHASH_P)
-    )
-    aggs = [
-        F.min((F.lit(a) * F.col("__h") + F.lit(b)) % F.lit(MINHASH_P)).alias(f"mh_{i}")
-        for i, (a, b) in enumerate(minhash_coeffs(num_hashes))
-    ]
-    return sh.groupBy(id_col).agg(*aggs)
-
-
 def lsh_candidate_pairs(
     signatures: DataFrame, id_col: str, num_hashes: int = 16, bands: int = 4
 ) -> DataFrame:

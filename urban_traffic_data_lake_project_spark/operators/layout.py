@@ -11,14 +11,12 @@ once by sorting on the Morton interleave of their bits — a range
 predicate on EITHER key then touches a small band of files instead of
 all of them.
 
-Everything here is deterministic and SQL-replayable: the Morton code is
-min-max scaling + bit interleave (no sampling), so the DuckDB oracle
-recomputes codes bit-for-bit. Only the final file SPLIT uses Spark's
-``repartitionByRange`` (sampled boundaries — not replayable), which is
-why the oracle-gated query checks codes and cluster statistics, while
-the file-skipping effect itself is asserted by a pytest that counts the
-files a range predicate actually touches (see
-tests/test_lakehouse.py::test_zorder_write_clusters_files).
+Everything here is deterministic and SQL-replayable: the Morton and
+Hilbert codes are min-max scaling + bit arithmetic (no sampling), so the
+DuckDB oracle recomputes codes bit-for-bit and the oracle-gated queries
+check codes and cluster statistics. The rewrite job itself (a range
+shuffle on the code, an in-file sort, the write) is left to the table
+format's maintenance service.
 """
 
 from __future__ import annotations
@@ -136,53 +134,3 @@ def with_hilbert_code(
             {"__hd": F.col("__hd") + step, "__hx": new_x, "__hy": new_y}
         )
     return out.withColumn(out_col, F.col("__hd")).drop("__hx", "__hy", "__hd")
-
-
-def hilbert_write(
-    df: DataFrame,
-    path: str,
-    col_a: str,
-    col_b: str,
-    bits: int = 16,
-    target_files: int = 16,
-) -> dict:
-    """``zorder_write`` with the Hilbert code as the clustering key —
-    same job shape (one bounds aggregate, one range shuffle, in-file
-    sort, write), strictly better two-key locality per file."""
-    bounds = column_bounds(df, [col_a, col_b])
-    coded = with_hilbert_code(df, col_a, col_b, bounds, bits)
-    (
-        coded.repartitionByRange(target_files, "hilbert")
-        .sortWithinPartitions("hilbert")
-        .drop("hilbert")
-        .write.mode("overwrite")
-        .parquet(path)
-    )
-    return bounds
-
-
-def zorder_write(
-    df: DataFrame,
-    path: str,
-    col_a: str,
-    col_b: str,
-    bits: int = 16,
-    target_files: int = 16,
-) -> dict:
-    """Rewrite ``df`` to ``path`` clustered by the Morton code of
-    (col_a, col_b) — the compaction/clustering maintenance job. One
-    bounds aggregate, one range shuffle on the code (also the
-    small-file compaction step: target_files output files regardless of
-    input fragmentation), an in-file sort so parquet row-group min/max
-    stats are tight on BOTH columns, then the write. Returns the bounds
-    used (the metadata a table format would persist)."""
-    bounds = column_bounds(df, [col_a, col_b])
-    coded = with_morton_code(df, col_a, col_b, bounds, bits)
-    (
-        coded.repartitionByRange(target_files, "morton")
-        .sortWithinPartitions("morton")
-        .drop("morton")
-        .write.mode("overwrite")
-        .parquet(path)
-    )
-    return bounds

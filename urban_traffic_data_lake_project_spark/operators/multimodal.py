@@ -9,9 +9,9 @@ Decode depth, no imaging libraries needed:
   inflate + scanline unfilter (all five filter types), plus an encoder
   (``png_encode_gray``) producing spec-valid CRC'd PNGs — so the round
   trip is oracle-checkable down to the pixel checksum and 8x8 aHash;
-- everything else (mp4, model embeddings): a deterministic fake
-  (``_decode_stub`` / ``extract_features``) standing in for PIL/ffmpeg/a
-  GPU model, keeping batch shapes and schema contracts production-real.
+- everything else (mp4, payloads no header parser recognises): a
+  deterministic fake header decode (``_decode_stub``) standing in for
+  PIL/ffmpeg, keeping batch shapes and schema contracts production-real.
 """
 
 from __future__ import annotations
@@ -27,7 +27,6 @@ from pyspark.sql.types import (
     ArrayType,
     BinaryType,
     DoubleType,
-    FloatType,
     IntegerType,
     LongType,
     StringType,
@@ -62,17 +61,6 @@ def ingest_binary(df: DataFrame, id_col: str, payload_col: str, media_type: str,
         F.lit(None).cast("int").alias("height"),
         F.lit(None).cast("int").alias("duration_ms"),
     )
-
-
-def balance_partitions(df: DataFrame, target_partition_bytes: int = 64 << 20) -> DataFrame:
-    """Payload sizes are skewed (a 4K video next to an icon); rebalance by
-    total bytes so decode batches are even. One count+sum pass then a
-    round-robin repartition — at scale this is what keeps a 1000-executor
-    decode stage from convoying behind one fat partition."""
-    row = df.agg(F.sum("byte_len").alias("total")).first()
-    total = row["total"] or 0
-    n_parts = max(1, int(total / target_partition_bytes))
-    return df.repartition(n_parts)
 
 
 def parse_media_header(payload: bytes) -> dict | None:
@@ -182,34 +170,6 @@ def decode_metadata(df: DataFrame) -> DataFrame:
     return df.mapInPandas(run, schema=MEDIA_SCHEMA)
 
 
-_FEATURE_DIM = 32
-
-FEATURE_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType()),
-        StructField("feature", ArrayType(FloatType())),
-    ]
-)
-
-
-def extract_features(df: DataFrame, dim: int = _FEATURE_DIM) -> DataFrame:
-    """Deterministic fake feature extractor: ``dim`` floats in [-1, 1)
-    expanded from the payload md5 — the stand-in for a real embedding
-    model. Batch shape and output schema match what a GPU-backed
-    extractor would produce, so similarity search composes on top."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = []
-            for p in pdf["payload"]:
-                seed = int.from_bytes(hashlib.md5(p or b"").digest()[:8], "big")
-                rng = np.random.default_rng(seed)
-                feats.append(rng.uniform(-1, 1, dim).astype("float32"))
-            yield pd.DataFrame({"media_id": pdf["media_id"], "feature": feats})
-
-    return df.mapInPandas(run, schema=FEATURE_SCHEMA)
-
-
 BLOCK_FEATURE_SCHEMA = StructType(
     [
         StructField("media_id", LongType()),
@@ -261,76 +221,6 @@ def pixel_block_features(df: DataFrame, grid_h: int = 4, grid_w: int = 4) -> Dat
                 yield pd.DataFrame(out)
 
     return df.mapInPandas(run, schema=BLOCK_FEATURE_SCHEMA)
-
-
-def resize(df: DataFrame, max_side: int = 32) -> DataFrame:
-    """Resize stage: scale width/height so the longer side equals
-    ``max_side`` (aspect preserved, already-smaller media untouched).
-
-    For decodable grayscale/truecolor PNG payloads the transform is REAL:
-    decode (``png_decode_gray``), deterministic nearest-neighbor resample,
-    re-encode (``png_encode_gray``) — payload, byte_len, and metadata all
-    change consistently. Payloads the codec can't decode (jpeg, mp4,
-    palette PNGs) get the metadata arithmetic only, exactly as before; a
-    PIL/ffmpeg build would handle them in this same batch loop."""
-
-    def nn_resize(gray: np.ndarray, out_h: int, out_w: int) -> np.ndarray:
-        h, w = gray.shape
-        rows = (np.arange(out_h) * h) // out_h
-        cols = (np.arange(out_w) * w) // out_w
-        return gray[rows][:, cols]
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            pdf = pdf.copy()
-            widths, heights, payloads, byte_lens = [], [], [], []
-            for p, w0, h0, blen in zip(
-                pdf["payload"], pdf["width"], pdf["height"], pdf["byte_len"]
-            ):
-                dec = png_decode_gray(p)
-                if dec is not None:
-                    w, h, gray = dec
-                    scale = min(max_side / max(w, h), 1.0)
-                    ow, oh = max(int(round(w * scale)), 1), max(int(round(h * scale)), 1)
-                    if (ow, oh) != (w, h):
-                        out = png_encode_gray(nn_resize(gray, oh, ow))
-                        payloads.append(out)
-                        byte_lens.append(len(out))
-                    else:
-                        payloads.append(p)
-                        byte_lens.append(blen)
-                    widths.append(ow)
-                    heights.append(oh)
-                else:  # metadata-only path for formats without a decoder here
-                    if pd.isna(w0) or pd.isna(h0):
-                        widths.append(None if pd.isna(w0) else int(w0))
-                        heights.append(None if pd.isna(h0) else int(h0))
-                    else:
-                        scale = min(max_side / max(int(w0), int(h0), 1), 1.0)
-                        widths.append(int(round(int(w0) * scale)))
-                        heights.append(int(round(int(h0) * scale)))
-                    payloads.append(p)
-                    byte_lens.append(blen)
-            pdf["payload"] = payloads
-            pdf["byte_len"] = byte_lens
-            pdf["width"] = pd.array(widths, dtype="Int32")
-            pdf["height"] = pd.array(heights, dtype="Int32")
-            yield pdf
-
-    return df.mapInPandas(run, schema=MEDIA_SCHEMA)
-
-
-def frame_sample(df: DataFrame, every_ms: int = 1000) -> DataFrame:
-    """Video frame sampling plumbing: one output row per sampled frame
-    offset (real decoder would attach the frame bytes). Pure Spark-side:
-    explode over the sampled offsets computed from duration_ms."""
-    offsets = F.sequence(
-        F.lit(0), F.greatest(F.coalesce(F.col("duration_ms"), F.lit(0)) - 1, F.lit(0)), F.lit(every_ms)
-    )
-    return (
-        df.filter(F.col("media_type").isin("video", "audio"))
-        .select("media_id", F.explode(offsets).alias("frame_offset_ms"))
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -534,7 +424,7 @@ def decode_png_pixels(df: DataFrame) -> DataFrame:
     height, pixels row-major, pix_sum, ahash). Non-PNG / unsupported
     payloads are dropped (a production pipeline would route them to a
     quarantine sink). Embarrassingly parallel; CPU cost is per-byte
-    decode, so feed it through ``balance_partitions``."""
+    decode, so feed it through ``spread_to_parallelism``."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -569,49 +459,6 @@ def _dct_matrix(size: int) -> "np.ndarray":
 
 
 _DCT8 = _dct_matrix(8)
-_DCT32 = _dct_matrix(32)
-
-
-def phash64(gray: "np.ndarray") -> int:
-    """DCT perceptual hash (the pHash family). Images ≥ 32×32 take the
-    canonical path: block-mean resample to 32×32, 2-D orthonormal
-    DCT-II, keep only the top-left 8×8 LOW-FREQUENCY coefficient block
-    (the strong low-pass the hash's robustness comes from); 8×8 inputs
-    take the degenerate full-DCT-8 path (the strict-oracle fixture
-    regime — ``with_phash_expr`` replays it in SQL). Bit i (row-major
-    over the 8×8 block) is set when the coefficient exceeds the MEDIAN
-    of the 63 non-DC coefficients; the DC bit is always 0. Excluding DC
-    and thresholding at the coefficient median makes the hash exactly
-    invariant to uniform brightness offset (DC-only change) and to
-    contrast scaling (coefficients and median scale together), and the
-    low-frequency crop makes it ~4-5× more stable than aHash under
-    smooth LIGHTING GRADIENTS (vignettes / directional light — the
-    classic aHash failure, where every local mean shifts against the
-    global mean; measured in tests/test_multimodal_phash.py). Plain
-    per-pixel noise is NOT its strength — the median threshold leaves
-    razor-thin margins on sparse-spectrum images, where aHash's
-    block-mean pooling wins (measured honestly in the same test). Same
-    signed 64-bit packing as ``ahash64``."""
-    h, w = gray.shape
-    if (h, w) == (8, 8):
-        C = _DCT8 @ gray.astype(np.float64) @ _DCT8.T
-    elif h % 32 == 0 and w % 32 == 0:
-        g = gray.reshape(32, h // 32, 32, w // 32).mean(axis=(1, 3))
-        C = (_DCT32 @ g.astype(np.float64) @ _DCT32.T)[:8, :8]
-    elif h % 8 == 0 and w % 8 == 0:
-        g = gray.reshape(8, h // 8, 8, w // 8).mean(axis=(1, 3))
-        C = _DCT8 @ g @ _DCT8.T
-    else:
-        raise ValueError(f"phash64 requires 8-divisible dims, got {h}x{w}")
-    flat = C.ravel()
-    ref = float(np.median(flat[1:]))
-    raw = 0
-    for i in range(1, 64):
-        if flat[i] > ref:
-            raw |= 1 << i
-    return raw - (1 << 64) if raw >= (1 << 63) else raw
-
-
 def phash_weight_table() -> list[list[tuple[int, float]]]:
     """Flattened DCT weight table: entry c (row-major coefficient index,
     0..63) lists (pixel_index, weight) with weight = D[k,m]·D[l,n]
@@ -649,10 +496,7 @@ def with_phash_expr(df: DataFrame, px_col: str, out_col: str = "phash") -> DataF
     no cross-engine order pinning: Spark uses a Horner fold per 32-bit
     half (shiftleft takes only literal counts; a single Σbit·2^c Horner
     chain would overflow ANSI long arithmetic at bit 63), the oracle
-    sums HUGEINT shifts. The Arrow twin ``phash64`` exists for
-    hash-during-decode pipelines (numpy GEMM association differs at
-    ~1e-14, which can flip near-tie bits — fine for similarity, not for
-    cross-engine hash equality)."""
+    sums HUGEINT shifts."""
     spark = df.sparkSession
     wmat = [[w for _, w in terms] for terms in phash_weight_table()[1:]]
     spec = spark.createDataFrame([(wmat,)], "__pw array<array<double>>")
@@ -689,38 +533,6 @@ def with_phash_expr(df: DataFrame, px_col: str, out_col: str = "phash") -> DataF
 
     raw = F.shiftleft(horner(63, 32), 32).bitwiseOR(F.shiftleft(horner(31, 1), 1))
     return out.withColumn(out_col, raw).drop("__pw", "__pc", "__pmed")
-
-
-PHASH_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType()),
-        StructField("phash", LongType()),
-        StructField("ahash", LongType()),
-    ]
-)
-
-
-def decode_png_phash(df: DataFrame) -> DataFrame:
-    """Perceptual-hash decode stage: inflate + unfilter every PNG payload
-    (same real codec as ``decode_png_pixels``) and emit both perceptual
-    hashes — pHash (DCT) and aHash (spatial mean) — per image. Separate
-    stage so the existing pixel stage's schema/oracle stay untouched."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in ("media_id", "phash", "ahash")}
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                dec = png_decode_gray(payload)
-                if dec is None:
-                    continue
-                _, _, gray = dec
-                out["media_id"].append(mid)
-                out["phash"].append(phash64(gray))
-                out["ahash"].append(ahash64(gray))
-            if out["media_id"]:
-                yield pd.DataFrame(out)
-
-    return df.mapInPandas(run, schema=PHASH_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -843,7 +655,7 @@ def decode_wav_audio(df: DataFrame) -> DataFrame:
     float ops inside the UDF — decide rounding; that keeps the oracle
     comparison bit-deterministic. Non-conforming payloads are dropped
     (quarantine-sink routing in production). Embarrassingly parallel:
-    feed through ``balance_partitions`` / ``spread_to_parallelism``."""
+    feed through ``spread_to_parallelism``."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -881,7 +693,7 @@ def decode_wav_audio(df: DataFrame) -> DataFrame:
 # per-frame Graphic Control Extension carrying the REAL delay, image
 # descriptor, LZW sub-blocks) and a block-walking reader that recovers
 # frame count and per-frame delays from the bytes. Pixel LZW payloads are
-# opaque here (frame_sample needs timing, not pixels) — the walk itself
+# opaque here (the frame index needs timing, not pixels) — the walk itself
 # (extension labels, sub-block chains, trailer) is the real thing.
 # ---------------------------------------------------------------------------
 def gif_encode_frames(delays_cs: list, width: int = 8, height: int = 8) -> bytes:
@@ -992,8 +804,7 @@ def encode_gif_animations(df: DataFrame, id_col: str, delays_col: str) -> DataFr
 def decode_gif_frames(df: DataFrame) -> DataFrame:
     """REAL frame-index decode: walk every GIF payload's block structure
     and emit one row per frame with its wire delay and cumulative start
-    offset — the real-timing upgrade of the metadata-only
-    ``frame_sample``. Non-GIF payloads are dropped."""
+    offset. Non-GIF payloads are dropped."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

@@ -90,12 +90,6 @@ def _norm(a: Column | str, dim: int | None = None) -> Column:
     return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x * x))
 
 
-def cosine_similarity(a: Column, b: Column) -> Column:
-    """Cosine similarity between two array columns (computed in double)."""
-    da, db = _as_double(a), _as_double(b)
-    return _dot(da, db) / (_norm(da) * _norm(db))
-
-
 def grouped_vector_mean(
     df: DataFrame, group_cols: list, vec_col: str, out_col: str = "centroid"
 ) -> DataFrame:
@@ -2024,8 +2018,7 @@ def build_ivf_index(
     # the assignment projection it put sort_addToSorter over janino's
     # 64 KB method limit (observed compile failure -> silent interpreted
     # write at 16 centroids x dim 64). ingest_batch=-1 marks the base
-    # build; appends land in their own epoch partitions, which is what
-    # makes streaming ingest retry-idempotent (see append_ivf_index).
+    # build; append_ivf_index lands appends under ingest_batch=0.
     assigned.withColumn("ingest_batch", F.lit(-1)).repartition(
         "centroid_id"
     ).write.mode("overwrite").partitionBy("centroid_id", "ingest_batch").parquet(
@@ -2147,22 +2140,13 @@ def append_ivf_index(
     index_dir: str,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    ingest_batch: int = 0,
-    idempotent: bool = False,
 ) -> None:
     """Incrementally maintain a persisted IVF index: assign ONLY the new
     batch against the frozen sidecar centroids (no retrain, no recluster,
-    no touch of existing postings) and land it under its own
-    ``ingest_batch`` epoch partitions. Cost is O(batch) regardless of
-    index size — the production ingest path; periodic re-train/re-build
-    handles centroid drift.
-
-    ``idempotent=True`` is the streaming-retry contract (pass the
-    Structured-Streaming batch_id as ``ingest_batch``): the write runs in
-    DYNAMIC partition-overwrite mode, so a retried epoch replaces exactly
-    its own (centroid_id, ingest_batch) partitions and duplicates cannot
-    accumulate — the same path-layout idempotence as
-    ``streaming.sinks.foreach_batch_idempotent``."""
+    no touch of existing postings) and append it under the
+    ``ingest_batch=0`` partitions. Cost is O(batch) regardless of index
+    size — the production ingest path; periodic re-train/re-build
+    handles centroid drift."""
     import json
     import os
 
@@ -2174,16 +2158,13 @@ def append_ivf_index(
     assigned = with_nearest_centroids(c, "vec", "norm", entries, 1, "__cids").select(
         "neighbor_id", "vec", "norm", F.explode("__cids").alias("centroid_id")
     )
-    w = (
-        assigned.withColumn("ingest_batch", F.lit(int(ingest_batch)))
+    (
+        assigned.withColumn("ingest_batch", F.lit(0))
         .repartition("centroid_id")
-        .write.partitionBy("centroid_id", "ingest_batch")
+        .write.mode("append")
+        .partitionBy("centroid_id", "ingest_batch")
+        .parquet(os.path.join(index_dir, "postings"))
     )
-    if idempotent:
-        w = w.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-    else:
-        w = w.mode("append")
-    w.parquet(os.path.join(index_dir, "postings"))
 
 
 def build_ivfpq_index(
@@ -2507,58 +2488,3 @@ def query_int8_index(
         .filter(F.col("rank") <= k)
         .select("query_id", "neighbor_id", "cosine_sim", "rank")
     )
-
-
-def append_int8_index(
-    new_batch: DataFrame,
-    index_dir: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    ingest_batch: int = 0,
-    idempotent: bool = False,
-    meta_cols: tuple = (),
-) -> None:
-    """Incrementally maintain the persisted int8 index: assign ONLY the
-    new batch against the frozen sidecar centroids, quantize with the
-    FROZEN sidecar scale (the production contract — re-fitting the scale
-    on every append would silently re-code nothing but make old and new
-    codes incomparable; a batch value above the frozen max-abs simply
-    yields a code beyond ±127, which the int64 screen handles exactly),
-    and land it under its own ``ingest_batch`` epoch partitions. Cost is
-    O(batch) regardless of index size; ``idempotent=True`` is the
-    streaming-retry contract (dynamic partition overwrite replaces
-    exactly this epoch's partitions), same layout-idempotence as
-    ``append_ivf_index``. Periodic rebuilds handle centroid/scale drift."""
-    import json
-    import os
-
-    with open(os.path.join(index_dir, "centroids.json")) as f:
-        entries = json.load(f)
-    with open(os.path.join(index_dir, "int8.json")) as f:
-        scale = float(json.load(f)["scale"])
-    q8 = lambda v: F.transform(  # noqa: E731
-        v, lambda x: F.floor(x * 127.0 / F.lit(scale) + 0.5).cast("long")
-    )
-    c = spread_to_parallelism(new_batch).select(
-        F.col(id_col).alias("neighbor_id"),
-        *meta_cols,
-        _as_double(F.col(vec_col)).alias("vec"),
-    ).withColumn("norm", _norm(F.col("vec")))
-    assigned = with_nearest_centroids(c, "vec", "norm", entries, 1, "__cids").select(
-        "neighbor_id",
-        *meta_cols,
-        "vec",
-        "norm",
-        q8(F.col("vec")).alias("c8"),
-        F.explode("__cids").alias("centroid_id"),
-    )
-    w = (
-        assigned.withColumn("ingest_batch", F.lit(int(ingest_batch)))
-        .repartition("centroid_id")
-        .write.partitionBy("centroid_id", "ingest_batch")
-    )
-    if idempotent:
-        w = w.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-    else:
-        w = w.mode("append")
-    w.parquet(os.path.join(index_dir, "postings"))

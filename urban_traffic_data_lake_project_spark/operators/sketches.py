@@ -145,7 +145,7 @@ def cm_sketch_table(
     """Count-min sketch of a value column: ``depth`` hash rows x
     ``width`` buckets, cell = number of occurrences hashing there.
     Returns (row, bucket, n) — the mergeable state (cells ADD under
-    union, see ``cm_merge``).
+    union: a grouped ``sum`` of ``n`` merges two sketches).
 
     Scale: one explode to ``depth`` (row, bucket) pairs per input row,
     then a grouped count with map-side partials — the shuffle carries at
@@ -166,11 +166,6 @@ def cm_sketch_table(
         .groupBy("row", "bucket")
         .agg(F.count(F.lit(1)).alias("n"))
     )
-
-
-def cm_merge(sketches: DataFrame) -> DataFrame:
-    """Union-merge of count-min tables (same depth/width): cells add."""
-    return sketches.groupBy("row", "bucket").agg(F.sum("n").alias("n"))
 
 
 def cm_estimate(

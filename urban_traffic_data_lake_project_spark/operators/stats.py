@@ -620,25 +620,6 @@ def grouped_ols(
     return df.groupBy(*group_cols).applyInPandas(fit, schema=out_schema)
 
 
-def grand_aggregate_bundle(df: DataFrame, quantity_col: str, price_col: str, flag_col: str) -> dict:
-    """The reference's full-table statistics bundle (A1-A12) computed with
-    scale-safe primitives: one codegen aggregation pass for the streaming
-    stats + refinement for the high-cardinality exact percentiles."""
-    row = df.agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.avg(quantity_col).alias("avg_q"),
-        F.stddev_samp(quantity_col).alias("std_q"),
-        F.stddev_pop(quantity_col).alias("stdpop_q"),
-        F.median(quantity_col).alias("med_q"),  # low-cardinality: cheap exact
-        F.min(quantity_col).alias("min_q"),
-        F.max(quantity_col).alias("max_q"),
-        F.count(price_col).alias("n_price"),  # NON-NULL count: the rank base for percentiles
-        F.countDistinct(flag_col).alias("n_distinct"),
-    ).first()
-    q25, q75 = exact_percentiles(df, price_col, [0.25, 0.75], n=row["n_price"])
-    return {**row.asDict(), "q25_price": q25, "q75_price": q75}
-
-
 def key_skew_profile(
     df: DataFrame, key_cols: Sequence[str], top_n: int = 20
 ) -> DataFrame:

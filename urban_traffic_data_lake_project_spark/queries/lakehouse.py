@@ -673,9 +673,7 @@ FROM agg, m
 # cumulative size against a target file size, preserving key order so the
 # rewrite keeps the clustering. Output: one row per planned output file
 # with its input-file span, rows, and fill ratio — the artifact a
-# maintenance service would hand to the rewrite job (write_compacted is
-# the executor of this plan; its bytes-per-row sampling is tested in
-# tests/test_sources.py).
+# maintenance service would hand to the rewrite job.
 #
 # Scale shape: the cumulative-sum window runs over the FILE INVENTORY
 # (metadata — thousands of rows when the table is petabytes), not data;
@@ -843,12 +841,9 @@ FROM noised
 # lakehouse_zorder_codes — multi-dimensional clustering codes (the
 # Delta/Iceberg ZORDER BY maintenance job): Morton-interleave of the
 # min-max-scaled (l_partkey, l_suppkey) pair, summarized per top-8-bit
-# z-bucket. The code computation is the EXACT arithmetic
-# operators/layout.zorder_write sorts by — deterministic (no sampling),
-# so the oracle replays it bit-for-bit; the file-skipping effect of the
-# clustered write itself is asserted by
-# tests/test_lakehouse.py::test_zorder_write_clusters_files (sampled
-# range-partition boundaries are not SQL-replayable).
+# z-bucket. The code is the EXACT arithmetic a clustered rewrite sorts
+# by — deterministic (no sampling), so the oracle replays it
+# bit-for-bit.
 # ---------------------------------------------------------------------------
 _Z_BITS = 16
 

@@ -348,9 +348,8 @@ WHERE bit_count(xor(ha.ahash, hb.ahash)) <= {_IMG_MAX_HAMMING}
 # weight table as the DuckDB SQL below — identical literals in identical
 # left-assoc order, so both engines compute bit-identical doubles and
 # every >-vs-median comparison (including exact ties) resolves the same
-# way. The Arrow twin (operators.multimodal.phash64, numpy GEMM) serves
-# hash-during-decode pipelines and is parity/invariance-tested in
-# tests/test_multimodal_phash.py.
+# way. tests/test_multimodal_phash.py pins the expression form to a
+# plain-Python reference and checks its invariances through it.
 # ---------------------------------------------------------------------------
 def _image_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     dec = _pixel_images(spark, sf_dir)

@@ -372,17 +372,14 @@ FROM events GROUP BY user_id
 # stream_bounded_recent_stats — a BOUNDED per-user replay buffer: stats
 # over each user's 5 most recent events (by ts, event_id), the
 # count-bounded frame neither windowed aggregation (time-bounded) nor
-# plain running state (unbounded) expresses. The state-v2 implementation
-# (streaming/tws.py: transformWithStateInPandas + ListState) is the
-# production shape but needs google.protobuf, absent in this container —
-# so the REGISTERED query runs the applyInPandasWithState fallback
-# (streaming/stateful.py::bounded_recent_stats), which maintains the
-# identical buffer in GroupState. Same semantics, same oracle:
-# row_number over (ts DESC, event_id DESC) <= 5 per user.
-# tests/test_stateful_streaming.py runs the tws.py variant whenever the
-# protobuf dependency is importable and asserts plan construction always.
+# plain running state (unbounded) expresses. Runs on
+# applyInPandasWithState (streaming/stateful.py::bounded_recent_stats),
+# which keeps the buffer in GroupState; the state-v2 API
+# (transformWithStateInPandas) needs google.protobuf, which the project
+# does not depend on. Oracle: row_number over (ts DESC, event_id DESC)
+# <= 5 per user.
 # ---------------------------------------------------------------------------
-_TWS_KEEP = 5
+_RECENT_KEEP = 5
 
 
 def _stream_bounded_recent(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -391,7 +388,7 @@ def _stream_bounded_recent(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     stream = sw.read_events_stream(spark, sf_dir)
     out = sw.run_available_now(
-        st.bounded_recent_stats(stream, keep=_TWS_KEEP), spark, mode="update"
+        st.bounded_recent_stats(stream, keep=_RECENT_KEEP), spark, mode="update"
     )
     return out.select(
         "user_id",
@@ -412,7 +409,7 @@ SELECT user_id, count(*) AS n_recent,
        round(avg(value), {ROUND_STAT}) AS avg_recent_value,
        max(ts) AS last_ts,
        date_diff('microsecond', min(ts), max(ts)) AS span_us
-FROM r WHERE rn <= {_TWS_KEEP}
+FROM r WHERE rn <= {_RECENT_KEEP}
 GROUP BY user_id
 """
 

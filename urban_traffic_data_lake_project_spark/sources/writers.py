@@ -1,7 +1,5 @@
 """Write strategies for the 100 TB posture.
 
-- ``write_partitioned``: hive-style partition directories -> partition
-  pruning for date/category predicates (used by the silver layer).
 - ``write_bucketed``: hash-bucketed, per-bucket-sorted tables on the join
   key. Two tables bucketed the same way join with NO shuffle and NO sort —
   the single biggest cost to remove from a recurring big-big join at
@@ -20,18 +18,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
-
-
-def write_partitioned(
-    df: DataFrame,
-    path: str,
-    partition_cols: Sequence[str],
-    mode: str = "overwrite",
-    fmt: str = "parquet",
-) -> None:
-    df.write.mode(mode).partitionBy(*partition_cols).format(fmt).save(path)
+from pyspark.sql import DataFrame
 
 
 def write_bucketed(
@@ -46,140 +33,3 @@ def write_bucketed(
     writer = df.write.mode(mode).bucketBy(n_buckets, *bucket_cols)
     writer = writer.sortBy(*(sort_cols or bucket_cols))
     writer.format(fmt).saveAsTable(table)
-
-
-def write_sorted(
-    df: DataFrame,
-    path: str,
-    sort_cols: Sequence[str],
-    n_files: int | None = None,
-    mode: str = "overwrite",
-    fmt: str = "parquet",
-) -> None:
-    """Range-partitioned, within-partition-sorted layout: rows are range
-    partitioned on ``sort_cols`` (files cover DISJOINT key ranges) and
-    sorted inside each file.
-
-    This is the data layout that makes time/key-range scans cheap at
-    100 TB: parquet stores per-row-group min/max for the sort columns, so
-    a range predicate skips whole files and row groups at planning/scan
-    time instead of reading and filtering them. (The same recipe is the
-    parquet-native stand-in for Delta's OPTIMIZE ZORDER on one key.)"""
-    cols = [df[c] for c in sort_cols]
-    ranged = (
-        df.repartitionByRange(n_files, *cols) if n_files else df.repartitionByRange(*cols)
-    )
-    ranged.sortWithinPartitions(*cols).write.mode(mode).format(fmt).save(path)
-
-
-def _quantile_bucket(col: Column, boundaries: list) -> Column:
-    """Map a value to its quantile bucket [0, len(boundaries)]: the number
-    of boundaries <= value. A per-row expression against a literal
-    boundary array — no join, no shuffle, no global rank."""
-    lit_bounds = F.array(*[F.lit(float(b)) for b in boundaries])
-    return F.size(F.filter(lit_bounds, lambda b: b <= col.cast("double")))
-
-
-def zorder_value(bucket_a: Column, bucket_b: Column, bits: int = 8) -> Column:
-    """Interleave two ``bits``-bit bucket ids into one Morton (Z-order)
-    value — pure shift/mask arithmetic, codegen-friendly."""
-    z = F.lit(0).cast("bigint")
-    for i in range(bits):
-        z = (
-            z
-            + (F.shiftright(bucket_a, i).bitwiseAND(F.lit(1)).cast("bigint") * (1 << (2 * i + 1)))
-            + (F.shiftright(bucket_b, i).bitwiseAND(F.lit(1)).cast("bigint") * (1 << (2 * i)))
-        )
-    return z
-
-
-def write_zordered(
-    df: DataFrame,
-    path: str,
-    col_a: str,
-    col_b: str,
-    n_files: int = 8,
-    bits: int = 8,
-    mode: str = "overwrite",
-    fmt: str = "parquet",
-) -> None:
-    """Two-dimensional data clustering (Delta OPTIMIZE ZORDER, parquet-
-    native): each key is quantile-bucketed into 2^bits ranks via ONE
-    approx-percentile aggregate (sample-based — never a global rank
-    window), the bucket ids are Morton-interleaved, and the data is
-    range-partitioned + sorted on the z-value.
-
-    Result: every file covers a compact rectangle in (col_a, col_b)
-    space, so parquet min/max stats prune files for predicates on EITHER
-    column — the property a single-key sort can't give the second key."""
-    m = 1 << bits
-    probs = [i / m for i in range(1, m)]
-    row = df.agg(
-        F.percentile_approx(col_a, probs).alias("qa"),
-        F.percentile_approx(col_b, probs).alias("qb"),
-    ).first()
-    z = zorder_value(
-        _quantile_bucket(F.col(col_a), row["qa"]),
-        _quantile_bucket(F.col(col_b), row["qb"]),
-        bits,
-    )
-    (
-        df.withColumn("__z", z)
-        .repartitionByRange(n_files, F.col("__z"))
-        .sortWithinPartitions("__z")
-        .drop("__z")
-        .write.mode(mode)
-        .format(fmt)
-        .save(path)
-    )
-
-
-def write_compacted(
-    df: DataFrame,
-    path: str,
-    target_file_bytes: int = 128 << 20,
-    sample_rows: int = 1000,
-    mode: str = "overwrite",
-    fmt: str = "parquet",
-) -> int:
-    """Size-targeted compaction: estimate the serialized bytes-per-row from
-    a bounded sample, repartition so each output file lands near
-    ``target_file_bytes``, then write. Returns the file count.
-
-    This is the small-files defense — a filtered/deduped corpus otherwise
-    inherits its parent's partitioning and writes thousands of tiny files,
-    and at 100 TB the resulting listing/open overhead dominates downstream
-    scans. One count + one bounded sample aggregate + a round-robin
-    repartition; the estimate only needs to be right within ~2x for file
-    sizes to be healthy.
-
-    Row size comes from a SEEDED RANDOM sample aggregated Spark-side (sum
-    of per-field octet lengths), not ``limit()`` + driver repr: the first
-    rows of the first partition are a biased sample on size-ordered data
-    (e.g. a corpus sorted by text length), and Python object overhead has
-    nothing to do with serialized bytes."""
-    total_rows = df.count()
-    if total_rows == 0:
-        df.write.mode(mode).format(fmt).save(path)
-        return 1
-    # per-field serialized size: binary as-is, everything else via its
-    # string form; NULLs count 0
-    size_expr = None
-    for fld in df.schema.fields:
-        col = F.col(fld.name)
-        sz = F.octet_length(col if fld.dataType.typeName() == "binary" else col.cast("string"))
-        sz = F.coalesce(sz, F.lit(0))
-        size_expr = sz if size_expr is None else size_expr + sz
-    fraction = min(1.0, (3.0 * sample_rows) / total_rows)
-    avg_raw = (
-        df.sample(fraction=fraction, seed=42)
-        .limit(sample_rows)
-        .agg(F.avg(size_expr).alias("sz"))
-        .first()["sz"]
-    )
-    # parquet encoding + compression shrink raw field bytes ~3x on mixed
-    # text/numeric rows
-    bytes_per_row = max(1, int((avg_raw or 8.0) / 3))
-    n_files = max(1, round(total_rows * bytes_per_row / target_file_bytes))
-    df.repartition(n_files).write.mode(mode).format(fmt).save(path)
-    return n_files

@@ -1,16 +1,13 @@
-"""Streaming sinks with end-to-end exactly-once semantics on plain
+"""A streaming sink with end-to-end exactly-once semantics on plain
 parquet (no Delta in this container — see SCALING.md's documented
-exclusion): the two production patterns that survive batch retries.
+exclusion), and the versioned table it writes.
 
-- ``foreach_batch_idempotent``: partition-overwrite keyed on the
-  Structured-Streaming ``batch_id``. A retried epoch rewrites the SAME
-  directory, so duplicates cannot accumulate — idempotence comes from
-  the path layout, not from the sink remembering anything.
-- ``foreach_batch_upsert``: MERGE-style keyed upsert implemented as
-  read-current -> union -> keep-latest-per-key -> write-new-version ->
-  atomically advance a version pointer. The Delta-MERGE equivalent on
-  raw parquet; versions make retries safe (a retried batch rebuilds the
-  same next version from the same inputs).
+``foreach_batch_upsert`` is a MERGE-style keyed upsert implemented as
+read-current -> union -> keep-latest-per-key -> write-new-version ->
+atomically advance a version pointer. The Delta-MERGE equivalent on raw
+parquet; versions make retries safe (a retried batch rebuilds the same
+next version from the same inputs), and every committed version stays
+readable (``read_version``, ``version_diff``) until vacuumed.
 """
 
 from __future__ import annotations
@@ -20,20 +17,6 @@ import os
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-
-def foreach_batch_idempotent(out_dir: str):
-    """Sink function for ``writeStream.foreachBatch``: write each epoch
-    to ``out_dir/batch_id=N`` with overwrite. Retried epochs (same
-    batch_id) replace their own output — the standard exactly-once
-    recipe for file sinks without a transaction log."""
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"batch_id={batch_id}")
-        )
-
-    return sink
 
 
 _POINTER = "_VERSION"
@@ -184,30 +167,5 @@ def foreach_batch_upsert(table_dir: str, keys: list[str], order_col: str):
         with open(tmp, "w") as f:
             json.dump({"version": next_v, "batch_id": batch_id}, f)
         os.replace(tmp, os.path.join(table_dir, _POINTER))  # atomic advance
-
-    return sink
-
-
-def foreach_batch_ivf_append(
-    index_dir: str, id_col: str = "vec_id", vec_col: str = "embedding"
-):
-    """Streaming ingest into a persisted IVF index
-    (``operators.similarity.build_ivf_index``): each epoch assigns only
-    its own rows against the frozen sidecar centroids — O(batch) per
-    epoch — and lands under (centroid_id, ingest_batch=batch_id)
-    partitions in DYNAMIC overwrite mode, so a retried epoch replaces
-    exactly its own partitions and duplicates cannot accumulate: the
-    same path-layout idempotence as ``foreach_batch_idempotent``.
-    Readers (``query_ivf_index``) keep pruning on the centroid_id
-    partition level; the epoch level is invisible to them."""
-    from urban_traffic_data_lake_project_spark.operators.similarity import (
-        append_ivf_index,
-    )
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        append_ivf_index(
-            batch_df, index_dir, id_col, vec_col,
-            ingest_batch=batch_id, idempotent=True,
-        )
 
     return sink

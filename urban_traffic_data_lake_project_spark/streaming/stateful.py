@@ -80,11 +80,10 @@ def running_user_stats(stream: DataFrame) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Bounded replay buffer — the GroupState implementation of the operator
-# streaming/tws.py expresses on the state-v2 API (ListState). Kept in the
-# v1 API too because transformWithStateInPandas needs google.protobuf for
-# its state-server protocol, which this container lacks; semantics are
-# identical (the query registry runs whichever is available — this one).
+# Bounded replay buffer, kept in GroupState (the v1 state API): the
+# state-v2 API (transformWithStateInPandas + ListState) needs
+# google.protobuf for its state-server protocol, which the project does
+# not depend on.
 # ---------------------------------------------------------------------------
 RECENT_OUTPUT_SCHEMA = StructType(
     [
