@@ -9,7 +9,8 @@ from pyspark.sql import functions as F
 from urban_traffic_data_lake_project_spark.operators import cleaning as C
 from urban_traffic_data_lake_project_spark.operators import dedup as D
 from urban_traffic_data_lake_project_spark.operators import text as T
-from urban_traffic_data_lake_project_spark.operators.stats import exact_percentiles
+from urban_traffic_data_lake_project_spark.operators import stats as S
+from urban_traffic_data_lake_project_spark.operators.stats import exact_column_quantiles
 
 
 @pytest.fixture(scope="module")
@@ -33,30 +34,34 @@ def test_mode_fill_all_null_column_uses_default(spark):
     assert {r["cat"] for r in out.collect()} == {"Unknown"}
 
 
-def test_exact_percentiles_empty_and_single(spark):
+def test_exact_quantiles_empty_and_single(spark):
     empty = spark.createDataFrame([], "x double")
-    assert exact_percentiles(empty, "x", [0.5]) == [None]
+    assert exact_column_quantiles(empty, ["x"], [0.5]) == {"x": [None]}
     one = spark.createDataFrame([(7.5,)], "x double")
-    assert exact_percentiles(one, "x", [0.25, 0.9]) == [7.5, 7.5]
+    assert exact_column_quantiles(one, ["x"], [0.25, 0.9]) == {"x": [7.5, 7.5]}
 
 
-def test_exact_percentiles_point_mass(spark):
+def test_exact_quantiles_point_mass(spark, monkeypatch):
     # adversarial distribution: one giant point mass. The band collect is
     # distinct (value, count) pairs, so this must resolve without pulling
     # 10k rows to the driver or tripping the widen-retry into an error.
     rows = [(42.0,)] * 10_000 + [(0.0,), (100.0,)]
     df = spark.createDataFrame(rows, "x double").repartition(8)
-    assert exact_percentiles(df, "x", [0.25, 0.5, 0.75], accuracy=100) == [42.0, 42.0, 42.0]
+    monkeypatch.setattr(S, "_ACCURACY", 100)
+    dbg = {}
+    got = exact_column_quantiles(df, ["x"], [0.25, 0.5, 0.75], debug_out=dbg)
+    assert got == {"x": [42.0, 42.0, 42.0]}
+    assert dbg["regime"] == "digest" and dbg["band_rows_collected"] <= 3
 
 
-def test_exact_percentiles_nonnull_rank_base(spark):
+def test_exact_quantiles_nonnull_rank_base(spark):
     # NULLs are excluded from the rank base: n must be the non-null count.
     import numpy as np
 
     vals = [float(v) for v in range(1, 21)]
     rows = [(v,) for v in vals] + [(None,)] * 15
     df = spark.createDataFrame(rows, "x double")
-    got = exact_percentiles(df, "x", [0.25, 0.75])
+    got = exact_column_quantiles(df, ["x"], [0.25, 0.75])["x"]
     want = [float(np.quantile(np.array(vals), p, method="linear")) for p in (0.25, 0.75)]
     assert got == pytest.approx(want)
 

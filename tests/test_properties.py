@@ -12,23 +12,35 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
 from urban_traffic_data_lake_project_spark.operators import cleaning as C
-from urban_traffic_data_lake_project_spark.operators.stats import exact_percentiles
+from urban_traffic_data_lake_project_spark.operators import stats as S
 
 finite_doubles = st.floats(
     min_value=-1e9, max_value=1e9, allow_nan=False, allow_infinity=False
 )
 
 
+# size-gate caps that send every frame down one path: no estimate is at or
+# below -1, and every estimate is at or below Catalyst's Long.MAX_VALUE
+# (what a createDataFrame frame reports)
+_GATE = {"collect": 2**63 - 1, "digest": -1}
+
+
 @settings(max_examples=12, deadline=None, suppress_health_check=list(HealthCheck))
 @given(
     values=st.lists(finite_doubles, min_size=3, max_size=300),
     p=st.sampled_from([0.01, 0.25, 0.5, 0.75, 0.9, 0.99]),
+    regime=st.sampled_from(sorted(_GATE)),
 )
-def test_exact_percentiles_match_numpy(spark, values, p):
+def test_exact_quantiles_match_numpy(spark, values, p, regime):
     df = spark.createDataFrame([(v,) for v in values], "x double")
-    (got,) = exact_percentiles(df, "x", [p], accuracy=50)
+    dbg = {}
+    with pytest.MonkeyPatch.context() as m:
+        m.setattr(S, "_QUANTILE_COLLECT_BYTES", _GATE[regime])
+        m.setattr(S, "_ACCURACY", 50)  # a coarse sketch: large bracket rank error
+        (got,) = S.exact_column_quantiles(df, ["x"], [p], debug_out=dbg)["x"]
+    assert dbg["regime"] == regime
     want = float(np.quantile(np.array(values), p, method="linear"))
-    assert got == pytest.approx(want, rel=1e-12, abs=1e-9), (len(values), p)
+    assert got == pytest.approx(want, rel=1e-12, abs=1e-9), (len(values), p, regime)
 
 
 @settings(max_examples=8, deadline=None, suppress_health_check=list(HealthCheck))

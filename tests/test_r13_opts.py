@@ -20,9 +20,13 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
+from urban_traffic_data_lake_project_spark.operators import stats as S
 from urban_traffic_data_lake_project_spark.operators.stats import (
     exact_column_quantiles,
 )
+
+# no size estimate is at or below it, so the size gate picks the digest path
+DIGEST = -1
 
 
 def _mk_df(spark, n=500):
@@ -38,7 +42,7 @@ def _mk_df(spark, n=500):
 PS = [0.1, 0.25, 0.5, 0.75, 0.9]
 
 
-def test_quantile_small_regime_matches_digest(spark):
+def test_quantile_small_regime_matches_digest(spark, monkeypatch):
     df = _mk_df(spark)
     dbg_s, dbg_d = {}, {}
     pts_s, pts_d = {}, {}
@@ -53,21 +57,18 @@ def test_quantile_small_regime_matches_digest(spark):
         extra_head_aggs=extra(), extras_out=ex_s, points_out=pts_s,
         debug_out=dbg_s,
     )
+    monkeypatch.setattr(S, "_QUANTILE_COLLECT_BYTES", DIGEST)
     big = exact_column_quantiles(
         df, ["a", "b", "c"], PS,
         extra_head_aggs=extra(), extras_out=ex_d, points_out=pts_d,
-        collect_bytes_cap=0,  # force the digest path
         debug_out=dbg_d,
     )
     assert dbg_s["regime"] == "collect" and dbg_d["regime"] == "digest"
+    assert dbg_d["widened"]  # accuracy >> n: some bands miss and are widened
     for c in ("a", "b", "c"):
         assert small[c] == big[c], c  # exact equality, not approx
-        # the digest path may resolve a percentile via the single-column
-        # fallback (pts None) when accuracy >> n; where it HAS points they
-        # must match the collect regime's exactly
-        for ps_, pd_ in zip(pts_s[c], pts_d[c]):
-            if pd_ is not None:
-                assert ps_ == pd_, c
+        # the points behind every quantile match too, widened bands included
+        assert pts_s[c] == pts_d[c], c
     # extras are Spark-aggregated in BOTH regimes (bit-identical), and the
     # 'n_rows' alias must survive (ADVICE r12: prefix filtering dropped it)
     assert ex_s == ex_d
@@ -97,29 +98,27 @@ def test_quantile_collect_regime_keeps_nan_like_percentile(spark):
     assert math.isnan(got[-1]) and not math.isnan(got[0])
 
 
-def test_quantile_extras_alias_not_dropped(spark):
+def test_quantile_extras_alias_not_dropped(spark, monkeypatch):
     # aliases that collide with the internal n_/b_ prefixes must come back
     df = _mk_df(spark, 50)
     ex = {}
+    monkeypatch.setattr(S, "_QUANTILE_COLLECT_BYTES", DIGEST)
     exact_column_quantiles(
         df, ["a"], [0.5],
         extra_head_aggs=[F.count(F.lit(1)).alias("n_1"), F.max("a").alias("b_0x")],
         extras_out=ex,
-        collect_bytes_cap=0,
     )
     assert ex["n_1"] == 50 and ex["b_0x"] == 49.0
 
 
-def test_quantile_band_cap_rebrackets_and_bounds_collect(spark):
+def test_quantile_band_cap_rebrackets_and_bounds_collect(spark, monkeypatch):
     df = _mk_df(spark, 2000)
     dbg = {}
-    capped = exact_column_quantiles(
-        df, ["a", "b"], [0.5],
-        accuracy=100,            # 6*2000/100 = 120 predicted band rows
-        band_rows_cap=60,        # forces the re-bracket pass
-        collect_bytes_cap=0,     # forces the digest path
-        debug_out=dbg,
-    )
+    with monkeypatch.context() as m:
+        m.setattr(S, "_ACCURACY", 100)  # 6*2000/100 = 120 predicted band rows
+        m.setattr(S, "_BAND_ROWS_CAP", 60)  # forces the re-bracket pass
+        m.setattr(S, "_QUANTILE_COLLECT_BYTES", DIGEST)
+        capped = exact_column_quantiles(df, ["a", "b"], [0.5], debug_out=dbg)
     assert dbg["regime"] == "digest"
     assert set(dbg.get("rebracket_accuracy", {})) == {"a", "b"}
     assert all(acc >= 180 for acc in dbg["rebracket_accuracy"].values())
@@ -132,14 +131,23 @@ def test_quantile_band_cap_rebrackets_and_bounds_collect(spark):
     assert capped == truth
 
 
-def test_quantile_band_cap_noop_at_default(spark):
+def test_quantile_band_miss_after_widening_raises(spark, monkeypatch):
+    # a band that still misses its ranks after the one widen-retry is an
+    # error naming the column, p and ranks, never a full-column collect
+    df = _mk_df(spark, 50)
+    monkeypatch.setattr(S, "_QUANTILE_COLLECT_BYTES", DIGEST)
+    monkeypatch.setattr(S, "_band_walk", lambda df, bands: ([(0, [])] * len(bands), 0))
+    with pytest.raises(ValueError, match=r"column 'a' misses rank 24\.\.25 for p=0\.5"):
+        exact_column_quantiles(df, ["a"], [0.5])
+
+
+def test_quantile_band_cap_noop_at_default(spark, monkeypatch):
     # at the default accuracy/cap the re-bracket never fires on bench-scale
     # counts — the digest plan is byte-identical to r12's
     df = _mk_df(spark, 2000)
     dbg = {}
-    exact_column_quantiles(
-        df, ["a", "b"], [0.5], collect_bytes_cap=0, debug_out=dbg
-    )
+    monkeypatch.setattr(S, "_QUANTILE_COLLECT_BYTES", DIGEST)
+    exact_column_quantiles(df, ["a", "b"], [0.5], debug_out=dbg)
     assert "rebracket_accuracy" not in dbg
 
 

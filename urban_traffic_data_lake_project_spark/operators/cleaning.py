@@ -98,12 +98,16 @@ def mode_fill(df: DataFrame, cols: Sequence[str], default: str = "Unknown") -> D
 
 def compute_medians(df: DataFrame, cols: Sequence[str]) -> dict[str, float]:
     """Exact interpolated median per numeric column via the shared-pass
-    percentile refinement (``stats.exact_medians``) — Spark's native
+    refinement (``stats.exact_column_quantiles``); columns with no values
+    are omitted, matching ``F.median`` NULL semantics. Spark's native
     ``median`` buffers every value of every column in one aggregation
     buffer, which is O(n) reducer memory on high-cardinality doubles."""
-    from urban_traffic_data_lake_project_spark.operators.stats import exact_medians
+    from urban_traffic_data_lake_project_spark.operators.stats import (
+        exact_column_quantiles,
+    )
 
-    return exact_medians(df, cols)
+    q = exact_column_quantiles(df, cols, [0.5])
+    return {c: v[0] for c, v in q.items() if v and v[0] is not None}
 
 
 def median_fill(df: DataFrame, cols: Sequence[str]) -> DataFrame:

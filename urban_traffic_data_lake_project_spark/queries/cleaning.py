@@ -357,14 +357,10 @@ def _full_kernel(spark: SparkSession, sf_dir: str) -> DataFrame:
             "measure",
             F.when(col < lo, F.lit(lo)).when(col > hi, F.lit(hi)).otherwise(col),
         )
-        pts = (points.get("measure") or [None, None, None])[1]
-        if pts is not None:
-            x0, x1, frac = pts
-            _clip = lambda v: lo if v < lo else (hi if v > hi else v)  # noqa: E731
-            med_clip = _clip(x0) + (_clip(x1) - _clip(x0)) * frac
-            out = out.na.fill({"measure": med_clip})
-        else:  # pathological band miss: exact refinement on the clipped frame
-            out = C.median_fill(out, ["measure"])
+        x0, x1, frac = points["measure"][1]
+        _clip = lambda v: lo if v < lo else (hi if v > hi else v)  # noqa: E731
+        med_clip = _clip(x0) + (_clip(x1) - _clip(x0)) * frac
+        out = out.na.fill({"measure": med_clip})
     return out.select("k", "ts", "cat", F.round("measure", ROUND_SUM).alias("measure"))
 
 

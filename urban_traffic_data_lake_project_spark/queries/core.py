@@ -176,17 +176,14 @@ GROUP BY o_orderpriority
 # ---------------------------------------------------------------------------
 def _grand_aggs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from urban_traffic_data_lake_project_spark.operators.stats import (
-        bracket_probes,
-        exact_percentiles,
+        exact_column_quantiles,
     )
     from urban_traffic_data_lake_project_spark.queries.base import overlap_jobs
 
     li = load_table(spark, sf_dir, "lineitem")
-    # NOTE: the approx brackets deliberately run as their OWN pass — folding
-    # percentile_approx into this agg regressed 3x: the countDistinct
-    # Expand doubles the rows flowing through the t-digest buffer. The
-    # countDistinct itself also runs separately: mixed with plain aggs it
-    # forces an Expand over every column; alone it reads ONE pruned column.
+    # NOTE: the countDistinct runs as its OWN pass: mixed with plain aggs
+    # it forces an Expand over every column; alone it reads ONE pruned
+    # column.
     base = li.agg(
         F.count(F.lit(1)).alias("n_rows"),
         F.round(F.avg("l_quantity"), ROUND_STAT).alias("avg_qty"),
@@ -197,15 +194,11 @@ def _grand_aggs(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max("l_quantity").alias("max_qty"),
         F.round(F.avg((F.col("l_quantity") > 25).cast("double")), ROUND_STAT).alias("frac_qty_above_25"),
         F.round(F.avg(F.col("l_discount").isNull().cast("double")), ROUND_STAT).alias("null_frac_discount"),
-        # NON-NULL price count: exact_percentiles ranks over non-null values,
-        # so passing n_rows would shift the interpolation if prices had NULLs
-        F.count("l_extendedprice").alias("n_price"),
     )
-    # The four fit passes below are data-independent — overlap them from a
-    # driver thread pool (guide §2.6) instead of running 4 sequential jobs;
+    # The three fit passes below are data-independent — overlap them from a
+    # driver thread pool (guide §2.6) instead of running 3 sequential jobs;
     # each job's result (and therefore the query's output) is unchanged.
-    probes = bracket_probes([0.25, 0.75], 10_000)
-    base_row, n_parts, mode_row, brackets = overlap_jobs(
+    base_row, n_parts, mode_row = overlap_jobs(
         lambda: base.first().asDict(),
         lambda: li.select("l_partkey").distinct().count(),
         # A5 mode (deterministic tiebreak: max count, then min value) — its
@@ -216,17 +209,10 @@ def _grand_aggs(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy(F.col("n").desc(), "l_returnflag")
             .first()
         ),
-        lambda: li.agg(
-            F.percentile_approx(
-                "l_extendedprice", F.lit(probes), F.lit(10_000)
-            ).alias("b")
-        ).first()["b"],
     )
     row = base_row
     row["n_parts"] = n_parts
-    q25, q75 = exact_percentiles(
-        li, "l_extendedprice", [0.25, 0.75], n=row.pop("n_price"), brackets=brackets
-    )
+    q25, q75 = exact_column_quantiles(li, ["l_extendedprice"], [0.25, 0.75])["l_extendedprice"]
     out = {
         **row,
         "q25_price": round(q25, ROUND_STAT),

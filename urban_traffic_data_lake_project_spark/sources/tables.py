@@ -77,12 +77,13 @@ def spread_to_parallelism(df: DataFrame) -> DataFrame:
     return df
 
 
-def persist_for_reuse_if_large(
-    df: DataFrame,
-    env_var: str = "SPARK_GRAFT_REUSE_PERSIST_BYTES",
-    default_bytes: int = 1 << 30,
-    probe_df: DataFrame | None = None,
-) -> DataFrame:
+# Optimizer-estimated size above which a frame read by several passes is
+# persisted (``persist_for_reuse_if_large``, ``logistic_irls``): below it,
+# re-deriving the subtree measured faster than caching it.
+_PERSIST_BYTES = 1 << 30
+
+
+def persist_for_reuse_if_large(df: DataFrame, probe_df: DataFrame | None = None) -> DataFrame:
     """Scale-conditional persist for a frame consumed by MULTIPLE passes
     (r12 verdict item 7): below the optimizer-estimated byte threshold the
     input is returned untouched — at bench scale re-deriving a small
@@ -96,25 +97,19 @@ def persist_for_reuse_if_large(
     consuming action belongs to the caller (the returned plan is lazy).
     The leak is bounded — Spark's ContextCleaner unpersists cached plans
     whose RDDs become unreachable after the caller drops the frame, and
-    MEMORY_AND_DISK blocks are evictable under pressure. The threshold is
-    env-tunable; 0 disables.
+    MEMORY_AND_DISK blocks are evictable under pressure.
 
     ``probe_df``: estimate over THIS (usually upstream, structurally
     simpler) frame instead of ``df`` — the probe runs the optimizer on
     the probed plan driver-side, which for a join-bearing ``df`` costs a
     visible fraction of a bench-scale run (measured ~+6% on
     text_docsim_topk probing the banded-postings join directly)."""
-    import os as _os
-
-    threshold = int(_os.environ.get(env_var, str(default_bytes)))
-    if threshold <= 0:
-        return df
     try:
         probe = probe_df if probe_df is not None else df
         est = int(probe._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
     except Exception:
         return df
-    if est > threshold:
+    if est > _PERSIST_BYTES:
         from pyspark import StorageLevel
 
         return df.persist(StorageLevel.MEMORY_AND_DISK)
