@@ -389,7 +389,7 @@ def test_fa_scoring_imputes_with_fit_medians(spark):
     null_row = spark.createDataFrame([(None, 1.0, 2.0)], "a double, b double, c double")
     got = FA.attach_factor_scores(null_row, model).collect()[0]["Factor_1_score"]
     x = np.array([model.medians[0], 1.0, 2.0])
-    want = float((x - model.mean) @ model.projection())
+    want = ((x - model.mean) @ model.projection()).item()
     assert got == pytest.approx(want, abs=1e-10)
 
 

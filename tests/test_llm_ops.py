@@ -163,22 +163,46 @@ def test_ivf_join_regime_matches_closure_bit_for_bit(spark, sf_dir):
     assert a == b
 
 
+def _spy_scorer_queries(monkeypatch) -> list:
+    """Wrap the one Arrow cosine scorer; the returned list records the
+    query side each call received: collected (ids, Q, qn) arrays in the
+    closure regime, None in the join regime."""
+    seen = []
+    real = S._score_local_topk_arrow
+
+    def spy(cand, queries, *a, **k):
+        seen.append(queries)
+        return real(cand, queries, *a, **k)
+
+    monkeypatch.setattr(S, "_score_local_topk_arrow", spy)
+    return seen
+
+
+def _is_query_arrays(queries, n: int) -> bool:
+    import numpy as np
+
+    if not isinstance(queries, tuple) or len(queries) != 3:
+        return False
+    ids, Q, qn = queries
+    return (
+        all(isinstance(x, np.ndarray) for x in queries)
+        and len(ids) == len(qn) == Q.shape[0] == n
+    )
+
+
 def test_ivf_join_regime_never_collects_query_side(spark, sf_dir, monkeypatch):
-    """In the join regime the closure scorer (the only consumer of a
-    driver-collected query set) must never run, and the query vectors must
-    flow through a JOIN in the physical plan instead."""
+    """In the join regime the scorer must never receive a driver-collected
+    query set, and the query vectors must flow through a JOIN in the
+    physical plan instead."""
     emb = load_table(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < 10)
-
-    def boom(*a, **k):
-        raise AssertionError("closure scorer called in join regime")
-
-    monkeypatch.setattr(S, "_score_local_topk_arrow", boom)
+    seen = _spy_scorer_queries(monkeypatch)
     out = S.cosine_topk_ivf(
         emb, q, k=5, n_centroids=16, nprobe=4, query_regime="join"
     )
     rows = out.collect()
     assert len(rows) > 0
+    assert seen == [None]
     plan = out._jdf.queryExecution().executedPlan().toString()
     # the query-vector column is join output, not a task-closure literal
     assert "__qv" in plan
@@ -189,48 +213,42 @@ def test_ivf_auto_regime_picks_by_budget(spark, sf_dir, monkeypatch):
     with 10 queries)."""
     emb = load_table(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < 10)
-
-    def boom(*a, **k):
-        raise AssertionError("closure scorer called above broadcast budget")
-
-    monkeypatch.setattr(S, "_score_local_topk_arrow", boom)
+    seen = _spy_scorer_queries(monkeypatch)
     out = S.cosine_topk_ivf(
         emb, q, k=5, n_centroids=16, nprobe=4,
         query_regime="auto", query_broadcast_budget=5,
     ).collect()
     assert len(out) > 0
-    monkeypatch.undo()
+    assert seen == [None]
     # and under the default budget, auto must take the closure path
-    joined_boom = lambda *a, **k: (_ for _ in ()).throw(  # noqa: E731
-        AssertionError("join scorer called under broadcast budget")
-    )
-    monkeypatch.setattr(S, "_score_local_topk_arrow_joined", joined_boom)
+    seen.clear()
     out2 = S.cosine_topk_ivf(
         emb, q, k=5, n_centroids=16, nprobe=4, query_regime="auto"
     ).collect()
     assert len(out2) > 0
+    assert len(seen) == 1 and _is_query_arrays(seen[0], 10)
 
 
 def test_persisted_index_join_regime_matches_closure(spark, sf_dir, tmp_path, monkeypatch):
     """query_ivf_index: the join regime must (a) return the identical
-    result as the closure regime, (b) never run the closure scorer, and
-    (c) KEEP the probed-bucket partition pruning (the bucket-id collect is
-    bounded by n_centroids in either regime)."""
+    result as the closure regime, (b) never hand the scorer a collected
+    query set, and (c) KEEP the probed-bucket partition pruning (the
+    bucket-id collect is bounded by n_centroids in either regime)."""
     emb = load_table(spark, sf_dir, "embeddings")
     d = str(tmp_path / "ivf_idx_regime")
     S.build_ivf_index(emb, d, "vec_id", "embedding", n_centroids=16)
     q = emb.filter(F.col("vec_id") < 10)
+    seen = _spy_scorer_queries(monkeypatch)
     a = sorted(
         tuple(r) for r in S.query_ivf_index(
             spark, d, q, k=5, nprobe=4, query_regime="closure"
         ).collect()
     )
-    monkeypatch.setattr(
-        S, "_score_local_topk_arrow",
-        lambda *a, **k: (_ for _ in ()).throw(AssertionError("closure scorer ran")),
-    )
+    assert len(seen) == 1 and _is_query_arrays(seen[0], 10)
+    seen.clear()
     out = S.query_ivf_index(spark, d, q, k=5, nprobe=4, query_regime="join")
     b = sorted(tuple(r) for r in out.collect())
+    assert seen == [None]
     assert a == b
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "centroid_id" in plan and "__qv" in plan

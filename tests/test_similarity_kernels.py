@@ -12,6 +12,7 @@ rounded distances must land on the same 6-dp grid point.
 from __future__ import annotations
 
 import math
+from contextlib import contextmanager
 from decimal import ROUND_HALF_UP, Decimal
 
 import pytest
@@ -151,3 +152,87 @@ def test_pq_adc_topk_matches_reference(spark, emb, vectors):
     assert [g[:3] for g in got] == [r[:3] for r in ref]
     for g, r in zip(got, ref):
         assert math.isclose(g[3], r[3], rel_tol=0.0, abs_tol=1e-12), (g, r)
+
+
+@contextmanager
+def _small_arrow_batches(spark):
+    """Cut every Arrow batch at 7 rows, so a partition streams several
+    batches into the prune fold; restores the previous setting."""
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "7")
+    try:
+        yield
+    finally:
+        spark.conf.set(key, old)
+
+
+def test_partition_local_topk_fold_equals_global_sort(spark):
+    """One partition of 120 rows arrives as 18 batches; folding batch by
+    batch must keep exactly the global top-k, ties to the smaller id."""
+    import pandas as pd
+
+    pdf = pd.DataFrame(
+        [(q, n, float((n * 7 + q) % 5) / 4) for q in range(3) for n in range(40)],
+        columns=["query_id", "neighbor_id", "cosine_sim"],
+    ).sample(frac=1.0, random_state=0)
+    df = spark.createDataFrame(pdf).coalesce(1)
+    order = dict(by=["query_id", "cosine_sim", "neighbor_id"], ascending=[True, False, True])
+    with _small_arrow_batches(spark):
+        got = S._partition_local_topk(df, 5).toPandas().sort_values(**order)
+    want = pdf.sort_values(**order, kind="mergesort").groupby("query_id").head(5)
+    pd.testing.assert_frame_equal(
+        got.reset_index(drop=True), want.reset_index(drop=True)
+    )
+
+
+def test_topk_rows_do_not_depend_on_arrow_batch_size(spark, emb):
+    """cosine_topk and both regimes of cosine_topk_ivf return the same rows
+    (ids, ranks and doubles) whether partitions stream one Arrow batch or
+    many."""
+    q = emb.filter(F.col("vec_id") < 10)
+
+    def run():
+        return [
+            sorted(tuple(r) for r in df.collect())
+            for df in (
+                S.cosine_topk(emb, q, k=5),
+                S.cosine_topk_ivf(emb, q, k=5, query_regime="closure"),
+                S.cosine_topk_ivf(emb, q, k=5, query_regime="join"),
+            )
+        ]
+
+    default = run()
+    with _small_arrow_batches(spark):
+        assert run() == default
+
+
+@pytest.mark.parametrize("scorer", ["float", "int8"])
+@pytest.mark.parametrize(
+    "ids",
+    # string ids: "ab" cast to the collected ids' <U1 dtype reads "a"
+    [(1, 2, 3), ("a", "ab", "c")],
+    ids=["long", "string"],
+)
+def test_closure_scorer_rejects_query_id_outside_collected_set(spark, scorer, ids):
+    """A candidate whose query_id is missing from the collected query set
+    (the middle id, between the two collected ones) must fail loudly,
+    never score against another query's vector."""
+    from pyspark.sql import Row
+
+    q_rows = [
+        Row(query_id=i, __qv=[1.0, 0.0], __qn=1.0, __q8=[127, 0])
+        for i in (ids[0], ids[2])
+    ]
+    id_type = "long" if isinstance(ids[0], int) else "string"
+    cand = spark.createDataFrame(
+        [(qid, n, [1.0, 0.0], 1.0, [127, 0]) for n, qid in enumerate(ids)],
+        f"query_id {id_type}, neighbor_id long, __cv array<double>, __cn double,"
+        " __c8 array<bigint>",
+    )
+    if scorer == "float":
+        out = S._score_local_topk_arrow(cand, S._query_arrays(q_rows), 5, 2)
+    else:
+        out = S._score_local_topk_int8_arrow(cand, q_rows, 5)
+    with pytest.raises(Exception, match="ValueError: candidate query_id absent"):
+        out.collect()

@@ -160,133 +160,206 @@ def quantize_embeddings_int8(
     )
 
 
-def _score_local_topk_arrow(
-    cand: DataFrame,
-    q_rows: list,
-    k: int,
-    dim: int,
-    vec_col: str = "__cv",
-    norm_col: str = "__cn",
-) -> DataFrame:
-    """Candidate scoring + partition-local top-k as ONE vectorized Arrow
-    stage. ``cand`` carries (query_id, neighbor_id, vec_col, norm_col);
-    ``q_rows`` is the bounded driver-collected query set as
-    (query_id, qvec, qnorm) Rows — query vectors travel in the task
-    closure instead of being duplicated onto every candidate row, halving
-    the Arrow transfer, and the dot products run as float64 column sweeps
-    (``acc = acc + q_i * c_i`` from a 0.0 seed — the same left-assoc
-    order as the ``_dot_sql`` unroll, so every double is bit-identical to
-    the SQL form and the DuckDB oracle replay still hash-matches).
-
-    Why not the expression form: 6.1M candidate pairs x a 65-term
-    element_at chain measured ~8 s at the 1M-vector stress even when the
-    stage COMPILES (each element_at pays null+bounds checks), and the
-    unrolled projection is what kept tripping janino's 64 KB method
-    limit. Here there is nothing to JIT and the prune streams each batch,
-    so partition memory stays O(queries * k) like ``_partition_local_topk``
-    (whose fold this reuses — the global rank window still only sees
-    partitions * q * k survivor rows)."""
-    import numpy as np
+def _fold_batches(proj: DataFrame, schema, prune, score=None) -> DataFrame:
+    """The one partition-local prune stage: a ``mapInPandas`` over
+    ``proj`` that scores each non-empty Arrow batch (``score``, optional),
+    prunes it, and folds it into the running survivors. Partition memory
+    stays at the survivor count however many batches stream through, and
+    the result is lossless whenever the global answer is a subset of the
+    union of per-partition survivors (top-k here, k-min in
+    ``sketches._partition_local_kmins``)."""
     import pandas as pd
 
-    from pyspark.sql.types import (
-        ByteType,
-        DoubleType,
-        IntegerType,
-        LongType,
-        ShortType,
-        StructField,
-        StructType,
-    )
+    def per_partition(batches):
+        best: pd.DataFrame | None = None
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            cur = prune(pdf if score is None else score(pdf))
+            best = cur if best is None else prune(pd.concat([best, cur]))
+        if best is not None:
+            yield best
 
-    # id dtypes follow the caller's columns (ADVICE r7: the expression
-    # path preserved arbitrary id types; hardcoding LongType here broke
-    # string ids in the Arrow conversion)
-    qid_type = cand.schema["query_id"].dataType
-    integral_ids = isinstance(
-        qid_type, (LongType, IntegerType, ShortType, ByteType)
-    )
-    if integral_ids:
-        qids = np.array([int(r["query_id"]) for r in q_rows], dtype=np.int64)
-    else:
-        qids = np.asarray([r["query_id"] for r in q_rows])
-    Q = np.array([[float(x) for x in r["__qv"]] for r in q_rows], dtype=np.float64)
-    qn = np.array([float(r["__qn"]) for r in q_rows], dtype=np.float64)
-    # vectorized query_id -> Q-row lookup via searchsorted on the sorted
-    # id list (a python-dict lookup per candidate row was a hidden
-    # serial cost at millions of candidates)
-    sort_idx = np.argsort(qids)
-    qids_sorted = qids[sort_idx]
+    return proj.mapInPandas(per_partition, schema)
 
-    out_schema = StructType(
-        [
-            StructField("query_id", qid_type),
-            StructField("neighbor_id", cand.schema["neighbor_id"].dataType),
-            StructField("cosine_sim", DoubleType()),
-        ]
-    )
+
+def _partition_local_topk(
+    df: DataFrame, k: int, score=None, score_col: str = "cosine_sim"
+) -> DataFrame:
+    """Phase-1 prune for exact top-k: within each partition keep only the k
+    best rows per query in THE top-k order — ``score_col`` DESC, ties to
+    the smaller neighbor_id (``_rank_topk`` is the same order as a
+    window). The global top-k is necessarily a subset of the union of
+    per-partition top-ks, so this is lossless; the exchange feeding the
+    rank window carries <= partitions * queries * k rows instead of
+    |corpus| * q.
+
+    Without ``score`` the stage runs over the three SCALAR columns of an
+    already-scored frame. With ``score`` (batch -> float64 score array)
+    ``df`` carries the scorer's inputs and each batch is scored inside the
+    same Arrow stage before it is pruned."""
+    import pandas as pd
+
+    from pyspark.sql.types import DoubleType, StructField, StructType
 
     def prune(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values(
-            ["query_id", "cosine_sim", "neighbor_id"],
+            ["query_id", score_col, "neighbor_id"],
             ascending=[True, False, True],
             kind="mergesort",
         )
         return pdf.groupby("query_id", sort=False).head(k)
 
-    def per_partition(batches):
-        best: pd.DataFrame | None = None
-        for pdf in batches:
-            n = len(pdf)
-            if n == 0:
-                continue
-            V = np.stack(pdf[vec_col].to_numpy()).astype(np.float64, copy=False)
-            cn = pdf[norm_col].to_numpy(dtype=np.float64)
-            raw_ids = pdf["query_id"].to_numpy()
-            batch_ids = (
-                raw_ids.astype(np.int64, copy=False)
-                if integral_ids
-                else np.asarray(raw_ids, dtype=qids_sorted.dtype)
-            )
-            # searchsorted is only valid when every candidate id exists in
-            # the collected query set (the join invariant: candidates are
-            # born by joining against the probes). Turn a broken invariant
-            # into a loud error instead of a silent wrong-row lookup
-            # (ADVICE r8): clip, then verify the round-trip.
-            pos = np.clip(
-                np.searchsorted(qids_sorted, batch_ids), 0, len(qids_sorted) - 1
-            )
-            if not (qids_sorted[pos] == batch_ids).all():
-                raise ValueError(
-                    "candidate query_id absent from the collected query set"
-                )
-            qidx = sort_idx[pos]
-            Qr = Q[qidx]
-            acc = np.zeros(n, dtype=np.float64)
-            for i in range(dim):
-                acc = acc + Qr[:, i] * V[:, i]
-            den = qn[qidx] * cn
-            # zero-norm vectors (e.g. an all-zero d_coarse prefix under the
-            # Matryoshka screen) get an explicit -2.0 sentinel — below any
-            # cosine and identical on both engines (numpy would emit
-            # NaN/inf here while DuckDB turns x/0.0 into NULL, whose DESC
-            # sort position is a config knob) — same guard as the int8 twin
-            sim = np.where(den > 0, acc / den, -2.0)
-            cur = prune(
-                pd.DataFrame(
-                    {
-                        "query_id": pdf["query_id"].to_numpy(),
-                        "neighbor_id": pdf["neighbor_id"].to_numpy(),
-                        "cosine_sim": sim,
-                    }
-                )
-            )
-            best = cur if best is None else prune(pd.concat([best, cur]))
-        if best is not None:
-            yield best
+    if score is None:
+        proj = df.select("query_id", "neighbor_id", score_col)
+        return _fold_batches(proj, proj.schema, prune)
 
-    proj = cand.select("query_id", "neighbor_id", vec_col, norm_col)
-    return proj.mapInPandas(per_partition, out_schema)
+    def scored(pdf: pd.DataFrame) -> pd.DataFrame:
+        return pd.DataFrame(
+            {
+                "query_id": pdf["query_id"].to_numpy(),
+                "neighbor_id": pdf["neighbor_id"].to_numpy(),
+                score_col: score(pdf),
+            }
+        )
+
+    schema = StructType(
+        [
+            StructField("query_id", df.schema["query_id"].dataType),
+            StructField("neighbor_id", df.schema["neighbor_id"].dataType),
+            StructField(score_col, DoubleType()),
+        ]
+    )
+    return _fold_batches(df, schema, prune, scored)
+
+
+def _rank_topk(
+    df: DataFrame, k: int, score_col: str = "cosine_sim", rank_col: str = "rank"
+) -> DataFrame:
+    """Phase-2 global cut: ``rank_col`` = row_number per query_id in the
+    same order as ``_partition_local_topk``'s prune (``score_col`` DESC,
+    neighbor_id ASC), keeping ranks <= k. One order in both phases is what
+    makes the two-phase top-k exact."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col(score_col).desc(), F.col("neighbor_id").asc()
+    )
+    return df.withColumn(rank_col, F.row_number().over(w)).filter(
+        F.col(rank_col) <= k
+    )
+
+
+def _query_index(ids):
+    """query_id -> row of the driver-collected query arrays, as a
+    vectorized lookup (searchsorted on the sorted ids; a python-dict lookup
+    per candidate row was a hidden serial cost at millions of candidates).
+    Ids keep the caller's type, so string ids work as well as integers.
+
+    searchsorted is only valid when every candidate id exists in the
+    collected query set (the join invariant: candidates are born by
+    joining against the probes). A broken invariant is a loud
+    ``ValueError``, never a silent wrong-row lookup: clip, then verify the
+    round trip against the uncast batch ids (a cast to a shorter string
+    dtype truncates, so the cast ids alone could match the wrong query)."""
+    import numpy as np
+
+    sort_idx = np.argsort(ids)
+    ids_sorted = ids[sort_idx]
+
+    def lookup(batch_ids):
+        pos = np.clip(
+            np.searchsorted(ids_sorted, np.asarray(batch_ids, dtype=ids_sorted.dtype)),
+            0,
+            len(ids_sorted) - 1,
+        )
+        if not (ids_sorted[pos] == batch_ids).all():
+            raise ValueError("candidate query_id absent from the collected query set")
+        return sort_idx[pos]
+
+    return lookup
+
+
+def _query_arrays(q_rows: list):
+    """(ids, Q, qn) numpy arrays of the closure regime's collected
+    (query_id, __qv, __qn) rows — all the float scorer's task closure
+    ever captures (never the Rows, so e.g. their ``__cids`` stay on the
+    driver)."""
+    import numpy as np
+
+    ids = np.asarray([r["query_id"] for r in q_rows])
+    Q = np.array([[float(x) for x in r["__qv"]] for r in q_rows], dtype=np.float64)
+    qn = np.array([float(r["__qn"]) for r in q_rows], dtype=np.float64)
+    return ids, Q, qn
+
+
+def _score_local_topk_arrow(
+    cand: DataFrame,
+    queries,
+    k: int,
+    dim: int,
+    vec_col: str = "__cv",
+    norm_col: str = "__cn",
+) -> DataFrame:
+    """Candidate cosine scoring + partition-local top-k as ONE vectorized
+    Arrow stage, for both query regimes. ``cand`` carries (query_id,
+    neighbor_id, vec_col, norm_col); the query side comes from either
+
+    - ``queries = (ids, Q, qn)`` (closure regime, ``_query_arrays``): the
+      bounded driver-collected query set travels in the task closure
+      instead of being duplicated onto every candidate row, halving the
+      Arrow transfer; or
+    - ``queries = None`` (join regime): ``__qv``/``__qn`` arrive ON the
+      candidate row, joined upstream from the distributed query table, so
+      nothing query-sized is ever driver-collected — the price is the
+      duplicated query vector per candidate row in the exchange.
+
+    Either way the dot products run as float64 column sweeps (``acc = acc
+    + q_i * c_i`` from a 0.0 seed — the same left-assoc order as the
+    ``_dot_sql`` unroll), so both regimes and the SQL form agree on every
+    double and the DuckDB oracle replay still hash-matches.
+
+    Why not the expression form: 6.1M candidate pairs x a 65-term
+    element_at chain measured ~8 s at the 1M-vector stress even when the
+    stage COMPILES (each element_at pays null+bounds checks), and the
+    unrolled projection is what kept tripping janino's 64 KB method
+    limit. Here there is nothing to JIT, and the prune streams each batch
+    (``_partition_local_topk``), so the global rank window still only
+    sees partitions * q * k survivor rows."""
+    import numpy as np
+
+    if queries is None:
+        proj = cand.select(
+            "query_id", "neighbor_id", "__qv", "__qn", vec_col, norm_col
+        )
+
+        def query_side(pdf):
+            Qr = np.stack(pdf["__qv"].to_numpy()).astype(np.float64, copy=False)
+            return Qr, pdf["__qn"].to_numpy(dtype=np.float64)
+
+    else:
+        proj = cand.select("query_id", "neighbor_id", vec_col, norm_col)
+        ids, Q, qn = queries
+        lookup = _query_index(ids)
+
+        def query_side(pdf):
+            qidx = lookup(pdf["query_id"].to_numpy())
+            return Q[qidx], qn[qidx]
+
+    def score(pdf):
+        V = np.stack(pdf[vec_col].to_numpy()).astype(np.float64, copy=False)
+        cn = pdf[norm_col].to_numpy(dtype=np.float64)
+        Qr, qnr = query_side(pdf)
+        acc = np.zeros(len(pdf), dtype=np.float64)
+        for i in range(dim):
+            acc = acc + Qr[:, i] * V[:, i]
+        den = qnr * cn
+        # zero-norm vectors (e.g. an all-zero d_coarse prefix under the
+        # Matryoshka screen) get an explicit -2.0 sentinel — below any
+        # cosine and identical on both engines (numpy would emit NaN/inf
+        # here while DuckDB turns x/0.0 into NULL, whose DESC sort position
+        # is a config knob) — same guard as the int8 scorer
+        return np.where(den > 0, acc / den, -2.0)
+
+    return _partition_local_topk(proj, k, score)
 
 
 # Above this many query vectors, collecting the query side to the driver
@@ -298,109 +371,6 @@ def _score_local_topk_arrow(
 # shipping is still clearly cheaper than duplicating the query vector onto
 # every candidate row.
 QUERY_BROADCAST_BUDGET = 65_536
-
-
-def _score_local_topk_arrow_joined(
-    cand: DataFrame,
-    k: int,
-    dim: int,
-    qvec_col: str = "__qv",
-    qnorm_col: str = "__qn",
-    vec_col: str = "__cv",
-    norm_col: str = "__cn",
-) -> DataFrame:
-    """Large-query-set twin of ``_score_local_topk_arrow`` (r10 verdict
-    item 4): the query vector arrives ON the candidate row — joined
-    upstream from the distributed query table — so NOTHING query-sized is
-    ever driver-collected. The price is the duplicated query vector per
-    candidate row in the exchange; the win is a query set bounded only by
-    cluster memory. Dot products use the SAME left-assoc float64 column
-    sweep as the closure scorer, so both regimes are bit-identical and the
-    DuckDB oracle replay holds for either."""
-    import numpy as np
-    import pandas as pd
-
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
-    out_schema = StructType(
-        [
-            StructField("query_id", cand.schema["query_id"].dataType),
-            StructField("neighbor_id", cand.schema["neighbor_id"].dataType),
-            StructField("cosine_sim", DoubleType()),
-        ]
-    )
-
-    def prune(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(
-            ["query_id", "cosine_sim", "neighbor_id"],
-            ascending=[True, False, True],
-            kind="mergesort",
-        )
-        return pdf.groupby("query_id", sort=False).head(k)
-
-    def per_partition(batches):
-        best: pd.DataFrame | None = None
-        for pdf in batches:
-            n = len(pdf)
-            if n == 0:
-                continue
-            Qr = np.stack(pdf[qvec_col].to_numpy()).astype(np.float64, copy=False)
-            V = np.stack(pdf[vec_col].to_numpy()).astype(np.float64, copy=False)
-            qn = pdf[qnorm_col].to_numpy(dtype=np.float64)
-            cn = pdf[norm_col].to_numpy(dtype=np.float64)
-            acc = np.zeros(n, dtype=np.float64)
-            for i in range(dim):
-                acc = acc + Qr[:, i] * V[:, i]
-            den = qn * cn
-            sim = np.where(den > 0, acc / den, -2.0)
-            cur = prune(
-                pd.DataFrame(
-                    {
-                        "query_id": pdf["query_id"].to_numpy(),
-                        "neighbor_id": pdf["neighbor_id"].to_numpy(),
-                        "cosine_sim": sim,
-                    }
-                )
-            )
-            best = cur if best is None else prune(pd.concat([best, cur]))
-        if best is not None:
-            yield best
-
-    proj = cand.select("query_id", "neighbor_id", qvec_col, qnorm_col, vec_col, norm_col)
-    return proj.mapInPandas(per_partition, out_schema)
-
-
-def _partition_local_topk(scored: DataFrame, k: int) -> DataFrame:
-    """Phase-1 prune for exact top-k: within each partition keep only the k
-    best (cosine_sim DESC, neighbor_id ASC) rows per query — the global
-    top-k is necessarily a subset of the union of per-partition top-ks,
-    so this is lossless. Runs as an Arrow ``mapInPandas`` over the three
-    SCALAR columns only (the vectors are already reduced to a similarity
-    by then); each batch is pruned as it streams, so partition memory is
-    O(queries * k). The exchange feeding the global rank window then
-    carries <= partitions * queries * k rows instead of |corpus| * q."""
-    import pandas as pd
-
-    cols = ["query_id", "neighbor_id", "cosine_sim"]
-    proj = scored.select(*cols)
-
-    def prune(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(
-            ["query_id", "cosine_sim", "neighbor_id"],
-            ascending=[True, False, True],
-            kind="mergesort",
-        )
-        return pdf.groupby("query_id", sort=False).head(k)
-
-    def per_partition(batches):
-        best: pd.DataFrame | None = None
-        for pdf in batches:
-            cur = prune(pdf)
-            best = cur if best is None else prune(pd.concat([best, cur]))
-        if best is not None:
-            yield best
-
-    return proj.mapInPandas(per_partition, proj.schema)
 
 
 def cosine_topk(
@@ -450,14 +420,7 @@ def cosine_topk(
         )
     )
     pruned = _partition_local_topk(scored, k)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        pruned.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine_sim", "rank")
-    )
+    return _rank_topk(pruned, k).select("query_id", "neighbor_id", "cosine_sim", "rank")
 
 
 def hard_negatives(
@@ -503,14 +466,7 @@ def hard_negatives(
         / (_norm(F.col("__qv")) * _norm(F.col("__cv"))),
     )
     pruned = _partition_local_topk(scored, k)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        pruned.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine_sim", "rank")
-    )
+    return _rank_topk(pruned, k).select("query_id", "neighbor_id", "cosine_sim", "rank")
 
 
 def embedding_bucket_drift(
@@ -639,15 +595,9 @@ def cosine_topk_coarse_rerank(
             ),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("neighbor_id").asc()
-    )
-    survivors = (
-        _partition_local_topk(coarse, depth)
-        .withColumn("__crank", F.row_number().over(w))
-        .filter(F.col("__crank") <= depth)
-        .select("query_id", "neighbor_id")
-    )
+    survivors = _rank_topk(
+        _partition_local_topk(coarse, depth), depth, rank_col="__crank"
+    ).select("query_id", "neighbor_id")
     # stage 2: exact cosine on the q*depth survivors only. Survivors are
     # bounded (q * depth rows) -> broadcast them against the corpus; the
     # full-dim arithmetic never runs on non-candidates.
@@ -660,11 +610,7 @@ def cosine_topk_coarse_rerank(
             / (_norm("__qv", dim) * _norm("__cv", dim)),
         )
     )
-    return (
-        rerank.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine_sim", "rank")
-    )
+    return _rank_topk(rerank, k).select("query_id", "neighbor_id", "cosine_sim", "rank")
 
 
 def cosine_topk_ivf_coarse_rerank(
@@ -756,14 +702,11 @@ def cosine_topk_ivf_coarse_rerank(
     cand = assigned.join(F.broadcast(probes), "centroid_id").filter(
         F.col("neighbor_id") != F.col("query_id")
     )
-    coarse = _score_local_topk_arrow(cand, q_rows, depth, d_coarse, "__cv", "__ccn")
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("neighbor_id").asc()
+    coarse = _score_local_topk_arrow(
+        cand, _query_arrays(q_rows), depth, d_coarse, "__cv", "__ccn"
     )
-    survivors = (
-        coarse.withColumn("__crank", F.row_number().over(w))
-        .filter(F.col("__crank") <= depth)
-        .select("query_id", "neighbor_id")
+    survivors = _rank_topk(coarse, depth, rank_col="__crank").select(
+        "query_id", "neighbor_id"
     )
 
     # stage 3: exact full-dim cosine on the bounded survivor set
@@ -777,11 +720,7 @@ def cosine_topk_ivf_coarse_rerank(
             _dot("__qv", "__cv", dim) / (_norm("__qv", dim) * _norm("__cv", dim)),
         )
     )
-    return (
-        rerank.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine_sim", "rank")
-    )
+    return _rank_topk(rerank, k).select("query_id", "neighbor_id", "cosine_sim", "rank")
 
 
 def cosine_topk_ivf_int8_rerank(
@@ -877,13 +816,8 @@ def cosine_topk_ivf_int8_rerank(
         F.col("neighbor_id") != F.col("query_id")
     )
     screened = _score_local_topk_int8_arrow(cand, q_rows, depth)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("q_sim").desc(), F.col("neighbor_id").asc()
-    )
-    survivors = (
-        screened.withColumn("__qrank", F.row_number().over(w))
-        .filter(F.col("__qrank") <= depth)
-        .select("query_id", "neighbor_id")
+    survivors = _rank_topk(screened, depth, "q_sim", "__qrank").select(
+        "query_id", "neighbor_id"
     )
 
     rerank = (
@@ -894,85 +828,38 @@ def cosine_topk_ivf_int8_rerank(
             _dot("__qv", "__cv", dim) / (_norm("__qv", dim) * _norm("__cv", dim)),
         )
     )
-    w2 = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        rerank.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine_sim", "rank")
-    )
+    return _rank_topk(rerank, k).select("query_id", "neighbor_id", "cosine_sim", "rank")
 
 
 def _score_local_topk_int8_arrow(
     cand: DataFrame, q_rows: list, depth: int
 ) -> DataFrame:
-    """Quantized-screen twin of ``_score_local_topk_arrow``: scores int64
-    code dots (exact — no accumulation-order hazard) normalized by the
-    code-space norms, pruning each partition to ``depth`` rows per query
-    as batches stream. Candidate rows carry only (ids, int8 codes); the
-    query codes travel in the task closure."""
+    """Quantized screen: the int8 counterpart of ``_score_local_topk_arrow``
+    in the closure regime. Scores int64 code dots (exact — no
+    accumulation-order hazard) normalized by the code-space norms, pruning
+    each partition to ``depth`` rows per query as batches stream.
+    Candidate rows carry only (ids, int8 codes); the query codes travel in
+    the task closure."""
     import numpy as np
-    import pandas as pd
 
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
-    qid_type = cand.schema["query_id"].dataType
-    qids = np.asarray([r["query_id"] for r in q_rows])
     Q = np.array([[int(x) for x in r["__q8"]] for r in q_rows], dtype=np.int64)
     qn = np.sqrt((Q * Q).sum(axis=1).astype(np.float64))
-    sort_idx = np.argsort(qids)
-    qids_sorted = qids[sort_idx]
+    lookup = _query_index(np.asarray([r["query_id"] for r in q_rows]))
 
-    out_schema = StructType(
-        [
-            StructField("query_id", qid_type),
-            StructField("neighbor_id", cand.schema["neighbor_id"].dataType),
-            StructField("q_sim", DoubleType()),
-        ]
-    )
-
-    def prune(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(
-            ["query_id", "q_sim", "neighbor_id"],
-            ascending=[True, False, True],
-            kind="mergesort",
-        )
-        return pdf.groupby("query_id", sort=False).head(depth)
-
-    def per_partition(batches):
-        best: pd.DataFrame | None = None
-        for pdf in batches:
-            n = len(pdf)
-            if n == 0:
-                continue
-            V = np.stack(pdf["__c8"].to_numpy()).astype(np.int64, copy=False)
-            qidx = sort_idx[np.searchsorted(
-                qids_sorted, np.asarray(pdf["query_id"].to_numpy(),
-                                        dtype=qids_sorted.dtype))]
-            dots = (V * Q[qidx]).sum(axis=1)
-            cn = np.sqrt((V * V).sum(axis=1).astype(np.float64))
-            den = qn[qidx] * cn
-            # zero-norm code vectors (every |x| < A/254) get an explicit
-            # -2.0 sentinel — below any cosine, and identical on both
-            # engines (Spark numpy would give -inf here but DuckDB turns
-            # x/0.0 into NULL, whose DESC sort position is a config knob)
-            sim = np.where(den > 0, dots.astype(np.float64) / den, -2.0)
-            cur = prune(
-                pd.DataFrame(
-                    {
-                        "query_id": pdf["query_id"].to_numpy(),
-                        "neighbor_id": pdf["neighbor_id"].to_numpy(),
-                        "q_sim": sim,
-                    }
-                )
-            )
-            best = cur if best is None else prune(pd.concat([best, cur]))
-        if best is not None:
-            yield best
+    def score(pdf):
+        V = np.stack(pdf["__c8"].to_numpy()).astype(np.int64, copy=False)
+        qidx = lookup(pdf["query_id"].to_numpy())
+        dots = (V * Q[qidx]).sum(axis=1)
+        cn = np.sqrt((V * V).sum(axis=1).astype(np.float64))
+        den = qn[qidx] * cn
+        # zero-norm code vectors (every |x| < A/254) get an explicit
+        # -2.0 sentinel — below any cosine, and identical on both
+        # engines (Spark numpy would give -inf here but DuckDB turns
+        # x/0.0 into NULL, whose DESC sort position is a config knob)
+        return np.where(den > 0, dots.astype(np.float64) / den, -2.0)
 
     proj = cand.select("query_id", "neighbor_id", "__c8")
-    return proj.mapInPandas(per_partition, out_schema)
+    return _partition_local_topk(proj, depth, score, "q_sim")
 
 
 def l2_topk(
@@ -1014,18 +901,11 @@ def l2_topk(
         )
     scored = c.crossJoin(F.broadcast(q)).withColumn("cosine_sim", -dist)
     pruned = _partition_local_topk(scored, k)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        pruned.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            (-F.col("cosine_sim")).alias("l2_sq"),
-            "rank",
-        )
+    return _rank_topk(pruned, k).select(
+        "query_id",
+        "neighbor_id",
+        (-F.col("cosine_sim")).alias("l2_sq"),
+        "rank",
     )
 
 
@@ -1395,28 +1275,21 @@ def cosine_topk_ivf(
         cand = assigned.join(F.broadcast(probes), "centroid_id").filter(
             F.col("neighbor_id") != F.col("query_id")
         )
-        pruned = _score_local_topk_arrow(cand, q_rows, k, dim, "__cv", "__cn")
+        pruned = _score_local_topk_arrow(cand, _query_arrays(q_rows), k, dim)
     else:
         probes = probed.select("query_id", F.explode("__cids").alias("centroid_id"))
         # large-query regime: NO driver collect of the query side. The
         # probe table joins on centroid_id (AQE picks the strategy + skew
         # splits), then the query vectors join onto the candidates by
-        # query_id and the joined Arrow scorer computes the identical
-        # left-assoc dots.
+        # query_id and the same Arrow scorer reads them off the row
+        # (queries=None) for the identical left-assoc dots.
         qv_tab = probed.select("query_id", "__qv", "__qn")
         cand = assigned.join(probes, "centroid_id").filter(
             F.col("neighbor_id") != F.col("query_id")
         )
         cand = cand.join(qv_tab, "query_id")
-        pruned = _score_local_topk_arrow_joined(cand, k, dim)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        pruned.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine_sim", "rank")
-    )
+        pruned = _score_local_topk_arrow(cand, None, k, dim)
+    return _rank_topk(pruned, k).select("query_id", "neighbor_id", "cosine_sim", "rank")
 
 
 # ---------------------------------------------------------------------------
@@ -1618,18 +1491,11 @@ def ivfpq_topk(
         (-F.round(dist, 6)).alias("cosine_sim"),
     )
     pruned = _partition_local_topk(scored, k_top)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        pruned.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k_top)
-        .select(
-            "query_id",
-            F.col("neighbor_id").alias("corpus_id"),
-            (-F.col("cosine_sim")).alias("adc_dist"),
-            "rank",
-        )
+    return _rank_topk(pruned, k_top).select(
+        "query_id",
+        F.col("neighbor_id").alias("corpus_id"),
+        (-F.col("cosine_sim")).alias("adc_dist"),
+        "rank",
     )
 
 
@@ -1814,18 +1680,11 @@ def ivfpq_residual_topk(
         (-F.round(dist, 6)).alias("cosine_sim"),
     )
     pruned = _partition_local_topk(scored, k_top)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        pruned.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k_top)
-        .select(
-            "query_id",
-            F.col("neighbor_id").alias("corpus_id"),
-            (-F.col("cosine_sim")).alias("adc_dist"),
-            "rank",
-        )
+    return _rank_topk(pruned, k_top).select(
+        "query_id",
+        F.col("neighbor_id").alias("corpus_id"),
+        (-F.col("cosine_sim")).alias("adc_dist"),
+        "rank",
     )
 
 
@@ -1950,18 +1809,11 @@ def pq_adc_topk(
         (-F.round(dist, 6)).alias("cosine_sim"),
     )
     pruned = _partition_local_topk(scored, k_top)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        pruned.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k_top)
-        .select(
-            "query_id",
-            F.col("neighbor_id").alias("corpus_id"),
-            (-F.col("cosine_sim")).alias("adc_dist"),
-            "rank",
-        )
+    return _rank_topk(pruned, k_top).select(
+        "query_id",
+        F.col("neighbor_id").alias("corpus_id"),
+        (-F.col("cosine_sim")).alias("adc_dist"),
+        "rank",
     )
 
 
@@ -2104,11 +1956,13 @@ def query_ivf_index(
         cand = _postings(probed).join(F.broadcast(probes), "centroid_id").filter(
             F.col("neighbor_id") != F.col("query_id")
         )
-        pruned = _score_local_topk_arrow(cand, q_rows, k, dim, "vec", "norm")
+        pruned = _score_local_topk_arrow(
+            cand, _query_arrays(q_rows), k, dim, "vec", "norm"
+        )
     else:
         # large-query regime: query vectors join onto the probed postings;
-        # nothing query-sized is driver-collected (see
-        # _score_local_topk_arrow_joined) — only the bounded distinct
+        # nothing query-sized is driver-collected (the scorer reads the
+        # query side off the row, queries=None) — only the bounded distinct
         # bucket list (<= n_centroids rows in either regime)
         probes = probed_df.select(
             "query_id", F.explode("__cids").alias("centroid_id")
@@ -2122,17 +1976,8 @@ def query_ivf_index(
             F.col("neighbor_id") != F.col("query_id")
         )
         cand = cand.join(qv_tab, "query_id")
-        pruned = _score_local_topk_arrow_joined(
-            cand, k, dim, vec_col="vec", norm_col="norm"
-        )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        pruned.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine_sim", "rank")
-    )
+        pruned = _score_local_topk_arrow(cand, None, k, dim, "vec", "norm")
+    return _rank_topk(pruned, k).select("query_id", "neighbor_id", "cosine_sim", "rank")
 
 
 def append_ivf_index(
@@ -2311,18 +2156,11 @@ def query_ivfpq_index(
         (-F.round(dist, 6)).alias("cosine_sim"),
     )
     pruned = _partition_local_topk(scored, k_top)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        pruned.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k_top)
-        .select(
-            "query_id",
-            F.col("neighbor_id").alias("corpus_id"),
-            (-F.col("cosine_sim")).alias("adc_dist"),
-            "rank",
-        )
+    return _rank_topk(pruned, k_top).select(
+        "query_id",
+        F.col("neighbor_id").alias("corpus_id"),
+        (-F.col("cosine_sim")).alias("adc_dist"),
+        "rank",
     )
 
 
@@ -2461,13 +2299,8 @@ def query_int8_index(
         .filter(F.col("neighbor_id") != F.col("query_id"))
     )
     screened = _score_local_topk_int8_arrow(cand, q_rows, depth)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("q_sim").desc(), F.col("neighbor_id").asc()
-    )
-    survivors = (
-        screened.withColumn("__qrank", F.row_number().over(w))
-        .filter(F.col("__qrank") <= depth)
-        .select("query_id", "neighbor_id")
+    survivors = _rank_topk(screened, depth, "q_sim", "__qrank").select(
+        "query_id", "neighbor_id"
     )
 
     rerank = (
@@ -2480,11 +2313,4 @@ def query_int8_index(
             _dot("__qv", "__cv", dim) / (_norm("__qv", dim) * _norm("__cv", dim)),
         )
     )
-    w2 = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        rerank.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine_sim", "rank")
-    )
+    return _rank_topk(rerank, k).select("query_id", "neighbor_id", "cosine_sim", "rank")

@@ -413,7 +413,8 @@ def hist_quantiles(
 # Scale: the global k-minimum set per group is a subset of the union of
 # per-partition k-minimum sets, so a partition-local Arrow prune caps the
 # shuffle at partitions * groups * k rows regardless of input cardinality
-# (the same lossless two-phase shape as similarity._partition_local_topk);
+# (the same lossless two-phase shape and the same batch fold,
+# similarity._fold_batches, as similarity._partition_local_topk);
 # the Python path sees only (group, bigint-hash) columns, never values.
 # ---------------------------------------------------------------------------
 _KMV_POW = float(1 << _HASH_BITS)  # hash values are uniform in [0, 2^60)
@@ -426,6 +427,10 @@ def _partition_local_kmins(
     group — lossless for the global per-group k-min set. Batches stream
     through with O(groups * k) partition memory."""
     import pandas as pd
+
+    from urban_traffic_data_lake_project_spark.operators.similarity import (
+        _fold_batches,
+    )
 
     gc = list(group_cols)
 
@@ -444,15 +449,7 @@ def _partition_local_kmins(
         )
         return pdf.groupby(gc, sort=False, dropna=False).head(k) if gc else pdf.head(k)
 
-    def per_partition(batches):
-        best: pd.DataFrame | None = None
-        for pdf in batches:
-            cur = prune(pdf)
-            best = cur if best is None else prune(pd.concat([best, cur]))
-        if best is not None:
-            yield best
-
-    return proj.mapInPandas(per_partition, proj.schema)
+    return _fold_batches(proj, proj.schema, prune)
 
 
 def kmv_sketch_table(
