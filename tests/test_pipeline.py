@@ -89,9 +89,10 @@ def test_silver_is_one_file_per_table(layers):
 def nan_seed_silver(spark):
     """Bronze + silver at 200 rows on fixture seed 5, whose weather
     visibility_m parses a NaN into the quantile columns; records the
-    persisted RDD count around run_silver. Runs at the session default of
-    32 shuffle partitions (this test session uses 8): a quantile path that
-    drops NaN columns onto the t-digest misses its band there."""
+    persisted RDD count and the Spark jobs submitted around run_silver.
+    Runs at the session default of 32 shuffle partitions (this test
+    session uses 8): a quantile path that drops NaN columns onto the
+    t-digest misses its band there."""
     d = tempfile.mkdtemp(prefix="medallion_nan_")
     paths = P.LayerPaths(d)
     jsc = spark.sparkContext._jsc
@@ -100,17 +101,40 @@ def nan_seed_silver(spark):
     try:
         P.run_bronze(spark, paths, n_rows=200, seed=5)
         before = jsc.getPersistentRDDs().size()
+        first_job = jsc.sc().dagScheduler().nextJobId()
         P.run_silver(spark, paths)
+        n_jobs = jsc.sc().dagScheduler().nextJobId() - first_job
         after = jsc.getPersistentRDDs().size()
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", shuffle_partitions)
-    yield paths, before, after
+    yield paths, before, after, n_jobs
     shutil.rmtree(d, ignore_errors=True)
 
 
 def test_run_silver_releases_its_cache(nan_seed_silver):
-    _, before, after = nan_seed_silver
+    _, before, after, _ = nan_seed_silver
     assert after == before
+
+
+def test_run_silver_job_floor(nan_seed_silver):
+    # per table: one aggregate for modes and NULL fractions, one quantile
+    # collect, the write, and the stages AQE submits as jobs of their own
+    # (the step-by-step fit submitted 26 here)
+    n_jobs = nan_seed_silver[3]
+    assert n_jobs <= 14, f"run_silver submitted {n_jobs} jobs"
+
+
+@pytest.mark.parametrize(
+    "ddl,generate",
+    [("TRAFFIC_BRONZE_DDL", "generate_traffic_raw"), ("WEATHER_BRONZE_DDL", "generate_weather_raw")],
+)
+def test_bronze_ddl_matches_fixture_generator(spark, ddl, generate):
+    # the CSV reader maps a declared schema onto the columns by position
+    from urban_traffic_data_lake_project_spark.plans import fixtures
+
+    declared = spark.createDataFrame([], getattr(P, ddl)).schema
+    generated = getattr(fixtures, generate)(spark, 1).schema
+    assert [(f.name, f.dataType) for f in declared] == [(f.name, f.dataType) for f in generated]
 
 
 def test_silver_with_nan_visibility_is_clean(spark, nan_seed_silver):

@@ -176,6 +176,7 @@ def _run_counting_jobs(spark, fn) -> int:
         ("sim_int8_index", 10),               # r12: 12 (merged probe collect)
         ("fa_scores_summary", 7),             # r12: 10 (quantile small regime)
         ("sketch_quantile_kmv", 3),           # r12: 8  (quantile small regime)
+        ("clean_full_kernel", 6),             # 9 before the fused fit (F.mode agg)
     ],
 )
 def test_fit_path_job_count_floor(spark, sf_dir, name, max_jobs):

@@ -225,11 +225,15 @@ def test_closure_scorer_rejects_query_id_outside_collected_set(spark, scorer, id
         for i in (ids[0], ids[2])
     ]
     id_type = "long" if isinstance(ids[0], int) else "string"
+    # one partition, so the failing task has no sibling tasks: Spark kills
+    # those asynchronously, and on a loaded host a kill still running when
+    # the next case's job starts can fail one of its tasks with
+    # java.nio.channels.CancelledKeyException before the ValueError lands
     cand = spark.createDataFrame(
         [(qid, n, [1.0, 0.0], 1.0, [127, 0]) for n, qid in enumerate(ids)],
         f"query_id {id_type}, neighbor_id long, __cv array<double>, __cn double,"
         " __c8 array<bigint>",
-    )
+    ).coalesce(1)
     if scorer == "float":
         out = S._score_local_topk_arrow(cand, S._query_arrays(q_rows), 5, 2)
     else:

@@ -11,12 +11,17 @@ Reference parity map (file:line into /root/reference):
 - median_fill             <- clean_traffic.py:128-131 fillna(median)
 - variance_filter         <- factor_analysis.py:184-185 (std > 0.01 columns)
 
+- fit_clean               <- clean_traffic.py:89-131 (fill -> drop -> clip -> fill)
+
 Scale design: every "fit statistics, then transform rows" operator computes
 ALL its statistics in ONE aggregate pass (a single job producing one tiny
 row, collected to the driver and folded back in as literals). The transform
 pass is then a pure narrow projection — no shuffle, no second scan beyond
 the one Catalyst already plans. Pandas does the same thing eagerly per
-column; here each helper is O(1) jobs regardless of column count.
+column; here each helper is O(1) jobs regardless of column count, and
+``fit_clean`` fits a whole silver table in two jobs. Modes are
+``F.mode``, which holds one map of distinct values per column in the final
+aggregation task: every caller passes low-cardinality categoricals.
 
 Determinism: pandas `drop_duplicates` keeps the *first* row in file order;
 Spark has no row order, so ``dedup_by_key`` takes an explicit tiebreak and
@@ -27,6 +32,7 @@ takes `[0]`, i.e. the smallest — same semantics).
 
 from __future__ import annotations
 
+import math
 from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, Window
@@ -34,6 +40,7 @@ from pyspark.sql import functions as F
 
 from urban_traffic_data_lake_project_spark.functions import parse_timestamp_multi
 from urban_traffic_data_lake_project_spark.functions.core import DEFAULT_TS_FORMATS
+from urban_traffic_data_lake_project_spark.operators.stats import exact_column_quantiles
 
 
 def dedup_by_key(df: DataFrame, keys: Sequence[str], tiebreak: Sequence[str]) -> DataFrame:
@@ -75,18 +82,14 @@ def coerce_numeric(df: DataFrame, cols: Sequence[str]) -> DataFrame:
 
 
 def compute_modes(df: DataFrame, cols: Sequence[str]) -> dict[str, str]:
-    """Deterministic mode per string column (max count, ties -> min value),
-    all columns in ONE pass: unpivot -> grouped count -> per-column argmax."""
+    """Deterministic mode per string column (max count, ties -> min value;
+    all-NULL columns omitted), all columns in ONE ``F.mode`` aggregate. Its
+    memory bound is one map of distinct values per column in the final
+    aggregation task: callers pass low-cardinality categoricals only."""
     if not cols:
         return {}
-    stack_args = ", ".join(f"'{c}', {c}" for c in cols)
-    stacked = df.select(
-        F.expr(f"stack({len(cols)}, {stack_args}) AS (__col, __val)")
-    ).filter(F.col("__val").isNotNull())
-    counted = stacked.groupBy("__col", "__val").count()
-    w = Window.partitionBy("__col").orderBy(F.col("count").desc(), F.col("__val").asc())
-    top = counted.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") == 1)
-    return {r["__col"]: r["__val"] for r in top.select("__col", "__val").collect()}
+    row = df.agg(*[F.mode(c, deterministic=True) for c in cols]).first()
+    return {c: row[i] for i, c in enumerate(cols) if row[i] is not None}
 
 
 def mode_fill(df: DataFrame, cols: Sequence[str], default: str = "Unknown") -> DataFrame:
@@ -102,10 +105,6 @@ def compute_medians(df: DataFrame, cols: Sequence[str]) -> dict[str, float]:
     are omitted, matching ``F.median`` NULL semantics. Spark's native
     ``median`` buffers every value of every column in one aggregation
     buffer, which is O(n) reducer memory on high-cardinality doubles."""
-    from urban_traffic_data_lake_project_spark.operators.stats import (
-        exact_column_quantiles,
-    )
-
     q = exact_column_quantiles(df, cols, [0.5])
     return {c: v[0] for c, v in q.items() if v and v[0] is not None}
 
@@ -115,6 +114,11 @@ def median_fill(df: DataFrame, cols: Sequence[str]) -> DataFrame:
     return df.na.fill(compute_medians(df, cols))
 
 
+def _iqr_bounds(q1: float, q3: float, factor: float) -> tuple[float, float]:
+    iqr = q3 - q1
+    return q1 - factor * iqr, q3 + factor * iqr
+
+
 def compute_iqr_bounds(
     df: DataFrame, cols: Sequence[str], factor: float = 1.5
 ) -> dict[str, tuple[float, float]]:
@@ -122,36 +126,35 @@ def compute_iqr_bounds(
     refinement (``stats.exact_column_quantiles``) — Spark's native
     ``percentile`` would buffer every value of every column in one
     aggregation buffer."""
-    if not cols:
-        return {}
-    from urban_traffic_data_lake_project_spark.operators.stats import (
-        exact_column_quantiles,
-    )
-
     quartiles = exact_column_quantiles(df, cols, [0.25, 0.75])
-    bounds: dict[str, tuple[float, float]] = {}
-    for c in cols:
-        q = quartiles.get(c)
-        if not q or q[0] is None:
-            continue
-        q1, q3 = q
-        iqr = q3 - q1
-        bounds[c] = (q1 - factor * iqr, q3 + factor * iqr)
-    return bounds
+    return {
+        c: _iqr_bounds(q1, q3, factor) for c, (q1, q3) in quartiles.items() if q1 is not None
+    }
+
+
+def _clip(c: str, lo: float, hi: float) -> Column:
+    # NOT least(greatest(...)): Spark's least/greatest SKIP nulls, which
+    # would turn NULL into the clip bound. The when-chain preserves NULL
+    # (pandas clip semantics; NULLs are median-filled afterwards).
+    col = F.col(c)
+    return F.when(col < lo, F.lit(lo)).when(col > hi, F.lit(hi)).otherwise(col)
+
+
+def _clip_value(v: float, lo: float, hi: float) -> float:
+    """``_clip`` on one driver-side double, in Spark's double order: NaN
+    above every double and equal to itself (Python's ``<`` is False
+    whenever either side is NaN)."""
+
+    def lt(a: float, b: float) -> bool:
+        return not math.isnan(a) and (math.isnan(b) or a < b)
+
+    return lo if lt(v, lo) else (hi if lt(hi, v) else v)
 
 
 def iqr_clip(df: DataFrame, cols: Sequence[str], factor: float = 1.5) -> DataFrame:
     """Clip numeric columns to [Q1 - f*IQR, Q3 + f*IQR] (clean_traffic.py:112-126)."""
     bounds = compute_iqr_bounds(df, cols, factor)
-
-    def clip(c: str, lo: float, hi: float) -> Column:
-        # NOT least(greatest(...)): Spark's least/greatest SKIP nulls, which
-        # would turn NULL into the clip bound. The when-chain preserves NULL
-        # (pandas clip semantics; NULLs are median-filled afterwards).
-        col = F.col(c)
-        return F.when(col < lo, F.lit(lo)).when(col > hi, F.lit(hi)).otherwise(col)
-
-    return df.withColumns({c: clip(c, lo, hi) for c, (lo, hi) in bounds.items()})
+    return df.withColumns({c: _clip(c, lo, hi) for c, (lo, hi) in bounds.items()})
 
 
 def null_fraction_drop(df: DataFrame, cols: Sequence[str], threshold: float = 0.5) -> DataFrame:
@@ -166,6 +169,40 @@ def null_fraction_drop(df: DataFrame, cols: Sequence[str], threshold: float = 0.
     if drop_cols:
         df = df.na.drop(subset=drop_cols)
     return df
+
+
+def fit_clean(
+    df: DataFrame, categoricals: Sequence[str], numerics: Sequence[str], mixed_type_cols: Sequence[str]
+) -> DataFrame:
+    """``mode_fill -> coerce_numeric -> null_fraction_drop -> iqr_clip ->
+    median_fill`` in two fit jobs: ONE aggregate of every mode and NULL
+    fraction (after the coercion, whose NULLs the fractions must count;
+    the fill touches only categoricals), then ONE ``exact_column_quantiles``
+    pass for Q1/Q2/Q3 over the post-drop frame (a drop changes the other
+    columns' values). The clip is monotone in Spark's double order, so the
+    clipped median is ``clip(x0) + (clip(x1) - clip(x0)) * frac`` over the
+    Q2 order statistics: the quantile kernel's arithmetic on its doubles."""
+    if mixed_type_cols:
+        df = coerce_numeric(df, mixed_type_cols)
+    row = df.agg(
+        *[F.mode(c, deterministic=True) for c in categoricals],
+        *[F.avg(F.col(c).isNull().cast("double")) for c in numerics],
+    ).first()
+    k = len(categoricals)
+    out = df.na.fill({c: m if m is not None else "Unknown" for c, m in zip(categoricals, row)})
+    drop_cols = [c for i, c in enumerate(numerics) if (row[k + i] or 0.0) > 0.5]
+    if drop_cols:
+        out = out.na.drop(subset=drop_cols)
+    points: dict = {}
+    q = exact_column_quantiles(out, numerics, [0.25, 0.5, 0.75], points_out=points)
+    bounds = {c: _iqr_bounds(v[0], v[2], 1.5) for c, v in q.items() if v[0] is not None}
+    medians = {}
+    for c, (lo, hi) in bounds.items():
+        x0, x1, frac = points[c][1]
+        x0, x1 = _clip_value(x0, lo, hi), _clip_value(x1, lo, hi)
+        medians[c] = x0 + (x1 - x0) * frac
+    out = out.withColumns({c: _clip(c, lo, hi) for c, (lo, hi) in bounds.items()})
+    return out.na.fill(medians)
 
 
 def variance_filter(df: DataFrame, cols: Sequence[str], min_std: float = 0.01) -> list[str]:

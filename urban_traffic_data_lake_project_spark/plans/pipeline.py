@@ -20,20 +20,25 @@ Differences from the reference, by design (SURVEY.md §7):
   (vehicle_count), not the reference's first-numeric-column fallback
   (M4 quirk, monte_carlo.py:192-195).
 
+- Silver reads bronze with the fixture generators' schemas declared as DDL
+  (``*_BRONZE_DDL``, which the CSV reader maps by position), not with
+  ``inferSchema``, which scans each CSV twice.
+
 Cleaning order matches clean_traffic.py:57-131 exactly: dedup -> timestamp
 parse/drop -> mode-fill categoricals -> numeric coercion -> null-fraction
-drop -> IQR clip -> median fill.
+drop -> IQR clip -> median fill, fitted in two jobs per table
+(``cleaning.fit_clean``). Both tables' fit-and-write chains run at once
+under the caller's job group (``overlap_jobs``).
 """
 
 from __future__ import annotations
 
 import os
-from collections.abc import Iterator
-from contextlib import contextmanager
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
+from urban_traffic_data_lake_project_spark.functions.concurrency import overlap_jobs
 from urban_traffic_data_lake_project_spark.operators import bootstrap as B
 from urban_traffic_data_lake_project_spark.operators import cleaning as C
 from urban_traffic_data_lake_project_spark.operators import factor_analysis as FA
@@ -44,6 +49,16 @@ TRAFFIC_CATEGORICALS = ["city", "area", "congestion_level", "road_condition"]
 TRAFFIC_NUMERICS = ["vehicle_count", "avg_speed_kmh", "accident_count", "visibility_m"]
 WEATHER_CATEGORICALS = ["city", "season", "weather_condition"]
 WEATHER_NUMERICS = ["temperature_c", "humidity", "rain_mm", "wind_speed_kmh", "visibility_m"]
+TRAFFIC_BRONZE_DDL = (
+    "traffic_id double, date_time string, city string, area string, vehicle_count double, "
+    "avg_speed_kmh double, accident_count double, congestion_level string, "
+    "road_condition string, visibility_m double"
+)
+WEATHER_BRONZE_DDL = (
+    "weather_id double, date_time string, city string, season string, temperature_c double, "
+    "humidity double, rain_mm double, wind_speed_kmh double, visibility_m string, "
+    "weather_condition string"
+)
 
 
 @dataclass(frozen=True)
@@ -63,30 +78,21 @@ class LayerPaths:
         return os.path.join(self.base, "gold")
 
 
-@contextmanager
 def clean_table(
-    df: DataFrame,
-    key: str,
-    ts_col: str,
-    categoricals: list[str],
-    numerics: list[str],
-    mixed_type_cols: list[str] = (),
-) -> Iterator[DataFrame]:
-    """The reference cleaning kernel in reference order, as a context.
+    raw: DataFrame, key: str, categoricals: list[str], numerics: list[str],
+    mixed_type_cols: list[str], path: str,
+) -> None:
+    """The reference cleaning kernel in reference order, written to ``path``.
 
-    The parsed frame is persisted because the fitted-statistics passes each
-    trigger an action over it; the cleaned plan still reads that cache, so
-    consume it inside the block. The cache is released on exit."""
+    The parsed frame is persisted because the two fit jobs and the write
+    each read it; it is released once the write is done."""
     parsed = C.parse_timestamps(
-        C.dedup_by_key(df, keys=[key], tiebreak=[ts_col, *numerics]), ts_col
+        C.dedup_by_key(raw, keys=[key], tiebreak=["date_time", *numerics]), "date_time"
     ).persist()
     try:
-        out = C.mode_fill(parsed, categoricals)
-        if mixed_type_cols:
-            out = C.coerce_numeric(out, list(mixed_type_cols))
-        out = C.null_fraction_drop(out, numerics, threshold=0.5)
-        out = C.iqr_clip(out, numerics)
-        yield C.median_fill(out, numerics)
+        C.fit_clean(parsed, categoricals, numerics, mixed_type_cols).hint("rebalance").write.mode(
+            "overwrite"
+        ).parquet(path)
     finally:
         parsed.unpersist()
 
@@ -104,21 +110,24 @@ def run_bronze(spark: SparkSession, paths: LayerPaths, n_rows: int = 5000, seed:
 
 
 def run_silver(spark: SparkSession, paths: LayerPaths) -> None:
-    """Clean both sources and write typed, compact silver parquet."""
-    traffic = spark.read.option("header", True).option("inferSchema", True).csv(
-        os.path.join(paths.bronze, "traffic_raw")
+    """Clean both sources and write typed, compact silver parquet, the two
+    tables' fit-and-write chains overlapped."""
+
+    def read(source: str, ddl: str) -> DataFrame:
+        return spark.read.schema(ddl).option("header", True).csv(
+            os.path.join(paths.bronze, f"{source}_raw")
+        )
+
+    overlap_jobs(
+        lambda: clean_table(
+            read("traffic", TRAFFIC_BRONZE_DDL), "traffic_id", TRAFFIC_CATEGORICALS,
+            TRAFFIC_NUMERICS, [], os.path.join(paths.silver, "traffic_clean"),
+        ),
+        lambda: clean_table(
+            read("weather", WEATHER_BRONZE_DDL), "weather_id", WEATHER_CATEGORICALS,
+            WEATHER_NUMERICS, ["visibility_m"], os.path.join(paths.silver, "weather_clean"),
+        ),
     )
-    weather = spark.read.option("header", True).option("inferSchema", True).csv(
-        os.path.join(paths.bronze, "weather_raw")
-    )
-    with clean_table(
-        traffic, "traffic_id", "date_time", TRAFFIC_CATEGORICALS, TRAFFIC_NUMERICS
-    ) as traffic_clean, clean_table(
-        weather, "weather_id", "date_time", WEATHER_CATEGORICALS, WEATHER_NUMERICS,
-        mixed_type_cols=["visibility_m"],
-    ) as weather_clean:
-        for name, df in (("traffic_clean", traffic_clean), ("weather_clean", weather_clean)):
-            df.hint("rebalance").write.mode("overwrite").parquet(os.path.join(paths.silver, name))
 
 
 def run_merge(spark: SparkSession, paths: LayerPaths) -> None:

@@ -311,56 +311,9 @@ def _full_kernel(spark: SparkSession, sf_dir: str) -> DataFrame:
         dirty = dirty.repartition(sc.defaultParallelism, F.col("k"))
     out = C.dedup_by_key(dirty, keys=["k"], tiebreak=["src_row"])
     out = out.withColumn("ts", F.col("ts_str"))
-    # persist the post-parse frame: the fitted-statistics passes each
-    # trigger an action — without this the dedup window + multi-format
-    # parse re-execute per pass
-    out = C.parse_timestamps(out, "ts").persist()
-    out = C.mode_fill(out, ["cat"])
-    # Fused fit (r12 opt, guide §2.4 "share one pass"): the null-fraction
-    # aggregate rides the quantile head pass, ONE refinement resolves
-    # Q1/Q2/Q3 together, and the post-clip median is derived from the
-    # Q2 interpolation points (order statistics commute with the monotone
-    # clip), replacing the previous chain of separate actions — 4
-    # fitted-statistics passes of 1+1+3+3 jobs collapse to 1+3.
-    # Equivalences that keep every branch's result identical:
-    # - percentile/rank/band arithmetic ignores NULLs, and the only rows
-    #   the >50%-NULL drop can remove are NULL-measure rows, so the
-    #   quantile fit over the pre-drop frame equals the post-drop fit in
-    #   BOTH branches (same non-null multiset, same non-null count n);
-    # - sorted(clip(x)) == clip(sorted(x)), so the exact interpolated
-    #   median of the clipped column is clip(x0) + (clip(x1)-clip(x0))*frac
-    #   over the pre-clip order statistics, with the same IEEE754 clip.
-    from urban_traffic_data_lake_project_spark.operators.stats import (
-        exact_column_quantiles,
-    )
-
-    extras: dict = {}
-    points: dict = {}
-    q = exact_column_quantiles(
-        out,
-        ["measure"],
-        [0.25, 0.5, 0.75],
-        extra_head_aggs=[
-            F.avg(F.col("measure").isNull().cast("double")).alias("__nf")
-        ],
-        extras_out=extras,
-        points_out=points,
-    )
-    if (extras.get("__nf") or 0.0) > 0.5:
-        out = out.na.drop(subset=["measure"])
-    q1, q3 = q["measure"][0], q["measure"][2]
-    if q1 is not None:
-        iqr = q3 - q1
-        lo, hi = q1 - 1.5 * iqr, q3 + 1.5 * iqr
-        col = F.col("measure")
-        out = out.withColumn(
-            "measure",
-            F.when(col < lo, F.lit(lo)).when(col > hi, F.lit(hi)).otherwise(col),
-        )
-        x0, x1, frac = points["measure"][1]
-        _clip = lambda v: lo if v < lo else (hi if v > hi else v)  # noqa: E731
-        med_clip = _clip(x0) + (_clip(x1) - _clip(x0)) * frac
-        out = out.na.fill({"measure": med_clip})
+    # persist the post-parse frame: both fit jobs and the consumer read it
+    # — without this the dedup window + multi-format parse re-execute per pass
+    out = C.fit_clean(C.parse_timestamps(out, "ts").persist(), ["cat"], ["measure"], ())
     return out.select("k", "ts", "cat", F.round("measure", ROUND_SUM).alias("measure"))
 
 
