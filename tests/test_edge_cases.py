@@ -10,7 +10,7 @@ from urban_traffic_data_lake_project_spark.operators import cleaning as C
 from urban_traffic_data_lake_project_spark.operators import dedup as D
 from urban_traffic_data_lake_project_spark.operators import text as T
 from urban_traffic_data_lake_project_spark.operators import stats as S
-from urban_traffic_data_lake_project_spark.operators.stats import exact_column_quantiles
+from urban_traffic_data_lake_project_spark.operators.stats import column_profile
 
 
 @pytest.fixture(scope="module")
@@ -36,9 +36,10 @@ def test_mode_fill_all_null_column_uses_default(spark):
 
 def test_exact_quantiles_empty_and_single(spark):
     empty = spark.createDataFrame([], "x double")
-    assert exact_column_quantiles(empty, ["x"], [0.5]) == {"x": [None]}
+    prof = column_profile(empty, ["x"], [0.5])
+    assert (prof.rows, prof.columns["x"].n, prof.columns["x"].quantiles) == (0, 0, [None])
     one = spark.createDataFrame([(7.5,)], "x double")
-    assert exact_column_quantiles(one, ["x"], [0.25, 0.9]) == {"x": [7.5, 7.5]}
+    assert column_profile(one, ["x"], [0.25, 0.9]).columns["x"].quantiles == [7.5, 7.5]
 
 
 def test_exact_quantiles_point_mass(spark, monkeypatch):
@@ -48,10 +49,9 @@ def test_exact_quantiles_point_mass(spark, monkeypatch):
     rows = [(42.0,)] * 10_000 + [(0.0,), (100.0,)]
     df = spark.createDataFrame(rows, "x double").repartition(8)
     monkeypatch.setattr(S, "_ACCURACY", 100)
-    dbg = {}
-    got = exact_column_quantiles(df, ["x"], [0.25, 0.5, 0.75], debug_out=dbg)
-    assert got == {"x": [42.0, 42.0, 42.0]}
-    assert dbg["regime"] == "digest" and dbg["band_rows_collected"] <= 3
+    prof = column_profile(df, ["x"], [0.25, 0.5, 0.75])
+    assert prof.columns["x"].quantiles == [42.0, 42.0, 42.0]
+    assert prof.regime == "digest" and prof.band_rows_collected <= 3
 
 
 def test_exact_quantiles_nonnull_rank_base(spark):
@@ -61,7 +61,7 @@ def test_exact_quantiles_nonnull_rank_base(spark):
     vals = [float(v) for v in range(1, 21)]
     rows = [(v,) for v in vals] + [(None,)] * 15
     df = spark.createDataFrame(rows, "x double")
-    got = exact_column_quantiles(df, ["x"], [0.25, 0.75])["x"]
+    got = column_profile(df, ["x"], [0.25, 0.75]).columns["x"].quantiles
     want = [float(np.quantile(np.array(vals), p, method="linear")) for p in (0.25, 0.75)]
     assert got == pytest.approx(want)
 

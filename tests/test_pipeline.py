@@ -12,11 +12,24 @@ from urban_traffic_data_lake_project_spark.plans import pipeline as P
 
 
 @pytest.fixture(scope="module")
-def layers(spark):
+def medallion(spark):
+    """The pipeline at 3,000 rows on seed 42, stage by stage; records the
+    Spark jobs submitted around run_gold."""
     d = tempfile.mkdtemp(prefix="medallion_")
-    paths = P.run_pipeline(spark, d, n_rows=3000, seed=42)
-    yield paths
+    paths = P.LayerPaths(d)
+    P.run_bronze(spark, paths, n_rows=3000, seed=42)
+    P.run_silver(spark, paths)
+    P.run_merge(spark, paths)
+    scheduler = spark.sparkContext._jsc.sc().dagScheduler()
+    first_job = scheduler.nextJobId()
+    P.run_gold(spark, paths, seed=42)
+    yield paths, scheduler.nextJobId() - first_job
     shutil.rmtree(d, ignore_errors=True)
+
+
+@pytest.fixture(scope="module")
+def layers(medallion):
+    return medallion[0]
 
 
 def _assert_traffic_clean(t, n_rows: int) -> None:
@@ -74,6 +87,14 @@ def test_gold_outputs(spark, layers):
     assert len(score_cols) == k
     m = spark.read.parquet(f"{layers.silver}/merged_data")
     assert factors.count() == m.count()
+
+
+def test_run_gold_job_floor(medallion):
+    # Monte Carlo, bootstrap CIs and the factor-analysis fit each read
+    # merged_data for their own statistics, then write one after another:
+    # 20 jobs at 3,000 rows on seed 42 when the floor was set
+    n_jobs = medallion[1]
+    assert n_jobs <= 20, f"run_gold submitted {n_jobs} jobs"
 
 
 def test_silver_is_one_file_per_table(layers):

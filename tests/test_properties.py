@@ -33,12 +33,12 @@ _GATE = {"collect": 2**63 - 1, "digest": -1}
 )
 def test_exact_quantiles_match_numpy(spark, values, p, regime):
     df = spark.createDataFrame([(v,) for v in values], "x double")
-    dbg = {}
     with pytest.MonkeyPatch.context() as m:
         m.setattr(S, "_QUANTILE_COLLECT_BYTES", _GATE[regime])
         m.setattr(S, "_ACCURACY", 50)  # a coarse sketch: large bracket rank error
-        (got,) = S.exact_column_quantiles(df, ["x"], [p], debug_out=dbg)["x"]
-    assert dbg["regime"] == regime
+        prof = S.column_profile(df, ["x"], [p])
+    assert prof.regime == regime
+    (got,) = prof.columns["x"].quantiles
     want = float(np.quantile(np.array(values), p, method="linear"))
     assert got == pytest.approx(want, rel=1e-12, abs=1e-9), (len(values), p, regime)
 

@@ -3,8 +3,8 @@
 Every change in this round is required to keep results bit-identical while
 cutting jobs/passes; these tests pin the new regime switches:
 
-- the exact-quantile small regime (one bounded collect) returns exactly
-  what the digest path returns, points and extras included;
+- the column profile's small regime (one bounded collect) returns exactly
+  what the digest path returns: counts, points, quantiles and moments;
 - the digest path's band collect is bounded: a head count that predicts a
   band above the cap re-brackets with accuracy scaled to n (r12 verdict
   "what's wrong" #4);
@@ -21,9 +21,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from urban_traffic_data_lake_project_spark.operators import stats as S
-from urban_traffic_data_lake_project_spark.operators.stats import (
-    exact_column_quantiles,
-)
+from urban_traffic_data_lake_project_spark.operators.stats import column_profile
 
 # no size estimate is at or below it, so the size gate picks the digest path
 DIGEST = -1
@@ -44,35 +42,25 @@ PS = [0.1, 0.25, 0.5, 0.75, 0.9]
 
 def test_quantile_small_regime_matches_digest(spark, monkeypatch):
     df = _mk_df(spark)
-    dbg_s, dbg_d = {}, {}
-    pts_s, pts_d = {}, {}
-    ex_s, ex_d = {}, {}
-    extra = lambda: [  # noqa: E731
-        F.count(F.lit(1)).alias("n_rows"),
-        F.avg("a").alias("mean_a"),
-        F.stddev_samp("b").alias("sd_b"),
-    ]
-    small = exact_column_quantiles(
-        df, ["a", "b", "c"], PS,
-        extra_head_aggs=extra(), extras_out=ex_s, points_out=pts_s,
-        debug_out=dbg_s,
-    )
+    small = column_profile(df, ["a", "b", "c"], PS, moments=True)
     monkeypatch.setattr(S, "_QUANTILE_COLLECT_BYTES", DIGEST)
-    big = exact_column_quantiles(
-        df, ["a", "b", "c"], PS,
-        extra_head_aggs=extra(), extras_out=ex_d, points_out=pts_d,
-        debug_out=dbg_d,
-    )
-    assert dbg_s["regime"] == "collect" and dbg_d["regime"] == "digest"
-    assert dbg_d["widened"]  # accuracy >> n: some bands miss and are widened
+    big = column_profile(df, ["a", "b", "c"], PS, moments=True)
+    assert small.regime == "collect" and big.regime == "digest"
+    assert big.widened  # accuracy >> n: some bands miss and are widened
+    # the collect regime reads the counts off the collected frame, the
+    # digest regime off its head pass: the same integers
+    assert small.rows == big.rows == 500
     for c in ("a", "b", "c"):
-        assert small[c] == big[c], c  # exact equality, not approx
-        # the points behind every quantile match too, widened bands included
-        assert pts_s[c] == pts_d[c], c
-    # extras are Spark-aggregated in BOTH regimes (bit-identical), and the
-    # 'n_rows' alias must survive (ADVICE r12: prefix filtering dropped it)
-    assert ex_s == ex_d
-    assert ex_s["n_rows"] == 500
+        s, b = small.columns[c], big.columns[c]
+        assert s.n == b.n, c
+        # exact equality, not approx: the points behind every quantile,
+        # widened bands included, and the quantiles derived from them
+        assert s.points == b.points, c
+        assert s.quantiles == b.quantiles, c
+        # the moments are Spark-aggregated in BOTH regimes (bit-identical)
+        assert (s.mean, s.stddev) == (b.mean, b.stddev), c
+        assert s.mean is not None and s.stddev is not None, c
+    assert small.columns["b"].n == 500 - 46  # every 11th id is NULL
 
 
 def test_quantile_collect_regime_keeps_nan_like_percentile(spark):
@@ -85,9 +73,9 @@ def test_quantile_collect_regime_keeps_nan_like_percentile(spark):
         .alias("v")
     )
     ps = [0.0, 0.1, 0.25, 0.5, 0.75, 0.8, 0.85, 0.9, 1.0]
-    dbg = {}
-    got = exact_column_quantiles(df, ["v"], ps, debug_out=dbg)["v"]
-    assert dbg["regime"] == "collect"
+    prof = column_profile(df, ["v"], ps)
+    got = prof.columns["v"].quantiles
+    assert prof.regime == "collect"
     want = df.agg(*[F.percentile("v", p).alias(f"p{j}") for j, p in enumerate(ps)]).first()
     for j, p in enumerate(ps):
         w = want[f"p{j}"]
@@ -98,37 +86,24 @@ def test_quantile_collect_regime_keeps_nan_like_percentile(spark):
     assert math.isnan(got[-1]) and not math.isnan(got[0])
 
 
-def test_quantile_extras_alias_not_dropped(spark, monkeypatch):
-    # aliases that collide with the internal n_/b_ prefixes must come back
-    df = _mk_df(spark, 50)
-    ex = {}
-    monkeypatch.setattr(S, "_QUANTILE_COLLECT_BYTES", DIGEST)
-    exact_column_quantiles(
-        df, ["a"], [0.5],
-        extra_head_aggs=[F.count(F.lit(1)).alias("n_1"), F.max("a").alias("b_0x")],
-        extras_out=ex,
-    )
-    assert ex["n_1"] == 50 and ex["b_0x"] == 49.0
-
-
 def test_quantile_band_cap_rebrackets_and_bounds_collect(spark, monkeypatch):
     df = _mk_df(spark, 2000)
-    dbg = {}
     with monkeypatch.context() as m:
         m.setattr(S, "_ACCURACY", 100)  # 6*2000/100 = 120 predicted band rows
         m.setattr(S, "_BAND_ROWS_CAP", 60)  # forces the re-bracket pass
         m.setattr(S, "_QUANTILE_COLLECT_BYTES", DIGEST)
-        capped = exact_column_quantiles(df, ["a", "b"], [0.5], debug_out=dbg)
-    assert dbg["regime"] == "digest"
-    assert set(dbg.get("rebracket_accuracy", {})) == {"a", "b"}
-    assert all(acc >= 180 for acc in dbg["rebracket_accuracy"].values())
+        capped = column_profile(df, ["a", "b"], [0.5])
+    assert capped.regime == "digest"
+    assert set(capped.rebracket_accuracy) == {"a", "b"}
+    assert all(acc >= 180 for acc in capped.rebracket_accuracy.values())
     # the actual collect stays within the cap's intent (distinct pairs
     # can only be fewer than the rank width the cap bounds)
-    assert dbg["band_rows_collected"] <= 2 * 60
+    assert capped.band_rows_collected <= 2 * 60
     # and the values are still the exact quantiles (small regime = ground
     # truth: full multiset, driver-side order statistics)
-    truth = exact_column_quantiles(df, ["a", "b"], [0.5])
-    assert capped == truth
+    truth = column_profile(df, ["a", "b"], [0.5])
+    for c in ("a", "b"):
+        assert capped.columns[c].quantiles == truth.columns[c].quantiles, c
 
 
 def test_quantile_band_miss_after_widening_raises(spark, monkeypatch):
@@ -138,17 +113,30 @@ def test_quantile_band_miss_after_widening_raises(spark, monkeypatch):
     monkeypatch.setattr(S, "_QUANTILE_COLLECT_BYTES", DIGEST)
     monkeypatch.setattr(S, "_band_walk", lambda df, bands: ([(0, [])] * len(bands), 0))
     with pytest.raises(ValueError, match=r"column 'a' misses rank 24\.\.25 for p=0\.5"):
-        exact_column_quantiles(df, ["a"], [0.5])
+        column_profile(df, ["a"], [0.5])
 
 
 def test_quantile_band_cap_noop_at_default(spark, monkeypatch):
     # at the default accuracy/cap the re-bracket never fires on bench-scale
     # counts — the digest plan is byte-identical to r12's
     df = _mk_df(spark, 2000)
-    dbg = {}
     monkeypatch.setattr(S, "_QUANTILE_COLLECT_BYTES", DIGEST)
-    exact_column_quantiles(df, ["a", "b"], [0.5], debug_out=dbg)
-    assert "rebracket_accuracy" not in dbg
+    assert not column_profile(df, ["a", "b"], [0.5]).rebracket_accuracy
+
+
+def test_unsized_plan_takes_digest_and_is_not_persisted(spark, monkeypatch):
+    # a plan the optimizer cannot size: the quantile gate assumes it is
+    # big, the persist gate leaves it alone
+    from urban_traffic_data_lake_project_spark.sources import tables as T
+
+    df = _mk_df(spark, 50)
+    assert T.estimate_bytes(df) > 0
+    assert T.estimate_bytes(object()) is None  # no plan to size
+    monkeypatch.setattr(S, "estimate_bytes", lambda df: None)
+    monkeypatch.setattr(T, "estimate_bytes", lambda df: None)
+    prof = column_profile(df, ["a"], [0.5])
+    assert (prof.regime, prof.est_bytes, prof.columns["a"].quantiles) == ("digest", None, [24.5])
+    assert T.persist_for_reuse_if_large(df) is df
 
 
 def _run_counting_jobs(spark, fn) -> int:
@@ -177,6 +165,7 @@ def _run_counting_jobs(spark, fn) -> int:
         ("fa_scores_summary", 7),             # r12: 10 (quantile small regime)
         ("sketch_quantile_kmv", 3),           # r12: 8  (quantile small regime)
         ("clean_full_kernel", 6),             # 9 before the fused fit (F.mode agg)
+        ("mc_scenario_expectations", 5),      # guards the moments=True collect path
     ],
 )
 def test_fit_path_job_count_floor(spark, sf_dir, name, max_jobs):

@@ -40,7 +40,7 @@ from pyspark.sql import functions as F
 
 from urban_traffic_data_lake_project_spark.functions import parse_timestamp_multi
 from urban_traffic_data_lake_project_spark.functions.core import DEFAULT_TS_FORMATS
-from urban_traffic_data_lake_project_spark.operators.stats import exact_column_quantiles
+from urban_traffic_data_lake_project_spark.operators.stats import column_profile
 
 
 def dedup_by_key(df: DataFrame, keys: Sequence[str], tiebreak: Sequence[str]) -> DataFrame:
@@ -100,13 +100,13 @@ def mode_fill(df: DataFrame, cols: Sequence[str], default: str = "Unknown") -> D
 
 
 def compute_medians(df: DataFrame, cols: Sequence[str]) -> dict[str, float]:
-    """Exact interpolated median per numeric column via the shared-pass
-    refinement (``stats.exact_column_quantiles``); columns with no values
-    are omitted, matching ``F.median`` NULL semantics. Spark's native
-    ``median`` buffers every value of every column in one aggregation
-    buffer, which is O(n) reducer memory on high-cardinality doubles."""
-    q = exact_column_quantiles(df, cols, [0.5])
-    return {c: v[0] for c, v in q.items() if v and v[0] is not None}
+    """Exact interpolated median per numeric column, the ``quantiles`` of
+    one ``stats.column_profile`` pass; columns with no values are omitted,
+    matching ``F.median`` NULL semantics. Spark's native ``median``
+    buffers every value of every column in one aggregation buffer, which
+    is O(n) reducer memory on high-cardinality doubles."""
+    prof = column_profile(df, cols, [0.5])
+    return {c: cp.quantiles[0] for c, cp in prof.columns.items() if cp.quantiles[0] is not None}
 
 
 def median_fill(df: DataFrame, cols: Sequence[str]) -> DataFrame:
@@ -122,13 +122,14 @@ def _iqr_bounds(q1: float, q3: float, factor: float) -> tuple[float, float]:
 def compute_iqr_bounds(
     df: DataFrame, cols: Sequence[str], factor: float = 1.5
 ) -> dict[str, tuple[float, float]]:
-    """(lo, hi) clip bounds per column from exact Q1/Q3 via the shared-pass
-    refinement (``stats.exact_column_quantiles``) — Spark's native
-    ``percentile`` would buffer every value of every column in one
-    aggregation buffer."""
-    quartiles = exact_column_quantiles(df, cols, [0.25, 0.75])
+    """(lo, hi) clip bounds per column from the exact Q1/Q3 ``quantiles``
+    of one ``stats.column_profile`` pass — Spark's native ``percentile``
+    would buffer every value of every column in one aggregation buffer."""
+    prof = column_profile(df, cols, [0.25, 0.75])
     return {
-        c: _iqr_bounds(q1, q3, factor) for c, (q1, q3) in quartiles.items() if q1 is not None
+        c: _iqr_bounds(*cp.quantiles, factor)
+        for c, cp in prof.columns.items()
+        if cp.quantiles[0] is not None
     }
 
 
@@ -177,11 +178,11 @@ def fit_clean(
     """``mode_fill -> coerce_numeric -> null_fraction_drop -> iqr_clip ->
     median_fill`` in two fit jobs: ONE aggregate of every mode and NULL
     fraction (after the coercion, whose NULLs the fractions must count;
-    the fill touches only categoricals), then ONE ``exact_column_quantiles``
+    the fill touches only categoricals), then ONE ``stats.column_profile``
     pass for Q1/Q2/Q3 over the post-drop frame (a drop changes the other
     columns' values). The clip is monotone in Spark's double order, so the
     clipped median is ``clip(x0) + (clip(x1) - clip(x0)) * frac`` over the
-    Q2 order statistics: the quantile kernel's arithmetic on its doubles."""
+    profile's Q2 ``points``: the kernel's own arithmetic on its doubles."""
     if mixed_type_cols:
         df = coerce_numeric(df, mixed_type_cols)
     row = df.agg(
@@ -193,12 +194,12 @@ def fit_clean(
     drop_cols = [c for i, c in enumerate(numerics) if (row[k + i] or 0.0) > 0.5]
     if drop_cols:
         out = out.na.drop(subset=drop_cols)
-    points: dict = {}
-    q = exact_column_quantiles(out, numerics, [0.25, 0.5, 0.75], points_out=points)
+    prof = column_profile(out, numerics, [0.25, 0.5, 0.75]).columns
+    q = {c: cp.quantiles for c, cp in prof.items()}
     bounds = {c: _iqr_bounds(v[0], v[2], 1.5) for c, v in q.items() if v[0] is not None}
     medians = {}
     for c, (lo, hi) in bounds.items():
-        x0, x1, frac = points[c][1]
+        x0, x1, frac = prof[c].points[1]
         x0, x1 = _clip_value(x0, lo, hi), _clip_value(x1, lo, hi)
         medians[c] = x0 + (x1 - x0) * frac
     out = out.withColumns({c: _clip(c, lo, hi) for c, (lo, hi) in bounds.items()})

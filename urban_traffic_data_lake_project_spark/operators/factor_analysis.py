@@ -189,45 +189,35 @@ def fit_on_sample(
         from pyspark.sql.types import NumericType
 
         cols = [f.name for f in df.schema.fields if isinstance(f.dataType, NumericType)]
-    # Medians AND the variance-filter inputs in the SAME head pass (r12
-    # opt, guide §2.4 "share one pass"): the raw count/mean/stddev ride
-    # the quantile head aggregation as extra_head_aggs, saving the whole
-    # separate stddev scan. The reference semantics need the stddev of
-    # the MEDIAN-IMPUTED column; that is reconstructed driver-side from
-    # the raw moments once the medians resolve — bit-identical to
-    # Spark's stddev_samp when the column has no NULLs (the common
-    # case, and the only case the strict oracles exercise), and exact
-    # up to benign last-ulp drift otherwise. The value feeds only the
-    # binary ``> min_std`` keep/drop decision, never the output.
-    from urban_traffic_data_lake_project_spark.operators.stats import (
-        exact_column_quantiles,
-    )
+    # Medians AND the variance-filter inputs from ONE column profile (r12
+    # opt, guide §2.4 "share one pass"): the row count and each column's
+    # non-NULL count, mean and stddev come with the medians
+    # (``moments=True``), saving a separate stddev scan. The reference
+    # semantics need the stddev of the MEDIAN-IMPUTED column; that is
+    # reconstructed driver-side from the raw moments once the medians
+    # resolve — bit-identical to Spark's stddev_samp when the column has
+    # no NULLs (the common case, and the only case the strict oracles
+    # exercise), and exact up to benign last-ulp drift otherwise. The
+    # value feeds only the binary ``> min_std`` keep/drop decision, never
+    # the output.
+    from urban_traffic_data_lake_project_spark.operators.stats import column_profile
 
-    extras: dict = {}
-    q = exact_column_quantiles(
-        df.select(*cols),
-        cols,
-        [0.5],
-        extra_head_aggs=[F.count(F.lit(1)).alias("__xq_n")]
-        + [F.count(c).alias(f"__xq_c_{i}") for i, c in enumerate(cols)]
-        + [F.avg(c).alias(f"__xq_m_{i}") for i, c in enumerate(cols)]
-        + [F.stddev_samp(c).alias(f"__xq_s_{i}") for i, c in enumerate(cols)],
-        extras_out=extras,
-    )
-    med = {c: v[0] for c, v in q.items() if v and v[0] is not None}
-    total = extras["__xq_n"]
+    prof = column_profile(df.select(*cols), cols, [0.5], moments=True)
+    med = {c: cp.quantiles[0] for c, cp in prof.columns.items() if cp.quantiles[0] is not None}
+    total = prof.rows
 
-    def _filled_std(i: int, c: str) -> float | None:
-        n_r = extras[f"__xq_c_{i}"]
+    def _filled_std(c: str) -> float | None:
+        cp = prof.columns[c]
+        n_r = cp.n
         if c not in med or n_r == 0:
             return None  # all-NULL column: imputation has no value to use
-        sd_r = extras[f"__xq_s_{i}"]
+        sd_r = cp.stddev
         n_null = total - n_r
         if n_null == 0:
             return sd_r  # no imputation happened: Spark's value verbatim
         if total < 2:
             return None
-        m_r = extras[f"__xq_m_{i}"]
+        m_r = cp.mean
         mv = med[c]
         mean_f = (n_r * m_r + n_null * mv) / total
         ssd_r = (sd_r * sd_r) * (n_r - 1) if (sd_r is not None and n_r > 1) else 0.0
@@ -240,7 +230,7 @@ def fit_on_sample(
 
         return _math.sqrt(ssd_f / (total - 1))
 
-    stds = {c: _filled_std(i, c) for i, c in enumerate(cols)}
+    stds = {c: _filled_std(c) for c in cols}
     # Threshold hardening (ADVICE r12, low): the reconstructed stddev of a
     # median-imputed column is exact only up to last-ulp drift when NULLs
     # were present; a value within drift distance of min_std could flip
@@ -253,7 +243,7 @@ def fit_on_sample(
         (i, c)
         for i, c in enumerate(cols)
         if stds[c] is not None
-        and extras[f"__xq_c_{i}"] < total
+        and prof.columns[c].n < total
         and abs(stds[c] - min_std) <= 1e-9 * max(abs(min_std), 1.0)
     ]
     if borderline:

@@ -58,23 +58,14 @@ def scenario_spec_df(spark: SparkSession, scenarios=DEFAULT_SCENARIOS) -> DataFr
 
 
 def base_stats(df: DataFrame, measure_col: str) -> tuple[float, float]:
-    """(mean, p75 threshold) of the measure column, the mean riding the
-    quantile's own pass. The p75 goes through the bounded-memory exact
-    refinement (operators.stats) — Spark's native ``percentile`` buffers
-    every value of a high-cardinality double in one aggregation buffer."""
-    from urban_traffic_data_lake_project_spark.operators.stats import (
-        exact_column_quantiles,
-    )
+    """(mean, p75 threshold) of the measure column: the ``mean`` and the
+    exact p75 ``quantiles`` of one ``stats.column_profile(...,
+    moments=True)`` pass — Spark's native ``percentile`` buffers every
+    value of a high-cardinality double in one aggregation buffer."""
+    from urban_traffic_data_lake_project_spark.operators.stats import column_profile
 
-    extras: dict = {}
-    (p75,) = exact_column_quantiles(
-        df,
-        [measure_col],
-        [0.75],
-        extra_head_aggs=[F.avg(measure_col).alias("mu")],
-        extras_out=extras,
-    )[measure_col]
-    return float(extras["mu"]), float(p75)
+    cp = column_profile(df, [measure_col], [0.75], moments=True).columns[measure_col]
+    return float(cp.mean), float(cp.quantiles[0])
 
 
 def pick_measure_column(df: DataFrame) -> str:

@@ -1,19 +1,23 @@
 """Statistics operators with 100 TB-viable plans.
 
-``exact_column_quantiles`` — exact interpolated quantiles (quantile_cont
-semantics) of many columns at many probabilities WITHOUT buffering the
-columns. Spark's built-in ``percentile`` holds every distinct value in an
-in-memory map per aggregation buffer; on a high-cardinality double column
-that is O(n) memory on one reducer — fine at 60k rows, fatal at 10^12.
-One size gate picks the plan:
+``column_profile`` — the per-column statistics the silver and gold fits
+read, from one size-gated plan: the row count; per column the non-NULL
+count, exact interpolated quantiles (quantile_cont semantics) with the two
+order statistics behind each, and on request the mean and sample stddev;
+and a record of the regime taken. The quantiles are computed WITHOUT
+buffering the columns: Spark's built-in ``percentile`` holds every
+distinct value in an in-memory map per aggregation buffer; on a
+high-cardinality double column that is O(n) memory on one reducer — fine
+at 60k rows, fatal at 10^12. One size gate picks the plan:
 
 1. a column projection the optimizer sizes at or below
    ``_QUANTILE_COLLECT_BYTES`` is collected once and sorted on the driver;
-2. anything larger takes the classic two-phase refinement: one
-   aggregation brackets every target order statistic with t-digest probes
-   (rank error <= n/accuracy, bounded memory), then one counting pass and
-   one pushdown-filtered collect of the distinct values inside each
-   bracket resolve the exact order statistics.
+2. anything larger (or a plan the optimizer cannot size) takes the
+   classic two-phase refinement: one aggregation counts and brackets every
+   target order statistic with t-digest probes (rank error <=
+   n/accuracy, bounded memory), then one counting pass and one
+   pushdown-filtered collect of the distinct values inside each bracket
+   resolve the exact order statistics.
 
 Digest cost: 2 full scans (both codegen'd aggregations) + a band collect
 of ~6 n/accuracy rows per percentile, held under ``_BAND_ROWS_CAP`` by
@@ -24,11 +28,12 @@ from __future__ import annotations
 
 import math
 from collections.abc import Sequence
+from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, Row, Window
 from pyspark.sql import functions as F
 
-from urban_traffic_data_lake_project_spark.sources.tables import _PERSIST_BYTES
+from urban_traffic_data_lake_project_spark.sources.tables import _PERSIST_BYTES, estimate_bytes
 
 # Size gate (r13): when the optimizer's size estimate of the PROJECTED
 # quantile columns is at or below this, the multiset of values is bounded
@@ -58,6 +63,46 @@ _BAND_ROWS_CAP = 100_000
 _ACCURACY_MAX = 1 << 18
 
 
+@dataclass
+class ColumnProfile:
+    """One column of a :class:`Profile`.
+
+    ``n``: the non-NULL count. ``points``: per probability, the two exact
+    order statistics and the interpolation fraction ``(x0, x1, frac)``
+    behind the quantile, ``None`` when the column has no values.
+    ``mean``/``stddev``: ``F.avg``/``F.stddev_samp`` of the raw column,
+    filled only by ``column_profile(..., moments=True)``."""
+
+    n: int | None
+    points: list
+    mean: float | None = None
+    stddev: float | None = None
+
+    @property
+    def quantiles(self) -> list:
+        """``x0 + (x1 - x0) * frac`` per probability, ``None`` where the
+        column has no values."""
+        return [None if pt is None else pt[0] + (pt[1] - pt[0]) * pt[2] for pt in self.points]
+
+
+@dataclass
+class Profile:
+    """What :func:`column_profile` returns: ``rows`` (the count of all
+    rows), one :class:`ColumnProfile` per column, and the gate record —
+    the ``regime`` taken (``"collect"`` or ``"digest"``) and the size
+    estimate ``est_bytes`` (``None`` for a plan the optimizer cannot
+    size); on the digest path also the re-bracket accuracy per column,
+    the widened (column, p) pairs and the band rows collected."""
+
+    rows: int | None
+    columns: dict[str, ColumnProfile]
+    regime: str | None
+    est_bytes: int | None
+    rebracket_accuracy: dict[str, int] = field(default_factory=dict)
+    widened: list[tuple[str, float]] = field(default_factory=list)
+    band_rows_collected: int = 0
+
+
 def _bracket_probes(ps: Sequence[float], accuracy: int, eps_mult: int = 2) -> list[float]:
     """The approx-quantile probe points p +- eps_mult/accuracy that bracket
     each target percentile, flattened as [lo_0, hi_0, lo_1, hi_1, ...]."""
@@ -66,6 +111,14 @@ def _bracket_probes(ps: Sequence[float], accuracy: int, eps_mult: int = 2) -> li
     for p in ps:
         out += [max(0.0, p - eps_mult * eps), min(1.0, p + eps_mult * eps)]
     return out
+
+
+def _ranks(n: int, p: float) -> tuple[int, int, float]:
+    """The 0-based ranks of the two order statistics behind quantile ``p``
+    of ``n`` values, and the interpolation fraction between them."""
+    h = (n - 1) * p
+    k_lo = math.floor(h)
+    return k_lo, math.ceil(h), h - k_lo
 
 
 def order_stat(band: list, idx: int):
@@ -78,41 +131,26 @@ def order_stat(band: list, idx: int):
     raise IndexError(idx)
 
 
-def _extras_from_row(row, start: int, extras_out: dict) -> None:
-    """Populate ``extras_out`` from the tail of an aggregation Row: the
-    extras are positionally the aggregates AFTER index ``start``, keyed by
-    their own aliases. Positional, not prefix-filtered — a caller alias
-    like ``n_rows`` must not be silently dropped (ADVICE r12)."""
-    fields = row.__fields__
-    for idx in range(start, len(fields)):
-        extras_out[fields[idx]] = row[idx]
-
-
-def _quantiles_from_collect(
-    df: DataFrame,
-    cols: list,
-    ps: list,
-    extra_head_aggs: Sequence | None,
-    extras_out: dict | None,
-    points_out: dict | None,
-) -> dict:
-    """Small-regime exact quantiles: ONE bounded column-pruned collect of
-    the cast-to-double values (+ per-column NULL flags so a float NaN is
-    not conflated with SQL NULL by the Arrow transfer), sorted driver-side.
-    The order statistics and the ``x0 + (x1 - x0) * frac`` interpolation
-    are the SAME Python-float arithmetic the band walk performs on the
-    same doubles, so results are bit-identical to the digest path.
+def _profile_from_collect(
+    df: DataFrame, cols: list, ps: list, moment_aggs: list, prof: Profile
+) -> Row | None:
+    """Small regime: ONE bounded column-pruned collect of the
+    cast-to-double values (+ per-column NULL flags so a float NaN is not
+    conflated with SQL NULL by the Arrow transfer), sorted driver-side.
+    ``rows`` and each ``n`` are read off the collected frame. The order
+    statistics are the same doubles the band walk finds, so the points are
+    bit-identical to the digest path's.
 
     A float NaN is a value, not a NULL: it stays in the sort, where numpy
     places it last — Spark's own ordering, which ranks NaN above every
     double — so the order statistics, and a NaN wherever an interpolation
     touches one, match ``F.percentile`` on the same column.
 
-    ``extra_head_aggs`` still run as a Spark aggregation (their values —
-    stddevs especially — must stay bit-identical to the historical head
-    pass, which driver-side numpy could not guarantee); when the input is
-    not already cached the extras job and the collect overlap (guide
-    §2.6)."""
+    ``moment_aggs`` still run as a Spark aggregation (their values —
+    stddevs especially — must stay bit-identical to the digest regime's
+    head pass, which driver-side numpy could not guarantee); when the
+    input is not already cached that job and the collect overlap (guide
+    §2.6). Returns the moments row, ``None`` without moments."""
 
     from urban_traffic_data_lake_project_spark.functions.concurrency import (
         overlap_jobs,
@@ -123,46 +161,31 @@ def _quantiles_from_collect(
         *[F.col(c).isNull().alias(f"__qz_{i}") for i, c in enumerate(cols)],
     )
 
-    def run_collect():
-        return proj.toPandas()
+    def run_moments():
+        return df.agg(*moment_aggs).first() if moment_aggs else None
 
-    def run_extras():
-        return df.agg(*extra_head_aggs).first() if extra_head_aggs else None
-
-    if extra_head_aggs and not df.is_cached:
-        pdf, head_row = overlap_jobs(run_collect, run_extras)
+    if moment_aggs and not df.is_cached:
+        pdf, row = overlap_jobs(proj.toPandas, run_moments)
     else:
         # an unmaterialized persist underneath would make concurrent jobs
         # race to compute the same cached partitions: collect first (it
-        # materializes), then read the extras off the cache
-        pdf = run_collect()
-        head_row = run_extras()
+        # materializes), then read the moments off the cache
+        pdf = proj.toPandas()
+        row = run_moments()
 
-    if extras_out is not None and head_row is not None:
-        _extras_from_row(head_row, 0, extras_out)
-    out: dict[str, list] = {}
+    prof.rows = len(pdf)
     for i, c in enumerate(cols):
         mask = ~pdf[f"__qz_{i}"].to_numpy(dtype=bool)
         vals = pdf[f"__qx_{i}"].to_numpy(dtype="float64")[mask]
-        n = vals.size
-        if n == 0:
-            out[c] = [None for _ in ps]
-            if points_out is not None:
-                points_out[c] = [None for _ in ps]
-            continue
         vals.sort()
-        res, pts = [], []
-        for p in ps:
-            h = (n - 1) * p
-            k_lo, k_hi = math.floor(h), math.ceil(h)
-            x0, x1 = float(vals[k_lo]), float(vals[k_hi])
-            frac = h - k_lo
-            res.append(x0 + (x1 - x0) * frac)
-            pts.append((x0, x1, frac))
-        out[c] = res
-        if points_out is not None:
-            points_out[c] = pts
-    return out
+        points = [None for _ in ps]
+        if vals.size:
+            points = [
+                (float(vals[lo]), float(vals[hi]), frac)
+                for lo, hi, frac in (_ranks(vals.size, p) for p in ps)
+            ]
+        prof.columns[c] = ColumnProfile(vals.size, points)
+    return row
 
 
 def _band_walk(df: DataFrame, bands: list) -> tuple[list, int]:
@@ -207,22 +230,16 @@ def _band_walk(df: DataFrame, bands: list) -> tuple[list, int]:
     return walked, len(rows)
 
 
-def _quantiles_from_digest(
-    df: DataFrame,
-    cols: list,
-    ps: list,
-    extra_head_aggs: Sequence | None,
-    extras_out: dict | None,
-    points_out: dict | None,
-    debug_out: dict | None,
-) -> dict:
-    """Large-regime exact quantiles, in 3 jobs when no band needs a second
-    bracket:
+def _profile_from_digest(
+    df: DataFrame, cols: list, ps: list, moment_aggs: list, prof: Profile
+) -> Row:
+    """Large regime, in 3 jobs when no band needs a second bracket:
 
-    1. ONE head pass: non-null count + t-digest brackets for every column,
-       plus ``extra_head_aggs`` (vs Spark's ``median``/``percentile``,
-       which buffer every value of every column in one aggregation
-       buffer — O(n) reducer memory, the scale-killer this replaces);
+    1. ONE head pass: the row count, and per column the non-NULL count,
+       the t-digest brackets and ``moment_aggs`` (vs Spark's
+       ``median``/``percentile``, which buffer every value of every column
+       in one aggregation buffer — O(n) reducer memory, the scale-killer
+       this replaces);
     2. a re-bracket, only for the columns whose head count predicts a band
        above ``_BAND_ROWS_CAP``;
     3. ONE band walk (``_band_walk``) over every (column, p).
@@ -230,28 +247,23 @@ def _quantiles_from_digest(
     A band that misses its ranks (a pathological distribution vs an
     over-tight sketch) is re-bracketed and walked once more, for the
     missed (column, p) only; a second miss raises — never a full-column
-    collect."""
+    collect. Returns the head row, which holds the moments."""
     probes = _bracket_probes(ps, _ACCURACY)
     head = df.agg(
+        F.count(F.lit(1)).alias("rows"),
         *[F.count(c).alias(f"n_{i}") for i, c in enumerate(cols)],
         *[
             F.percentile_approx(c, F.lit(probes), F.lit(_ACCURACY)).alias(f"b_{i}")
             for i, c in enumerate(cols)
         ],
-        *(extra_head_aggs or []),
+        *moment_aggs,
     ).first()
-    if extras_out is not None and extra_head_aggs:
-        # extras are positionally the aggregates after the n_/b_ block —
-        # extracted by index, not by alias-prefix filtering (ADVICE r12:
-        # a caller alias like 'n_rows' must not be silently dropped)
-        _extras_from_row(head, 2 * len(cols), extras_out)
-    out = {c: [None for _ in ps] for c in cols}
-    if points_out is not None:
-        points_out.update({c: [None for _ in ps] for c in cols})
+    prof.rows = head["rows"]
     n = {i: head[f"n_{i}"] for i in range(len(cols))}
+    prof.columns.update({c: ColumnProfile(n[i], [None for _ in ps]) for i, c in enumerate(cols)})
     live = [(i, c) for i, c in enumerate(cols) if n[i] > 0 and head[f"b_{i}"] is not None]
     if not live:
-        return out
+        return head
 
     # Band-size guard (r12 verdict #4): the sketch guarantees each band
     # spans <= ~6 n/accuracy ranks per percentile. If the head-pass count
@@ -275,28 +287,24 @@ def _quantiles_from_digest(
         for i, _ in reb:
             if reb_row[f"b2_{i}"] is not None:
                 brackets[i] = reb_row[f"b2_{i}"]
-        if debug_out is not None:
-            debug_out["rebracket_accuracy"] = {c: acc[i] for i, c in reb}
+        prof.rebracket_accuracy = {c: acc[i] for i, c in reb}
 
     todo = [(i, c, j) for i, c in live for j in range(len(ps))]
     band_of = {(i, j): (brackets[i][2 * j], brackets[i][2 * j + 1]) for i, _, j in todo}
-    points: dict = {}
-    collected = 0
     for widened in (False, True):
         walked, n_rows = _band_walk(df, [(c, *band_of[i, j]) for i, c, j in todo])
-        collected += n_rows
+        prof.band_rows_collected += n_rows
         missed = []
         for (i, c, j), (c_lt, band) in zip(todo, walked):
-            h = (n[i] - 1) * ps[j]
-            k_lo, k_hi = math.floor(h), math.ceil(h)
+            k_lo, k_hi, frac = _ranks(n[i], ps[j])
             if c_lt <= k_lo and k_hi < c_lt + sum(cnt for _, cnt in band):
-                points[i, j] = (
-                    order_stat(band, k_lo - c_lt), order_stat(band, k_hi - c_lt), h - k_lo
+                prof.columns[c].points[j] = (
+                    order_stat(band, k_lo - c_lt), order_stat(band, k_hi - c_lt), frac
                 )
             elif widened:
                 lo, hi = band_of[i, j]
                 raise ValueError(
-                    f"exact_column_quantiles: band [{lo}, {hi}] of column {c!r} misses "
+                    f"column_profile: band [{lo}, {hi}] of column {c!r} misses "
                     f"rank {k_lo}..{k_hi} for p={ps[j]} even after widening"
                 )
             else:
@@ -321,72 +329,54 @@ def _quantiles_from_digest(
         ).first()
         band_of.update({(i, j): tuple(wide[f"w_{k}"]) for k, (i, _, j) in enumerate(missed)})
         todo = missed
-        if debug_out is not None:
-            debug_out["widened"] = [(c, ps[j]) for _, c, j in missed]
-    if debug_out is not None:
-        debug_out["band_rows_collected"] = collected
-    for i, c in live:
-        pts = [points[i, j] for j in range(len(ps))]
-        out[c] = [x0 + (x1 - x0) * frac for x0, x1, frac in pts]
-        if points_out is not None:
-            points_out[c] = pts
-    return out
+        prof.widened = [(c, ps[j]) for _, c, j in missed]
+    return head
 
 
-def exact_column_quantiles(
-    df: DataFrame,
-    cols: Sequence[str],
-    ps: Sequence[float],
-    extra_head_aggs: Sequence | None = None,
-    extras_out: dict | None = None,
-    points_out: dict | None = None,
-    debug_out: dict | None = None,
-) -> dict:
-    """Exact interpolated quantiles (quantile_cont / Spark ``percentile``
-    semantics, NULLs excluded) of every column in ``cols`` at every
-    probability in ``ps``: ``{col: [q, ...]}``, with ``None`` for each p of
-    a column that has no values.
+def column_profile(
+    df: DataFrame, cols: Sequence[str], ps: Sequence[float], moments: bool = False
+) -> Profile:
+    """Profile every column in ``cols`` at every probability in ``ps`` (see
+    :class:`Profile`): the row count, each column's non-NULL count, and
+    exact interpolated quantiles (quantile_cont / Spark ``percentile``
+    semantics, NULLs excluded) with their order-statistic points.
 
     One size gate picks the plan: when the optimizer sizes the column
     projection at or below ``_QUANTILE_COLLECT_BYTES`` (128 MB), ONE
-    collect + driver sort (``_quantiles_from_collect``); otherwise the
-    bounded-memory refinement (``_quantiles_from_digest``). Both give
-    bit-identical results.
+    collect + driver sort (``_profile_from_collect``); otherwise, or when
+    the plan cannot be sized, the bounded-memory refinement
+    (``_profile_from_digest``). Both give bit-identical profiles. With no
+    columns or no probabilities nothing runs, and ``rows``, each ``n``
+    and the gate record are ``None``.
 
-    ``extra_head_aggs`` (r12 opt): caller-supplied aggregate Columns that
-    ride the same pass — a caller needing plain streaming aggs (counts,
-    means, stddevs) over the SAME frame saves a whole scan. Their values
-    land in ``extras_out`` keyed by alias.
+    Because order statistics commute with monotone non-decreasing maps
+    (sorted(g(x)) == g(sorted(x))), a caller can derive the exact
+    interpolated quantile of g(column) from the points as
+    g(x0) + (g(x1) - g(x0)) * frac WITHOUT a second refinement pass — the
+    cleaning kernel gets the post-clip median from the pre-clip points.
 
-    ``points_out`` (r12 opt): receives {col: [(x0, x1, frac) | None, ...]}
-    — the two exact order statistics and interpolation fraction behind
-    each quantile (q = x0 + (x1 - x0) * frac), ``None`` where the column
-    has no values. Because order statistics commute with monotone
-    non-decreasing maps (sorted(g(x)) == g(sorted(x))), a caller can derive
-    the exact interpolated quantile of g(column) as
-    g(x0) + (g(x1) - g(x0)) * frac WITHOUT a second refinement pass — used
-    by the cleaning kernel to get the post-clip median from the pre-clip
-    order statistics.
-
-    ``debug_out`` (tests/diagnostics) records the regime taken and the
-    size estimate; on the digest path also the rebracket accuracies, the
-    widened (column, p) pairs and the collected band row count."""
+    ``moments`` adds each column's ``F.avg`` and ``F.stddev_samp``. It is a
+    flag, not always on, because in the collect regime the moments are a
+    Spark aggregate of their own (overlapped with the collect unless the
+    input is cached): one more job per call, which the silver fit and the
+    medians do not need. In the digest regime they ride the head pass."""
     cols, ps = list(cols), list(ps)
     if not cols or not ps:
-        return {c: [None for _ in ps] for c in cols}
-    try:
-        est = int(df.select(*cols)._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    except Exception:  # un-estimable plan: assume big
-        est = _QUANTILE_COLLECT_BYTES + 1
-    regime = "collect" if est <= _QUANTILE_COLLECT_BYTES else "digest"
-    if debug_out is not None:
-        debug_out["regime"] = regime
-        debug_out["est_bytes"] = est
-    if regime == "collect":
-        return _quantiles_from_collect(df, cols, ps, extra_head_aggs, extras_out, points_out)
-    return _quantiles_from_digest(
-        df, cols, ps, extra_head_aggs, extras_out, points_out, debug_out
-    )
+        return Profile(None, {c: ColumnProfile(None, [None for _ in ps]) for c in cols}, None, None)
+    est = estimate_bytes(df.select(*cols))
+    regime = "collect" if est is not None and est <= _QUANTILE_COLLECT_BYTES else "digest"
+    prof = Profile(None, {}, regime, est)
+    moment_aggs = []
+    if moments:
+        moment_aggs = [F.avg(c).alias(f"m_{i}") for i, c in enumerate(cols)] + [
+            F.stddev_samp(c).alias(f"s_{i}") for i, c in enumerate(cols)
+        ]
+    fit = _profile_from_collect if regime == "collect" else _profile_from_digest
+    row = fit(df, cols, ps, moment_aggs, prof)
+    if moments:
+        for i, c in enumerate(cols):
+            prof.columns[c].mean, prof.columns[c].stddev = row[f"m_{i}"], row[f"s_{i}"]
+    return prof
 
 
 def describe_table(
@@ -608,7 +598,8 @@ def logistic_irls(
 
     The (y, x...) projection is cached across rounds ONLY when the
     optimizer's size estimate says rescanning is the bigger cost
-    (``sources.tables._PERSIST_BYTES``, 1 GiB): at
+    (``sources.tables._PERSIST_BYTES``, 1 GiB; a plan the optimizer
+    cannot size is not cached): at
     sf0.1 (100k rows) the r5 unconditional `persist()` made every
     measured statistic WORSE (median 1.06 -> 0.80 s without, spread
     1.57x -> 1.11x) because block-manager materialization + cached-block
@@ -627,10 +618,8 @@ def logistic_irls(
         F.col(y_col).cast("double").alias(y_col),
         *[F.col(c).cast("double").alias(c) for c in x_cols],
     )
-    est_bytes = int(
-        proj._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-    )
-    persisted = est_bytes > _PERSIST_BYTES
+    est_bytes = estimate_bytes(proj)
+    persisted = est_bytes is not None and est_bytes > _PERSIST_BYTES
     if persisted:
         proj = proj.persist()
 

@@ -175,9 +175,7 @@ GROUP BY o_orderpriority
 # median stays exact-native: ~50 distinct values, O(distinct) memory.
 # ---------------------------------------------------------------------------
 def _grand_aggs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from urban_traffic_data_lake_project_spark.operators.stats import (
-        exact_column_quantiles,
-    )
+    from urban_traffic_data_lake_project_spark.operators.stats import column_profile
     from urban_traffic_data_lake_project_spark.queries.base import overlap_jobs
 
     li = load_table(spark, sf_dir, "lineitem")
@@ -212,7 +210,8 @@ def _grand_aggs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     row = base_row
     row["n_parts"] = n_parts
-    q25, q75 = exact_column_quantiles(li, ["l_extendedprice"], [0.25, 0.75])["l_extendedprice"]
+    prof = column_profile(li, ["l_extendedprice"], [0.25, 0.75])
+    q25, q75 = prof.columns["l_extendedprice"].quantiles
     out = {
         **row,
         "q25_price": round(q25, ROUND_STAT),

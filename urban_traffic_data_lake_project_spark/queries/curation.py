@@ -1547,9 +1547,7 @@ _QS_KEY_SQL = "'qs|' || l_orderkey::VARCHAR || '|' || l_linenumber::VARCHAR"
 
 
 def _quantile_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from urban_traffic_data_lake_project_spark.operators.stats import (
-        exact_column_quantiles,
-    )
+    from urban_traffic_data_lake_project_spark.operators.stats import column_profile
 
     li = load_table(spark, sf_dir, "lineitem")
     key = F.concat_ws("|", "l_orderkey", "l_linenumber")
@@ -1568,20 +1566,18 @@ def _quantile_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
             for i, p in enumerate(_QS_PS)
         ]
     )
-    exact = exact_column_quantiles(
-        li.select(*[F.col(c).cast("double").alias(c) for c in _QS_COLS]),
-        list(_QS_COLS),
-        list(_QS_PS),
-    )
+    exact = column_profile(
+        li.select(*[F.col(c).cast("double").alias(c) for c in _QS_COLS]), _QS_COLS, _QS_PS
+    ).columns
     rows = F.array(
         *[
             F.struct(
                 F.lit(c).alias("column_name"),
                 F.lit(p).alias("p"),
                 F.round(F.col(f"__{c}_{i}"), ROUND_STAT).alias("sample_q"),
-                F.round(F.lit(float(exact[c][i])), ROUND_STAT).alias("exact_q"),
+                F.round(F.lit(float(exact[c].quantiles[i])), ROUND_STAT).alias("exact_q"),
                 F.round(
-                    F.abs(F.col(f"__{c}_{i}") - F.lit(float(exact[c][i]))),
+                    F.abs(F.col(f"__{c}_{i}") - F.lit(float(exact[c].quantiles[i]))),
                     ROUND_STAT,
                 ).alias("abs_err"),
             )

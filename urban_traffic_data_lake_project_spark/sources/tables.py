@@ -77,6 +77,16 @@ def spread_to_parallelism(df: DataFrame) -> DataFrame:
     return df
 
 
+def estimate_bytes(df: DataFrame) -> int | None:
+    """The optimizer's size estimate of ``df``'s plan in bytes, or ``None``
+    when the plan cannot be estimated. Each caller picks its own branch for
+    ``None``."""
+    try:
+        return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    except Exception:
+        return None
+
+
 # Optimizer-estimated size above which a frame read by several passes is
 # persisted (``persist_for_reuse_if_large``, ``logistic_irls``): below it,
 # re-deriving the subtree measured faster than caching it.
@@ -104,12 +114,8 @@ def persist_for_reuse_if_large(df: DataFrame, probe_df: DataFrame | None = None)
     the probed plan driver-side, which for a join-bearing ``df`` costs a
     visible fraction of a bench-scale run (measured ~+6% on
     text_docsim_topk probing the banded-postings join directly)."""
-    try:
-        probe = probe_df if probe_df is not None else df
-        est = int(probe._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    except Exception:
-        return df
-    if est > _PERSIST_BYTES:
+    est = estimate_bytes(probe_df if probe_df is not None else df)
+    if est is not None and est > _PERSIST_BYTES:
         from pyspark import StorageLevel
 
         return df.persist(StorageLevel.MEMORY_AND_DISK)
