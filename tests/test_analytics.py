@@ -66,7 +66,8 @@ def test_mc_accident_risk_tracks_factor(scenarios):
 
 def test_bootstrap_ci_contains_true_mean_with_sane_width(spark, lineitem):
     out = {r["column_name"]: r for r in B.bootstrap_ci(
-        lineitem, cols=["l_quantity", "l_extendedprice"], n_replicates=500, seed=7
+        lineitem, cols=["l_quantity", "l_extendedprice"], n_replicates=500, seed=7,
+        hash_key=F.concat_ws("|", "l_orderkey", "l_linenumber"),
     ).collect()}
     stats = lineitem.agg(
         F.avg("l_quantity").alias("mq"), F.stddev_samp("l_quantity").alias("sq"),
@@ -86,12 +87,13 @@ def test_bootstrap_ci_contains_true_mean_with_sane_width(spark, lineitem):
 
 
 def test_bootstrap_replicate_means_distribution(spark):
-    df = spark.range(2000).select((F.col("id") % 100).cast("double").alias("x"))
-    means = B.poisson_bootstrap_means(df, ["x"], n_replicates=400, seed=3).collect()
+    df = spark.range(2000).select("id", (F.col("id") % 100).cast("double").alias("x"))
+    means = B.poisson_bootstrap_means(
+        df, ["x"], n_replicates=400, seed=3, hash_key=F.col("id").cast("string")
+    ).collect()
     vals = np.array([r["replicate_mean"] for r in means])
     assert len(vals) == 400
     true_mean = 49.5
-    se = np.std(np.arange(100)) / math.sqrt(2000) if False else None
     assert abs(vals.mean() - true_mean) < 0.2
     assert 0.3 < vals.std() < 1.5
 
@@ -145,6 +147,42 @@ def test_exact_bootstrap_nan_exclusion_matches_dense_path(spark):
     exp = (W[ok].T @ X[ok]) / W[ok].sum(axis=0)
     got = np.array([r["replicate_mean"] for r in sorted(out, key=lambda r: r["replicate"])])
     assert np.allclose(got, exp, rtol=0, atol=1e-12)
+
+
+def test_bootstrap_rejects_null_row_key(spark):
+    """A NULL key hashes to NULL; the kernel must refuse it rather than
+    give every NULL-key row one shared weight row."""
+    df = spark.createDataFrame([("a", 1.0), (None, 2.0), ("c", 3.0)], "k string, x double")
+    with pytest.raises(Exception, match="bootstrap row key .* is NULL"):
+        B.poisson_bootstrap_means(df, ["x"], n_replicates=5, hash_key=F.col("k")).collect()
+
+
+@pytest.mark.parametrize("grouped", [False, True])
+def test_bootstrap_is_partition_invariant(spark, grouped):
+    """Weights depend only on the row key, so the same rows cut into 1, 3
+    or 8 input partitions give the same CIs. Integer-valued x and integer
+    weights keep every partial sum exact, so the cross-partition sum
+    order cannot move a bit."""
+
+    def run(n_parts):
+        df = spark.range(0, 600, 1, numPartitions=n_parts).select(
+            "id",
+            (F.col("id") % 3).cast("string").alias("g"),
+            F.when(F.col("id") % 11 == 0, None)
+            .otherwise(F.pmod(F.col("id") * 7919, F.lit(101)).cast("double"))
+            .alias("x"),
+        )
+        key = F.col("id").cast("string")
+        if grouped:
+            out = B.grouped_bootstrap_ci(df, "g", ["x"], n_replicates=200, seed=5, hash_key=key)
+        else:
+            out = B.bootstrap_ci(df, cols=["x"], n_replicates=200, seed=5, hash_key=key)
+        return sorted(out.collect())
+
+    base = run(1)
+    assert len(base) == (3 if grouped else 1)
+    for n_parts in (3, 8):
+        assert run(n_parts) == base, n_parts
 
 
 def test_fa_em_recovers_low_rank_structure():
@@ -410,6 +448,7 @@ def test_grouped_bootstrap_ci_covers_group_means(spark):
     # two groups with well-separated means; CIs must bracket each group's
     # own mean and be far narrower than the between-group gap
     df = spark.range(4000).select(
+        "id",
         F.when(F.col("id") % 2 == 0, "a").otherwise("b").alias("g"),
         (
             F.when(F.col("id") % 2 == 0, 100.0).otherwise(500.0)
@@ -420,7 +459,12 @@ def test_grouped_bootstrap_ci_covers_group_means(spark):
         r["g"]: r["m"]
         for r in df.groupBy("g").agg(F.avg("x").alias("m")).collect()
     }
-    out = {r["g"]: r for r in grouped_bootstrap_ci(df, "g", ["x"], n_replicates=500).collect()}
+    out = {
+        r["g"]: r
+        for r in grouped_bootstrap_ci(
+            df, "g", ["x"], n_replicates=500, hash_key=F.col("id").cast("string")
+        ).collect()
+    }
     assert set(out) == {"a", "b"}
     for g, r in out.items():
         assert r["ci_lower_95"] <= true_means[g] <= r["ci_upper_95"], (g, r)

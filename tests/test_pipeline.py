@@ -97,6 +97,13 @@ def test_run_gold_job_floor(medallion):
     assert n_jobs <= 20, f"run_gold submitted {n_jobs} jobs"
 
 
+def test_gold_bootstrap_key_is_unique_on_merged_data(spark, layers):
+    # run_gold's bootstrap weights are keyed by this column: a repeated
+    # key would give two merged rows one weight row
+    m = spark.read.parquet(f"{layers.silver}/merged_data")
+    assert m.select(P.gold_row_key()).distinct().count() == m.count()
+
+
 def test_silver_is_one_file_per_table(layers):
     import glob
 

@@ -166,6 +166,8 @@ def _run_counting_jobs(spark, fn) -> int:
         ("sketch_quantile_kmv", 3),           # r12: 8  (quantile small regime)
         ("clean_full_kernel", 6),             # 9 before the fused fit (F.mode agg)
         ("mc_scenario_expectations", 5),      # guards the moments=True collect path
+        ("bootstrap_ci", 7),
+        ("bootstrap_ci_grouped", 5),
     ],
 )
 def test_fit_path_job_count_floor(spark, sf_dir, name, max_jobs):

@@ -1,18 +1,28 @@
 """Bootstrap confidence intervals (reference M3, scripts/monte_carlo.py:237-285).
 
-Reference semantics: for each numeric column (first ``max_columns`` with
->20 non-null values), draw ``n_simulations`` resamples-with-replacement of
-size n, record each resample's mean, and report mean / population-std /
-2.5% / 97.5% of those means.
+Reference semantics: for each numeric column (the first 8 with >20
+non-null values, NULLs filled with the column median), draw
+``n_simulations`` resamples-with-replacement of size n, record each
+resample's mean, and report mean / population-std / 2.5% / 97.5% of those
+means.
 
 Spark-first design — the **Poisson bootstrap**: in a resample of size n,
 each row's multiplicity is Binomial(n, 1/n) -> Poisson(1) for large n. So
-instead of materializing n x n_simulations resampled rows, each partition
-draws a Poisson(1) weight per (row, replicate) and emits per-replicate
+instead of materializing n x n_simulations resampled rows, each row gets a
+Poisson(1) weight per replicate and each partition emits per-replicate
 partial sums (sum w*x, sum w). One Arrow-batched ``mapInPandas`` pass over
 the data + one tiny aggregation by replicate. Cost is O(rows x replicates)
 vectorized multiply-adds with O(replicates) output per partition — scales
 to any data size; replicate count is the only memory knob.
+
+One weight draw: a counter-based RNG keyed by the row. Each caller names a
+row key; the weight of (row, replicate) is a pure function of that key,
+the seed and the replicate index, so the answer depends only on the input
+rows — not on how they are split into partitions, on the core count or on
+the engine (the DuckDB oracle replays the same weights bit for bit). A
+lost partition recomputed from lineage gets the same weights. The key
+must be non-NULL and should be unique per row: a NULL key raises
+``ValueError``; duplicate keys share one weight row.
 
 Deviation from the reference (documented): replicate composition is
 Poisson(1) rather than exact multinomial — statistically equivalent for
@@ -27,37 +37,29 @@ from collections.abc import Iterator, Sequence
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from urban_traffic_data_lake_project_spark.functions.core import stable_hash64
 from urban_traffic_data_lake_project_spark.operators.cleaning import compute_medians
 
-
-def _partial_schema() -> str:
-    return "column_name string, replicate int, wx double, w double"
-
+# bootstrap_ci's column selection, fixed as in the reference
+# (monte_carlo.py:237): the first 8 numeric columns holding more than 20
+# non-null values, NULLs filled with the column median.
+_MAX_COLUMNS = 8
+_MIN_VALUES = 20
 
 # Poisson(1) CDF truncated at 8 (P[X > 8] ~ 1.1e-6 — immaterial for CI
-# estimation). The weight pipeline is float32 end-to-end: with 32 workers
-# the pass is memory-bandwidth-bound, so halving the matrix bytes beats
-# faster single-thread kernels; Generator.poisson (int64) additionally
-# loses BLAS for the partial-sum matmul. float32 sgemm partials perturb a
-# replicate mean by ~1e-7 relative — orders below the Monte Carlo noise
-# (std/sqrt(n_replicates)) the estimator itself carries.
+# estimation). The float32 literals are the definition: the integer
+# thresholds below and the DuckDB oracle's weight SQL
+# (queries/analytics.py::_bs_weight_cells) are both derived from these
+# exact values, so changing their precision changes every weight.
 _POISSON1_CDF = np.cumsum([math.exp(-1.0) / math.factorial(k) for k in range(8)]).astype(
     np.float32
 )
 
 
-def _poisson1_weights(rng: np.random.Generator, shape: tuple[int, int]) -> np.ndarray:
-    u = rng.random(shape, dtype=np.float32)
-    w = np.zeros(shape, dtype=np.float32)
-    for c in _POISSON1_CDF:
-        w += u > c
-    return w
-
-
-# --- exact (oracle-replayable) weight path -------------------------------
+# --- the weight draw (oracle-replayable) ---------------------------------
 # Counter-based RNG: one stable_hash64 per ROW (JVM-side md5, cheap), then
 # SplitMix64 of (row_hash + (replicate+1) * GOLDEN) per (row, replicate)
 # cell. Every operation is integer arithmetic mod 2^64 — bit-identical in
@@ -151,143 +153,122 @@ def _poisson1_weights_exact(h: np.ndarray, n_replicates: int) -> np.ndarray:
     return w8.astype(np.float64)
 
 
+def _replicate_means(
+    df: DataFrame,
+    hash_key: Column,
+    cols: list[str],
+    n_replicates: int,
+    seed: int,
+    group_cols: list[str],
+) -> DataFrame:
+    """(*group_cols, column_name, replicate, replicate_mean): one
+    ``mapInPandas`` pass accumulating per-(group, column) partial sums
+    (sum w*x, sum w), then one aggregation by replicate. With no group
+    column each Arrow batch is one group. Groups are NOT repartitioned
+    into their own tasks (a giant group would convoy a per-group
+    applyInPandas); group size only affects the accumulation."""
+    # the weight pass is CPU-bound numpy (O(rows x replicates)); parquet
+    # split count (often just a few row groups) would convoy it — spread
+    # over the full parallelism. The md5 row hash runs AFTER the exchange
+    # for the same reason: computed pre-shuffle it runs at the parquet
+    # split count (3 tasks at sf0.1 — measured 0.5 s serialized vs ~0.05 s
+    # spread over 32).
+    target = df.sparkSession.sparkContext.defaultParallelism
+    keyed = df.select(hash_key.alias("__k"), *group_cols, *cols)
+    if keyed.rdd.getNumPartitions() < target:
+        keyed = keyed.repartition(target)
+    proj = keyed.select(
+        stable_hash64(F.col("__k"), salt=f"bs{seed}|").alias("__h"), *group_cols, *cols
+    )
+    # carry each group key's NATIVE type through the partial schema — a
+    # hardcoded string would coerce int/date keys and make the CI table
+    # mismatch the source on join-back
+    schema = ", ".join(
+        [f"{g} {df.schema[g].dataType.simpleString()}" for g in group_cols]
+        + ["column_name string", "replicate int", "wx double", "w double"]
+    )
+    key_name = str(hash_key)
+    # 0.5M cells -> the uint64 z matrix is ~4 MB: cache-resident chunks cut
+    # the weight kernel's DRAM traffic under concurrent tasks. Weights are
+    # per-(row, replicate) counters, so the chunk size never moves them.
+    chunk = max(1, 500_000 // max(n_replicates, 1))
+
+    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        acc: dict = {}  # group -> (sum w*x, sum w), each (replicates, cols)
+        for pdf in batches:
+            if pdf["__h"].isna().any():
+                raise ValueError(f"bootstrap row key {key_name} is NULL on some rows")
+            groups = pdf.groupby(group_cols, sort=False) if group_cols else [((), pdf)]
+            for g, sub in groups:
+                wx_acc, w_acc = acc.setdefault(
+                    g, (np.zeros((n_replicates, len(cols))), np.zeros((n_replicates, len(cols))))
+                )
+                X = sub[cols].to_numpy(dtype="float64")
+                H = sub["__h"].to_numpy(dtype="int64")
+                for lo in range(0, X.shape[0], chunk):
+                    Xs = X[lo : lo + chunk]
+                    w = _poisson1_weights_exact(H[lo : lo + chunk], n_replicates)
+                    nan_mask = np.isnan(Xs)
+                    if nan_mask.any():
+                        wx_acc += w.T @ np.where(nan_mask, 0.0, Xs)
+                        w_acc += w.T @ (~nan_mask).astype("float64")
+                    else:
+                        # NULL-free chunk (the common case): the denominator
+                        # is the replicate weight sums — identical to
+                        # w.T @ ones (small-integer weights), one gemm
+                        wx_acc += w.T @ Xs
+                        w_acc += w.sum(axis=0, dtype="float64")[:, None]
+        out = [
+            pd.DataFrame(
+                {
+                    **dict(zip(group_cols, g)),
+                    "column_name": c,
+                    "replicate": np.arange(n_replicates, dtype="int32"),
+                    "wx": wx_acc[:, j],
+                    "w": w_acc[:, j],
+                }
+            )
+            for g, (wx_acc, w_acc) in acc.items()
+            for j, c in enumerate(cols)
+        ]
+        if out:
+            yield pd.concat(out, ignore_index=True)
+
+    return (
+        proj.mapInPandas(gen, schema=schema)
+        .groupBy(*group_cols, "column_name", "replicate")
+        .agg((F.sum("wx") / F.sum("w")).alias("replicate_mean"))
+    )
+
+
+def _ci_summary(means: DataFrame, keys: list[str], n_replicates: int) -> DataFrame:
+    """The reference's CI columns (monte_carlo.py:277-283) over the
+    replicate means of each ``keys`` group."""
+    return means.groupBy(*keys).agg(
+        F.round(F.avg("replicate_mean"), 4).alias("mean_estimate"),
+        F.round(F.stddev_pop("replicate_mean"), 4).alias("std_estimate"),
+        F.round(F.percentile("replicate_mean", 0.025), 4).alias("ci_lower_95"),
+        F.round(F.percentile("replicate_mean", 0.975), 4).alias("ci_upper_95"),
+        F.lit(n_replicates).alias("simulations"),
+    )
+
+
 def poisson_bootstrap_means(
     df: DataFrame,
     cols: Sequence[str],
     n_replicates: int = 1000,
     seed: int = 42,
-    hash_key=None,
+    *,
+    hash_key: Column,
 ) -> DataFrame:
     """Per (column, replicate) weighted means. Downstream consumers compute
     CI stats over the replicate dimension (tiny: n_replicates rows/col).
 
-    ``hash_key`` (a Column, e.g. the row's natural key): switch the weight
-    draw to the EXACT counter-based path — ``stable_hash64`` of the key
-    (salted with the seed) + SplitMix64 per replicate. Deterministic
-    across partitionings and engines, so a SQL oracle replays the weights
-    bit-for-bit (r10 verdict item 3). float64 end-to-end (the float32
-    sgemm shortcut stays on the partition-seeded fast path only)."""
-    exact = hash_key is not None
-    # the weight-drawing pass is CPU-bound numpy (O(rows x replicates)
-    # poisson draws); parquet split count (often just a few row groups)
-    # would convoy it — spread over the full parallelism. On the exact
-    # path the md5 row hash moves AFTER the exchange for the same reason:
-    # computed pre-shuffle it runs at the parquet split count (3 tasks at
-    # sf0.1 — measured 0.5 s serialized vs ~0.05 s spread over 32).
-    target = df.sparkSession.sparkContext.defaultParallelism
-    if exact:
-        from urban_traffic_data_lake_project_spark.functions.core import stable_hash64
-
-        keyed = df.select(hash_key.alias("__k"), *cols)
-        if keyed.rdd.getNumPartitions() < target:
-            keyed = keyed.repartition(target)
-        proj = keyed.select(
-            stable_hash64(F.col("__k"), salt=f"bs{seed}|").alias("__h"), *cols
-        )
-    else:
-        proj = df.select(*cols)
-        if proj.rdd.getNumPartitions() < target:
-            proj = proj.repartition(target)
-
-    def gen_exact(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        acc_wx = {c: np.zeros(n_replicates) for c in cols}
-        acc_w = {c: np.zeros(n_replicates) for c in cols}
-        for pdf in batches:
-            X = pdf[list(cols)].to_numpy(dtype="float64")
-            H = pdf["__h"].to_numpy(dtype="int64")
-            # 0.5M cells -> the uint64 z matrix is ~4 MB: with 32
-            # concurrent tasks the weight kernel is DRAM-bandwidth-bound
-            # at the old 32 MB working set; cache-resident chunks cut the
-            # intermediate passes' DRAM traffic (1.5x single-thread, more
-            # under contention). The exact path is chunk-size-invariant —
-            # weights are per-(row, replicate) counters, not stream draws.
-            chunk = max(1, int(500_000 / max(n_replicates, 1)))
-            for lo in range(0, X.shape[0], chunk):
-                Xs = X[lo : lo + chunk]
-                w = _poisson1_weights_exact(H[lo : lo + chunk], n_replicates)
-                nan_mask = np.isnan(Xs)
-                if nan_mask.any():
-                    Xz = np.where(nan_mask, 0.0, Xs)
-                    wx = w.T @ Xz
-                    wn = w.T @ (~nan_mask).astype("float64")
-                    for j, c in enumerate(cols):
-                        acc_wx[c] += wx[:, j]
-                        acc_w[c] += wn[:, j]
-                else:
-                    # no NULLs in the chunk (the common case): the
-                    # denominator collapses to the replicate weight sums —
-                    # identical to w.T @ ones, skipping a full second gemm
-                    wx = w.T @ Xs
-                    ws = w.sum(axis=0, dtype="float64")
-                    for j, c in enumerate(cols):
-                        acc_wx[c] += wx[:, j]
-                        acc_w[c] += ws
-        out = []
-        for c in cols:
-            out.append(
-                pd.DataFrame(
-                    {
-                        "column_name": c,
-                        "replicate": np.arange(n_replicates, dtype="int32"),
-                        "wx": acc_wx[c],
-                        "w": acc_w[c],
-                    }
-                )
-            )
-        yield pd.concat(out, ignore_index=True)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # Seed deterministically per task partition.
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId() if TaskContext.get() else 0
-        rng = np.random.default_rng(seed * 100_003 + pid)
-        acc_wx = {c: np.zeros(n_replicates) for c in cols}
-        acc_w = {c: np.zeros(n_replicates) for c in cols}
-        for pdf in batches:
-            X = pdf[list(cols)].to_numpy(dtype="float32")
-            # ONE weight matrix per chunk, SHARED by all columns (a joint
-            # bootstrap: the same row resample evaluated on every column).
-            # Per-column CIs are marginally identical to independent
-            # resampling, and the draw count — the dominant cost — drops by
-            # a factor of len(cols). Chunked to bound memory at ~16 MB.
-            chunk = max(1, int(4_000_000 / max(n_replicates, 1)))
-            for lo in range(0, X.shape[0], chunk):
-                Xs = X[lo : lo + chunk]
-                w = _poisson1_weights(rng, (Xs.shape[0], n_replicates))
-                nan_mask = np.isnan(Xs)
-                if nan_mask.any():
-                    Xz = np.where(nan_mask, np.float32(0.0), Xs)
-                    wx = w.T @ Xz                       # (reps, cols) sgemm
-                    wn = w.T @ (~nan_mask).astype("float32")
-                    for j, c in enumerate(cols):
-                        acc_wx[c] += wx[:, j]
-                        acc_w[c] += wn[:, j]
-                else:
-                    wx = w.T @ Xs
-                    ws = w.sum(axis=0, dtype="float64")
-                    for j, c in enumerate(cols):
-                        acc_wx[c] += wx[:, j]
-                        acc_w[c] += ws
-        out = []
-        for c in cols:
-            out.append(
-                pd.DataFrame(
-                    {
-                        "column_name": c,
-                        "replicate": np.arange(n_replicates, dtype="int32"),
-                        "wx": acc_wx[c],
-                        "w": acc_w[c],
-                    }
-                )
-            )
-        yield pd.concat(out, ignore_index=True)
-
-    partials = proj.mapInPandas(gen_exact if exact else gen, schema=_partial_schema())
-    return (
-        partials.groupBy("column_name", "replicate")
-        .agg((F.sum("wx") / F.sum("w")).alias("replicate_mean"))
-    )
+    ``hash_key`` (a Column, e.g. the row's natural key) seeds each row's
+    weights: ``stable_hash64`` of the key salted with the seed, then
+    SplitMix64 per replicate. Required, so the result never depends on the
+    partitioning; a NULL key raises ``ValueError``."""
+    return _replicate_means(df, hash_key, list(cols), n_replicates, seed, [])
 
 
 def grouped_bootstrap_ci(
@@ -296,135 +277,35 @@ def grouped_bootstrap_ci(
     cols: Sequence[str],
     n_replicates: int = 1000,
     seed: int = 42,
-    hash_key=None,
+    *,
+    hash_key: Column,
 ) -> DataFrame:
-    """Per-GROUP bootstrap CIs (e.g. per-language corpus statistics):
-    the same Poisson-bootstrap kernel, accumulated per group inside each
-    Arrow batch, so one pass over the data serves every group — groups
-    are NOT repartitioned into their own tasks (a giant group would
-    convoy a per-group applyInPandas; here group size only affects the
-    accumulation, not the parallelism).
-
-    Returns one row per (group, column) with mean/std/CI bounds over the
-    replicate means. Output volume is |groups| x |cols| x replicates tiny
-    partials per partition — the replicate count is the only memory knob."""
-    cols = list(cols)
-    exact = hash_key is not None
-    # md5 after the exchange — see poisson_bootstrap_means
-    target = df.sparkSession.sparkContext.defaultParallelism
-    if exact:
-        from urban_traffic_data_lake_project_spark.functions.core import stable_hash64
-
-        keyed = df.select(hash_key.alias("__k"), group_col, *cols)
-        if keyed.rdd.getNumPartitions() < target:
-            keyed = keyed.repartition(target)
-        proj = keyed.select(
-            stable_hash64(F.col("__k"), salt=f"bs{seed}|").alias("__h"), group_col, *cols
-        )
-    else:
-        proj = df.select(group_col, *cols)
-        if proj.rdd.getNumPartitions() < target:
-            proj = proj.repartition(target)
-
-    # carry the group key's NATIVE type through the partial schema — a
-    # hardcoded string + str(g) would coerce int/date keys and make the
-    # CI table mismatch the source on join-back (formatting drift)
-    group_ddl = df.schema[group_col].dataType.simpleString()
-    schema = f"{group_col} {group_ddl}, column_name string, replicate int, wx double, w double"
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId() if TaskContext.get() else 0
-        rng = np.random.default_rng(seed * 100_003 + pid)
-        acc_wx: dict = {}
-        acc_w: dict = {}
-        for pdf in batches:
-            for g, sub in pdf.groupby(group_col, sort=False):
-                if g not in acc_wx:
-                    acc_wx[g] = {c: np.zeros(n_replicates) for c in cols}
-                    acc_w[g] = {c: np.zeros(n_replicates) for c in cols}
-                if exact:
-                    X = sub[cols].to_numpy(dtype="float64")
-                    H = sub["__h"].to_numpy(dtype="int64")
-                else:
-                    X = sub[cols].to_numpy(dtype="float32")
-                # exact path: cache-resident chunks (see gen_exact above);
-                # f32 path keeps the historical chunking — its partition-
-                # seeded stream assignment depends on chunk boundaries
-                cells = 500_000 if exact else 4_000_000
-                chunk = max(1, int(cells / max(n_replicates, 1)))
-                for lo in range(0, X.shape[0], chunk):
-                    Xs = X[lo : lo + chunk]
-                    if exact:
-                        w = _poisson1_weights_exact(H[lo : lo + chunk], n_replicates)
-                    else:
-                        w = _poisson1_weights(rng, (Xs.shape[0], n_replicates))
-                    nan_mask = np.isnan(Xs)
-                    if nan_mask.any():
-                        zero = 0.0 if exact else np.float32(0.0)
-                        Xz = np.where(nan_mask, zero, Xs)
-                        wx = w.T @ Xz
-                        wn = w.T @ (~nan_mask).astype(w.dtype)
-                        for j, c in enumerate(cols):
-                            acc_wx[g][c] += wx[:, j]
-                            acc_w[g][c] += wn[:, j]
-                    else:
-                        # NULL-free chunk: denominator == replicate weight
-                        # sums (exact — small-integer weights), one gemm
-                        wx = w.T @ Xs
-                        ws = w.sum(axis=0, dtype="float64")
-                        for j, c in enumerate(cols):
-                            acc_wx[g][c] += wx[:, j]
-                            acc_w[g][c] += ws
-        out = []
-        for g in acc_wx:
-            for c in cols:
-                out.append(
-                    pd.DataFrame(
-                        {
-                            group_col: g,
-                            "column_name": c,
-                            "replicate": np.arange(n_replicates, dtype="int32"),
-                            "wx": acc_wx[g][c],
-                            "w": acc_w[g][c],
-                        }
-                    )
-                )
-        if out:
-            yield pd.concat(out, ignore_index=True)
-
-    partials = proj.mapInPandas(gen, schema=schema)
-    means = partials.groupBy(group_col, "column_name", "replicate").agg(
-        (F.sum("wx") / F.sum("w")).alias("replicate_mean")
-    )
-    return means.groupBy(group_col, "column_name").agg(
-        F.round(F.avg("replicate_mean"), 4).alias("mean_estimate"),
-        F.round(F.stddev_pop("replicate_mean"), 4).alias("std_estimate"),
-        F.round(F.percentile("replicate_mean", 0.025), 4).alias("ci_lower_95"),
-        F.round(F.percentile("replicate_mean", 0.975), 4).alias("ci_upper_95"),
-        F.lit(n_replicates).alias("simulations"),
-    )
+    """Per-GROUP bootstrap CIs (e.g. per-language corpus statistics): the
+    same kernel as ``bootstrap_ci``, accumulated per group inside each
+    Arrow batch, so one pass over the data serves every group. One row per
+    (group, column); rows whose group is NULL are skipped. ``hash_key`` as
+    in ``poisson_bootstrap_means``."""
+    means = _replicate_means(df, hash_key, list(cols), n_replicates, seed, [group_col])
+    return _ci_summary(means, [group_col, "column_name"], n_replicates)
 
 
 def bootstrap_ci(
     df: DataFrame,
     cols: Sequence[str] | None = None,
     n_replicates: int = 1000,
-    max_columns: int = 8,
-    min_values: int = 20,
     seed: int = 42,
-    median_impute: bool = True,
-    hash_key=None,
+    *,
+    hash_key: Column,
 ) -> DataFrame:
     """The reference's bootstrap table (monte_carlo.py:277-283): one row per
     column with mean_estimate, std_estimate (population std of replicate
-    means), ci_lower_95, ci_upper_95, simulations."""
+    means), ci_lower_95, ci_upper_95, simulations. ``hash_key`` as in
+    ``poisson_bootstrap_means``."""
     if cols is None:
         from pyspark.sql.types import NumericType
 
         cols = [f.name for f in df.schema.fields if isinstance(f.dataType, NumericType)]
-    cols = list(cols)[:max_columns]
+    cols = list(cols)[:_MAX_COLUMNS]
     # one cheap codegen pass for counts + null counts; exact medians (a
     # buffering aggregate on high-cardinality doubles) are computed ONLY
     # for columns that actually contain NULLs — usually none
@@ -432,18 +313,11 @@ def bootstrap_ci(
         *[F.count(c).alias(c) for c in cols],
         *[F.count(F.when(F.col(c).isNull(), 1)).alias(f"__nulls_{i}") for i, c in enumerate(cols)],
     ).first()
-    if median_impute:
-        with_nulls = [c for i, c in enumerate(cols) if counts[f"__nulls_{i}"] > 0]
-        if with_nulls:
-            df = df.na.fill(compute_medians(df, with_nulls))
-    cols = [c for c in cols if (counts[c] or 0) > min_values]
+    with_nulls = [c for i, c in enumerate(cols) if counts[f"__nulls_{i}"] > 0]
+    if with_nulls:
+        df = df.na.fill(compute_medians(df, with_nulls))
+    cols = [c for c in cols if (counts[c] or 0) > _MIN_VALUES]
     if not cols:
         raise ValueError("no eligible columns for bootstrap")
     means = poisson_bootstrap_means(df, cols, n_replicates, seed, hash_key=hash_key)
-    return means.groupBy("column_name").agg(
-        F.round(F.avg("replicate_mean"), 4).alias("mean_estimate"),
-        F.round(F.stddev_pop("replicate_mean"), 4).alias("std_estimate"),
-        F.round(F.percentile("replicate_mean", 0.025), 4).alias("ci_lower_95"),
-        F.round(F.percentile("replicate_mean", 0.975), 4).alias("ci_upper_95"),
-        F.lit(n_replicates).alias("simulations"),
-    )
+    return _ci_summary(means, ["column_name"], n_replicates)

@@ -36,7 +36,8 @@ from __future__ import annotations
 import os
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from urban_traffic_data_lake_project_spark.functions.concurrency import overlap_jobs
 from urban_traffic_data_lake_project_spark.operators import bootstrap as B
@@ -141,6 +142,18 @@ def run_merge(spark: SparkSession, paths: LayerPaths) -> None:
     merged.write.mode("overwrite").parquet(os.path.join(paths.silver, "merged_data"))
 
 
+def gold_row_key() -> Column:
+    """The bootstrap row key over ``merged_data``: one merged row per
+    (traffic row, matched weather row). Silver keeps at most one NULL id
+    per table and the left join leaves ``weather_id`` NULL on unmatched
+    traffic rows, so NULL ids map to "" and the key is non-NULL and unique."""
+    return F.concat_ws(
+        "|",
+        F.coalesce(F.col("traffic_id").cast("string"), F.lit("")),
+        F.coalesce(F.col("weather_id").cast("string"), F.lit("")),
+    )
+
+
 def run_gold(spark: SparkSession, paths: LayerPaths, seed: int = 42) -> None:
     """Gold analytics: Monte Carlo scenarios, bootstrap CIs, factor scores."""
     merged = spark.read.parquet(os.path.join(paths.silver, "merged_data"))
@@ -149,9 +162,9 @@ def run_gold(spark: SparkSession, paths: LayerPaths, seed: int = 42) -> None:
         "overwrite"
     ).parquet(os.path.join(paths.gold, "monte_carlo_scenarios"))
 
-    B.bootstrap_ci(merged, n_replicates=1000, seed=seed).write.mode("overwrite").parquet(
-        os.path.join(paths.gold, "monte_carlo_results")
-    )
+    B.bootstrap_ci(merged, n_replicates=1000, seed=seed, hash_key=gold_row_key()).write.mode(
+        "overwrite"
+    ).parquet(os.path.join(paths.gold, "monte_carlo_results"))
 
     model = FA.fit_on_sample(merged)
     FA.attach_factor_scores(merged, model).write.mode("overwrite").parquet(
