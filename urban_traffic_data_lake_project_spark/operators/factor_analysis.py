@@ -8,9 +8,19 @@ rounded to 4dp.
 This environment has no sklearn, and no Spark-ML FA exists — so the model
 is fit with the classic EM algorithm for maximum-likelihood factor
 analysis (Ghahramani & Hinton 1996; Bishop PRML §12.2.4) in numpy on a
-driver-collected sample, then **scored distributedly**: the posterior-mean
+driver-collected fit set, then **scored distributedly**: the posterior-mean
 projection ``E[z|x] = (I + W'Ψ⁻¹W)⁻¹ W'Ψ⁻¹ (x-μ)`` is a p x k matrix
 multiply applied per row inside one Arrow-batched ``mapInPandas`` pass.
+
+One fit set, one EM. Each caller names a row key; the fit set is the
+``fit_sample_rows`` rows with the smallest ``stable_hash64(key)``, taken
+in hash order, and the EM starts from the deterministic
+:func:`rational_init` and runs a fixed number of iterations. So the model
+depends only on the input rows — not on how they are split into
+partitions, on the core count or on the engine (the DuckDB oracle replays
+the fit bit for bit), and a lost partition recomputed from lineage gives
+the same model. The key must be non-NULL and should be unique per row: a
+NULL key raises ``ValueError``.
 
 Scale: fitting sees at most ``fit_sample_rows`` rows (loadings are p x k —
 tiny); scoring is embarrassingly parallel and touches each row once. This
@@ -24,14 +34,24 @@ reconstruction quality and shapes, not raw values (SURVEY.md §5.2).
 
 from __future__ import annotations
 
+import math
 from collections.abc import Iterator, Sequence
 from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+# variance filter: columns whose median-imputed stddev is at most this are
+# dropped before the fit (reference factor_analysis.py:184-185)
+_MIN_STD = 0.01
+# fixed EM iterations: the fewest thousands at which the 200-row gold fit
+# (p=11, k=5) reaches, at every fixture seed 0-16, the likelihood of a
+# random-init EM stopped at a 1e-9 tolerance or 500 iterations (1,000 and
+# 2,000 leave a seed short). One iteration is a few p x p and k x k
+# products, independent of the row count.
+_EM_ITERS = 3000
 
 
 @dataclass(frozen=True)
@@ -42,7 +62,7 @@ class FAModel:
     psi: np.ndarray      # diagonal noise, (p,)
     # fit-time imputation values (column medians): scoring imputes with
     # THESE, so a row with NULLs is treated identically at fit and score time
-    medians: tuple[float, ...] | None = None
+    medians: tuple[float, ...]
 
     @property
     def n_factors(self) -> int:
@@ -54,59 +74,29 @@ class FAModel:
         wp = W / psi[:, None]                       # Ψ⁻¹W
         M1 = np.eye(self.n_factors) + W.T @ wp
         # adjugate form for k=3 so the SQL oracle's closed-form projection
-        # matches ulp-for-ulp (see fit_factor_analysis_em_exact)
+        # matches ulp-for-ulp (see fit_factor_analysis_em)
         G = _inv3(M1) if self.n_factors == 3 else np.linalg.inv(M1)
         return wp @ G.T
 
 
-def fit_factor_analysis_em(
-    X: np.ndarray,
-    n_factors: int,
-    n_iter: int = 500,
-    tol: float = 1e-9,
-    seed: int = 42,
-) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """EM for ML factor analysis. Returns (mean, W, psi)."""
-    n, p = X.shape
-    mu = X.mean(axis=0)
-    Xc = X - mu
-    var = Xc.var(axis=0) + 1e-12
-    rng = np.random.default_rng(seed)
-    W = rng.standard_normal((p, n_factors)) * np.sqrt(var[:, None] / n_factors)
-    psi = var.copy()
-    S = (Xc.T @ Xc) / n
-    prev_ll = -np.inf
-    for _ in range(n_iter):
-        wp = W / psi[:, None]
-        G = np.linalg.inv(np.eye(n_factors) + W.T @ wp)   # posterior cov
-        B = G @ wp.T                                      # k x p: Ez = B (x-mu)
-        SB_T = S @ B.T                                    # p x k
-        Ezz = G * 1.0 + B @ SB_T                          # E[zz'] averaged
-        W = SB_T @ np.linalg.inv(Ezz)
-        psi = np.maximum(np.diag(S) - np.einsum("pk,pk->p", W, SB_T), 1e-8)
-        # log-likelihood for convergence (up to constants)
-        C = W @ W.T + np.diag(psi)
-        sign, logdet = np.linalg.slogdet(C)
-        ll = -0.5 * (logdet + np.trace(np.linalg.solve(C, S)))
-        if abs(ll - prev_ll) < tol:
-            break
-        prev_ll = ll
-    return mu, W, psi
+def init_ratio(j: int, i: int) -> float:
+    """Entry (j, i) of the init pattern, a rational in [-1, 1]:
+    ``(((j+1)*31 + (i+1)*17 - i*(i-1)*(i-2)) % 19 - 9) / 9``. The cubic
+    term is 0 for the first three factors, so the oracled (4, 3) fit keeps
+    its values, and breaks the pattern's linearity in i, which left
+    (p, k) = (6, 5) at rank 4."""
+    return ((((j + 1) * 31 + (i + 1) * 17 - i * (i - 1) * (i - 2)) % 19) - 9) / 9.0
 
 
 def rational_init(p: int, k: int, var: np.ndarray) -> np.ndarray:
     """Deterministic, SQL-replayable init for the EM loop:
-    ``W0[j,i] = sqrt(var_j / k) * ((((j+1)*31 + (i+1)*17) % 19 - 9) / 9)``.
-    Integer arithmetic + one division + one sqrt — every operation is
-    IEEE-exact, so a SQL oracle reproduces the init bit-for-bit (no RNG
-    to replay). The pattern is full-rank for the (p, k) shapes used here
-    and EM converges from any non-degenerate init."""
-    r = np.array(
-        [
-            [((((j + 1) * 31 + (i + 1) * 17) % 19) - 9) / 9.0 for i in range(k)]
-            for j in range(p)
-        ]
-    )
+    ``W0[j,i] = sqrt(var_j / k) * init_ratio(j, i)``. Integer arithmetic +
+    one division + one sqrt — every operation is IEEE-exact, so a SQL
+    oracle reproduces the init bit-for-bit (no RNG to replay). The pattern
+    has rank k for every p >= 2 and k <= min(5, p-1) (its rows repeat with
+    period 19, so p <= 20 covers all p), and EM converges from any
+    full-rank init."""
+    r = np.array([[init_ratio(j, i) for i in range(k)] for j in range(p)])
     return np.sqrt(var[:, None] / k) * r
 
 
@@ -129,16 +119,15 @@ def _inv3(m: np.ndarray) -> np.ndarray:
     )
 
 
-def fit_factor_analysis_em_exact(
-    X: np.ndarray, n_factors: int, n_iter: int = 100
+def fit_factor_analysis_em(
+    X: np.ndarray, n_factors: int, n_iter: int
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Oracle-replayable EM for ML factor analysis: ``rational_init`` and a
-    FIXED iteration count (no log-likelihood convergence break — a break
-    decision near the tolerance could resolve differently across engines
-    at the last ulp, desynchronizing the replay). Same update equations as
-    :func:`fit_factor_analysis_em`; S is the two-pass centered covariance,
-    matching the SQL side's ``avg((x_i - m_i) * (x_j - m_j))`` (the
-    one-pass E[xy] - mx*my form loses ~9 digits to cancellation on
+    """EM for ML factor analysis: ``rational_init`` and a FIXED iteration
+    count (no log-likelihood convergence break — a break decision near the
+    tolerance could resolve differently across engines at the last ulp,
+    desynchronizing the oracle's replay). S is the two-pass centered
+    covariance, matching the SQL side's ``avg((x_i - m_i) * (x_j - m_j))``
+    (the one-pass E[xy] - mx*my form loses ~9 digits to cancellation on
     wide-scale columns — enough to flip a 4dp rounding). Returns
     (mean, W, psi)."""
     n, p = X.shape
@@ -150,10 +139,10 @@ def fit_factor_analysis_em_exact(
     inv = _inv3 if n_factors == 3 else np.linalg.inv
     for _ in range(n_iter):
         wp = W / psi[:, None]
-        G = inv(np.eye(n_factors) + W.T @ wp)
-        B = G @ wp.T
-        SB_T = S @ B.T
-        Ezz = G + B @ SB_T
+        G = inv(np.eye(n_factors) + W.T @ wp)   # posterior cov
+        B = G @ wp.T                            # k x p: Ez = B (x-mu)
+        SB_T = S @ B.T                          # p x k
+        Ezz = G + B @ SB_T                      # E[zz'] averaged
         W = SB_T @ inv(Ezz)
         psi = np.maximum(np.diag(S) - np.einsum("pk,pk->p", W, SB_T), 1e-8)
     return mu, W, psi
@@ -164,27 +153,27 @@ def fit_on_sample(
     cols: Sequence[str] | None = None,
     n_factors: int | None = None,
     fit_sample_rows: int = 100_000,
-    min_std: float = 0.01,
-    seed: int = 42,
-    hash_key=None,
-    exact_iters: int | None = None,
+    *,
+    hash_key: Column,
+    em_iters: int = _EM_ITERS,
 ) -> FAModel:
     """Reference prep (factor_analysis.py:176-196): numeric projection ->
     median imputation -> variance filter -> n_factors = min(5, p-1) ->
-    fit. The fit matrix is a bounded, SEEDED RANDOM sample (``df.sample``):
-    a ``limit`` would take the first rows of the first partitions — biased
-    whenever the data is ordered (by date, by source) and partition-order
-    dependent across cluster runs. At 100 TB the sample is still at most
-    ``fit_sample_rows`` rows.
+    fit.
 
-    ``hash_key`` (a Column): switch the subsample to the smallest
-    ``fit_sample_rows`` rows by ``stable_hash64`` of that key — equally
-    unbiased (the hash is pseudorandom and independent of data order),
-    but fully DETERMINISTIC across engines and cluster layouts, so a SQL
-    oracle can replay the exact fit set (``ORDER BY hash LIMIT n`` — a
-    TakeOrdered, no full sort materialization). ``exact_iters`` switches
-    the EM to :func:`fit_factor_analysis_em_exact` (deterministic init,
-    fixed iterations) — together these make the whole fit replayable."""
+    The fit set is the ``fit_sample_rows`` rows with the smallest
+    ``stable_hash64(hash_key)`` (``ORDER BY hash LIMIT n`` — a TakeOrdered,
+    no full sort). The hash is pseudorandom and independent of data order,
+    so the set is unbiased where a ``limit`` would see only the first
+    partitions; unlike a Bernoulli ``df.sample``, whose draw is seeded per
+    partition, it is the same rows however ``df`` is partitioned, and it
+    arrives in hash order, so S is summed in one order too. That is why
+    the key is required. The key is hashed from the raw row (an imputed
+    key could collide with another row's); NULL hashes sort first, so a
+    NULL key always lands in the fit set and raises ``ValueError``.
+
+    ``em_iters``: fixed EM iterations. The registry's oracled queries pass
+    100, which their SQL replay unrolls."""
     if cols is None:
         from pyspark.sql.types import NumericType
 
@@ -198,7 +187,7 @@ def fit_on_sample(
     # resolve — bit-identical to Spark's stddev_samp when the column has
     # no NULLs (the common case, and the only case the strict oracles
     # exercise), and exact up to benign last-ulp drift otherwise. The
-    # value feeds only the binary ``> min_std`` keep/drop decision, never
+    # value feeds only the binary ``> _MIN_STD`` keep/drop decision, never
     # the output.
     from urban_traffic_data_lake_project_spark.operators.stats import column_profile
 
@@ -226,25 +215,23 @@ def fit_on_sample(
             + n_r * (m_r - mean_f) ** 2
             + n_null * (mv - mean_f) ** 2
         )
-        import math as _math
-
-        return _math.sqrt(ssd_f / (total - 1))
+        return math.sqrt(ssd_f / (total - 1))
 
     stds = {c: _filled_std(c) for c in cols}
     # Threshold hardening (ADVICE r12, low): the reconstructed stddev of a
     # median-imputed column is exact only up to last-ulp drift when NULLs
-    # were present; a value within drift distance of min_std could flip
+    # were present; a value within drift distance of _MIN_STD could flip
     # the binary keep/drop vs the reference single-pass stddev. For those
     # (and only those) borderline columns, recompute the filled-column
     # stddev EXACTLY with one bounded aggregate — never triggered when no
-    # column sits within 1e-9 (relative) of the threshold, which is every
+    # column sits within 1e-9 of the threshold, which is every
     # oracled corpus today.
     borderline = [
         (i, c)
         for i, c in enumerate(cols)
         if stds[c] is not None
         and prof.columns[c].n < total
-        and abs(stds[c] - min_std) <= 1e-9 * max(abs(min_std), 1.0)
+        and abs(stds[c] - _MIN_STD) <= 1e-9
     ]
     if borderline:
         row = df.na.fill({c: med[c] for _, c in borderline if c in med}).agg(
@@ -253,33 +240,24 @@ def fit_on_sample(
         for i, c in borderline:
             if row[f"__bs_{i}"] is not None:
                 stds[c] = row[f"__bs_{i}"]
-    cols = [c for c in cols if stds[c] is not None and stds[c] > min_std]
+    cols = [c for c in cols if stds[c] is not None and stds[c] > _MIN_STD]
     if len(cols) < 2:
         raise ValueError("need at least 2 usable numeric columns")
     if n_factors is None:
         n_factors = min(5, len(cols) - 1)
-    if hash_key is not None:
-        from urban_traffic_data_lake_project_spark.functions.core import stable_hash64
+    from urban_traffic_data_lake_project_spark.functions.core import stable_hash64
 
-        proj = (
-            df.na.fill(med)
-            .select(stable_hash64(hash_key).alias("__h"), *cols)
-            .orderBy("__h")
-            .limit(fit_sample_rows)
-            .select(*cols)
-        )
-    else:
-        proj = df.select(*cols).na.fill(med)
-        if total > fit_sample_rows:
-            # 10% oversample so the Bernoulli draw rarely undershoots, then trim
-            frac = min(1.0, 1.1 * fit_sample_rows / total)
-            proj = proj.sample(fraction=frac, seed=seed).limit(fit_sample_rows)
-    sample = proj.toPandas()
-    X = sample[list(cols)].to_numpy(dtype="float64")
-    if exact_iters is not None:
-        mu, W, psi = fit_factor_analysis_em_exact(X, n_factors, n_iter=exact_iters)
-    else:
-        mu, W, psi = fit_factor_analysis_em(X, n_factors, seed=seed)
+    fit = (
+        df.select(stable_hash64(hash_key).alias("__h"), *cols)
+        .orderBy("__h")
+        .limit(fit_sample_rows)
+        .na.fill({c: med[c] for c in cols})
+        .toPandas()
+    )
+    if fit["__h"].isna().any():
+        raise ValueError(f"factor-analysis row key {hash_key} is NULL on some rows")
+    X = fit[list(cols)].to_numpy(dtype="float64")
+    mu, W, psi = fit_factor_analysis_em(X, n_factors, em_iters)
     return FAModel(tuple(cols), mu, W, psi, tuple(float(med[c]) for c in cols))
 
 
@@ -296,11 +274,8 @@ def attach_factor_scores(df: DataFrame, model: FAModel, prefix: str = "Factor") 
         df.schema.fields + [StructField(s, DoubleType()) for s in score_names]
     )
 
-    # impute EXACTLY like the fit: column medians when the model carries
-    # them (fit_on_sample always does); fall back to the fit means only for
-    # hand-built models
-    fill_vals = model.medians if model.medians is not None else tuple(float(m) for m in mu)
-    fills = {c: v for c, v in zip(cols, fill_vals)}
+    # impute EXACTLY like the fit: with the fit's column medians
+    fills = dict(zip(cols, model.medians))
 
     def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

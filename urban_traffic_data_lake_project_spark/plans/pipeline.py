@@ -143,10 +143,11 @@ def run_merge(spark: SparkSession, paths: LayerPaths) -> None:
 
 
 def gold_row_key() -> Column:
-    """The bootstrap row key over ``merged_data``: one merged row per
-    (traffic row, matched weather row). Silver keeps at most one NULL id
-    per table and the left join leaves ``weather_id`` NULL on unmatched
-    traffic rows, so NULL ids map to "" and the key is non-NULL and unique."""
+    """The row key gold's bootstrap weights and factor-analysis fit set are
+    drawn by over ``merged_data``: one merged row per (traffic row, matched
+    weather row). Silver keeps at most one NULL id per table and the left
+    join leaves ``weather_id`` NULL on unmatched traffic rows, so NULL ids
+    map to "" and the key is non-NULL and unique."""
     return F.concat_ws(
         "|",
         F.coalesce(F.col("traffic_id").cast("string"), F.lit("")),
@@ -166,7 +167,7 @@ def run_gold(spark: SparkSession, paths: LayerPaths, seed: int = 42) -> None:
         "overwrite"
     ).parquet(os.path.join(paths.gold, "monte_carlo_results"))
 
-    model = FA.fit_on_sample(merged)
+    model = FA.fit_on_sample(merged, hash_key=gold_row_key())
     FA.attach_factor_scores(merged, model).write.mode("overwrite").parquet(
         os.path.join(paths.gold, "traffic_weather_factors")
     )

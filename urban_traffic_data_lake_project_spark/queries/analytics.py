@@ -197,14 +197,14 @@ FROM rmeans GROUP BY lang
 # ---------------------------------------------------------------------------
 # fa_loadings / fa_scores_summary — factor analysis, STRICT-ORACLED since
 # r11 (verdict item 2, the last §2 operator without a hash-matched row).
-# The fit is made fully replayable: (a) the fit subset is the smallest
+# FA.fit_on_sample's fit is replayable: (a) the fit subset is the smallest
 # 50k rows by stable_hash64(l_orderkey|l_linenumber) — deterministic and
-# SQL-expressible (ORDER BY hash LIMIT n), unlike df.sample's partition-
-# seeded RNG; (b) the EM uses rational_init + a FIXED 100 iterations (no
-# ll convergence break whose last-ulp decision could desynchronize the
-# engines) — fit_factor_analysis_em_exact. The oracle replays all 100 EM
-# iterations as a recursive CTE over list-packed (p=4)x(k=3) matrices with
-# closed-form adjugate 3x3 inverses — the join_linkage_em_fit /
+# SQL-expressible (ORDER BY hash LIMIT n); (b) fit_factor_analysis_em starts
+# from rational_init and runs a FIXED number of iterations (no ll
+# convergence break whose last-ulp decision could desynchronize the
+# engines), here 100 rather than the default 3,000. The oracle replays all
+# 100 EM iterations as a recursive CTE over list-packed (p=4)x(k=3)
+# matrices with closed-form adjugate 3x3 inverses — the join_linkage_em_fit /
 # sim_embedding_pca recipe. Covariances on BOTH sides are two-pass
 # centered (avg((x-m)(y-m'))), never E[xy]-mm': the one-pass form loses
 # ~9 digits to cancellation on l_extendedprice and would flip 4dp
@@ -231,7 +231,7 @@ def _fa_fit_model(spark: SparkSession, sf_dir: str):
         cols=_FA_COLS,
         fit_sample_rows=_FA_CAP,
         hash_key=_fa_hash_key(),
-        exact_iters=_FA_ITERS,
+        em_iters=_FA_ITERS,
     )
 
 
@@ -257,7 +257,7 @@ def _fa_scores_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _fa_inv3(m: str, det: str) -> list[str]:
     """9 SQL exprs: adjugate/det inverse of the 3x3 row-major list col
     ``m`` given a det column ``det`` (same closed form as the numpy-side
-    _inv3 in fit_factor_analysis_em_exact)."""
+    _inv3 in fit_factor_analysis_em)."""
     cof = [
         f"({m}[5]*{m}[9]-{m}[6]*{m}[8])", f"({m}[3]*{m}[8]-{m}[2]*{m}[9])",
         f"({m}[2]*{m}[6]-{m}[3]*{m}[5])", f"({m}[6]*{m}[7]-{m}[4]*{m}[9])",
@@ -298,9 +298,9 @@ def _fa_em_cte() -> str:
     )
     fmeans = ", ".join(f"avg(x{j}) AS m{j}" for j in range(P))
     # deterministic rational init: the (j,i) rational is a compile-time
-    # Python float literal, identical to rational_init's value
+    # Python float literal, rational_init's own value
     w0 = ", ".join(
-        f"sqrt(s[{j * P + j + 1}] / {float(K)!r}) * ({((((j + 1) * 31 + (i + 1) * 17) % 19) - 9) / 9.0!r})"
+        f"sqrt(s[{j * P + j + 1}] / {float(K)!r}) * ({FA.init_ratio(j, i)!r})"
         for j in range(P) for i in range(K)
     )
     psi0 = ", ".join(f"s[{j * P + j + 1}]" for j in range(P))
