@@ -404,6 +404,25 @@ def test_fa_fit_unbiased_on_adversarially_sorted_data(spark):
     assert len(model.medians) == 3
 
 
+def test_fa_hash_sampled_fit_unbiased_on_sorted_data(spark):
+    """The stable_hash64 fit subset stays unbiased under adversarial
+    ordering at the 100 EM iterations the oracled registry queries use
+    (hash rank is independent of data order)."""
+    rng = np.random.default_rng(13)
+    import pandas as pd
+
+    a = rng.standard_normal((4000, 3)) + [0.0, 0.0, 0.0]
+    b = rng.standard_normal((4000, 3)) + [50.0, 50.0, 50.0]
+    pdf = pd.DataFrame(np.vstack([a, b]), columns=["x", "y", "z"]).sort_values("x")
+    pdf["rid"] = np.arange(len(pdf))
+    df = spark.createDataFrame(pdf).coalesce(8)
+    model = FA.fit_on_sample(
+        df, cols=["x", "y", "z"], n_factors=1, fit_sample_rows=1000,
+        hash_key=F.col("rid").cast("string"), em_iters=100,
+    )
+    assert all(10.0 < m < 40.0 for m in model.mean), model.mean
+
+
 def test_fa_is_partition_invariant(spark):
     """The fit set is the hash-smallest rows, collected in hash order, so
     the same rows cut into 1, 3 or 8 input partitions give a bit-equal
